@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kdcloganalyzer_spark.plans import registry
-from kdcloganalyzer_spark.session import get_spark
+from kdcloganalyzer_spark.session import DEFAULT_CPUS, get_spark
 
 
 def _loadavg() -> list[float]:
@@ -338,7 +338,7 @@ def _local_table_path(
         except (OSError, ValueError):
             return local_path
         if prev_key < cur_key:
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+            cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
             return os.path.join(here, f"BENCH_LOCAL_INFLATED_c{cpus}.json")
     return local_path
 

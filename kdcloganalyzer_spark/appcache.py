@@ -110,6 +110,30 @@ def evict_stale(cache: dict, spark) -> None:
         cache.pop(k, None)
 
 
+#: name → (py4j gateway, value) for ``per_jvm``
+_PER_JVM: dict[str, tuple[object, object]] = {}
+
+
+def per_jvm(name: str, build: Callable[[], object]):
+    """``build()`` once per live JVM, for Column trees reused across plan
+    builds (building one costs a py4j round trip per node).
+
+    Keyed to the py4j gateway, the way the data caches key on
+    applicationId: a new gateway (a new JVM) rebuilds, and trees from a
+    dead one are dropped. Sessions stopped and restarted on the same JVM
+    share the trees — an unresolved Column holds no session state. No
+    evictor: it caches expressions, not data, so a cold re-run of any
+    query still recomputes everything. No lock: threads racing on a
+    first build each build a valid tree, and the last one is kept."""
+    from pyspark import SparkContext
+
+    gw = SparkContext._gateway
+    hit = _PER_JVM.get(name)
+    if hit is None or hit[0] is not gw:
+        hit = _PER_JVM[name] = (gw, build())
+    return hit[1]
+
+
 def persistent_stage(tag: str, srcs: list[str], build) -> str:
     """Cross-process idempotent staged-INPUT dir under /tmp.
 

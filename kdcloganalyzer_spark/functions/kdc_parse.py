@@ -11,13 +11,20 @@ error chain:272-297 → referral:298 → headerless verify:300-309):
 - the headerless "Failed to verify ..." regexes are only consulted when
   nothing else matched (the trailing `else` at reader:300).
 
-Performance layout (measured ~3× on the parse hot path): the per-line pass
-computes only booleans — every regex is prefiltered by a cheap
-`contains()` guard so the common line never runs a regex to completion —
-while the expensive 7-group header extraction and enctype split run AFTER
-record aggregation, once per record on the single surviving line
-(``header_fields`` / ``enctype_fields``). Everything compiles into
-whole-stage-codegen projections — no Python, no shuffle.
+Performance layout: the per-line pass is ONE classification, ``line_kind``
+— a single CASE that walks the chain above once and names the first class
+that matches. Every regex sits behind a cheap ``contains()`` guard, so the
+common line never runs a regex to completion, and each pattern appears
+once in the tree. The feature columns (``kind_features``) are then plain
+comparisons on that one value; the sessionizer projects ``_kind`` once and
+derives them in a second projection, so the optimized plan carries the
+CASE once (~9k characters, 3 RLIKE / 28 Contains nodes) instead of nine
+trees that each re-embed the negations of every earlier class (~58k
+characters, 150 RLIKE / 586 Contains). The expensive 7-group header
+extraction and enctype split run AFTER record aggregation, once per record
+on the single surviving line (``header_fields`` / ``enctype_fields``).
+Everything compiles into whole-stage-codegen projections — no Python, no
+shuffle.
 """
 
 from __future__ import annotations
@@ -108,6 +115,15 @@ ERROR_CHAIN: list[tuple[str, list[str]]] = [
 ]
 
 
+#: ``line_kind`` values, one per branch of the reader's per-line chain.
+#: Header lines carry the extracted request type itself (group 2).
+KIND_AS, KIND_TGS = "AS-REQ", "TGS-REQ"
+KIND_SENDING, KIND_PREAUTH = "SENDING", "PREAUTH"
+KIND_REFERRAL, KIND_VERIFY = "REFERRAL", "VERIFY"
+KIND_OTHER = ""
+CHAIN_CLASSES = [cls for cls, _ in ERROR_CHAIN]
+
+
 def _contains_any(line: Column, substrings: list[str]) -> Column:
     cond = F.lit(False)
     for s in substrings:
@@ -121,79 +137,87 @@ def _contains_any(line: Column, substrings: list[str]) -> Column:
     return cond
 
 
-def error_class_expr(line: Column) -> Column:
-    """Chain-ordered error classification of a single line (NULL if none)."""
-    result = F.lit(None).cast("string")
-    for cls, subs in reversed(ERROR_CHAIN):
-        result = F.when(_contains_any(line, subs), F.lit(cls)).otherwise(result)
-    return result
+def line_kind(line: Column) -> Column:
+    """The reader's per-line if/else-if chain as ONE classification.
 
-
-def line_features(line: Column) -> dict[str, Column]:
-    """Per-line boolean/classification columns (the cheap pass).
-
-    Heavy field extraction happens per-record in ``header_fields`` /
-    ``verify_fields`` / ``enctype_fields``.
+    Header (AS vs TGS, the extracted request type) → sending → preauth →
+    the six ``ERROR_CHAIN`` classes → referral → headerless verify;
+    ``KIND_OTHER`` when nothing matches. Every regex sits behind a cheap
+    ``contains()`` guard, and each appears once in the tree.
     """
-    is_header = (
+    # The header regex runs once per guarded line. A map lookup, not
+    # nullif, turns its '' (no match) into NULL so the line falls through
+    # to the rest of the chain: nullif plans a separate common-expression
+    # projection per use, which would stop codegen from sharing one
+    # line_kind between the self-contained line_features columns.
+    header = F.when(
         (line.contains("AS-REQ") | line.contains("TGS-REQ"))
-        & line.contains(" from ")
-        & line.rlike(HEADER_RE)
+        & line.contains(" from "),
+        F.element_at(
+            F.create_map(
+                F.lit(KIND_AS), F.lit(KIND_AS), F.lit(KIND_TGS), F.lit(KIND_TGS)
+            ),
+            F.regexp_extract(line, HEADER_RE, 2),
+        ),
     )
-    is_sending = ~is_header & line.contains(" sending ") & line.rlike(SENDING_RE)
-    is_preauth = ~is_header & ~is_sending & line.contains(PREAUTH_SUBSTR)
-    chain_class = F.when(
-        ~is_header & ~is_sending & ~is_preauth, error_class_expr(line)
-    )
-    is_chain_error = chain_class.isNotNull()
-    is_referral = (
-        ~is_header
-        & ~is_sending
-        & ~is_preauth
-        & ~is_chain_error
-        & line.contains(REFERRAL_SUBSTR)
-    )
-    is_verify = (
-        ~is_header
-        & ~is_sending
-        & ~is_preauth
-        & ~is_chain_error
-        & ~is_referral
-        & line.contains("Failed to verify ")
-        & line.rlike(VERIFY_RE)
-    )
-    is_error = is_chain_error | is_verify
-
-    # success: preauth → true (reader:271); TGS header → true (reader:252,
-    # switching on the EXTRACTED request-type group — a whole-line
-    # contains("TGS-REQ") would also fire on an AS-REQ whose principal
-    # embeds the substring, e.g. service "TGS-REQ-proxy"; ATOM allows
-    # '-'); any error line → false (setErrorIfUnset always clears
-    # success, KDCLogRecord.java:187). Last effect wins at the record
-    # level. The regexp_extract only evaluates on header lines (the
-    # when-branch short-circuits), so the cheap-pass contract holds.
-    success_effect = (
-        F.when(is_preauth, F.lit(True))
+    rest = F.when(
+        line.contains(" sending ") & line.rlike(SENDING_RE), F.lit(KIND_SENDING)
+    ).when(line.contains(PREAUTH_SUBSTR), F.lit(KIND_PREAUTH))
+    for cls, subs in ERROR_CHAIN:
+        rest = rest.when(_contains_any(line, subs), F.lit(cls))
+    rest = (
+        rest.when(line.contains(REFERRAL_SUBSTR), F.lit(KIND_REFERRAL))
         .when(
-            is_header & (F.regexp_extract(line, HEADER_RE, 2) == "TGS-REQ"),
-            F.lit(True),
+            line.contains("Failed to verify ") & line.rlike(VERIFY_RE),
+            F.lit(KIND_VERIFY),
         )
-        .when(is_error, F.lit(False))
+        .otherwise(F.lit(KIND_OTHER))
     )
+    return F.coalesce(header, rest)
 
+
+def kind_features(kind: Column, line: Column) -> dict[str, Column]:
+    """The per-line feature columns, derived from a ``line_kind`` value.
+
+    ``kind`` should be a projected column: every feature reads it, so an
+    inline ``line_kind`` tree would be re-embedded once per feature.
+    """
+    is_header = kind.isin(KIND_AS, KIND_TGS)
+    is_verify = kind == KIND_VERIFY
+    is_error = kind.isin(*CHAIN_CLASSES, KIND_VERIFY)
     return {
         "is_header": is_header,
-        "is_sending": is_sending,
+        "is_sending": kind == KIND_SENDING,
         "is_error": is_error,
         "is_verify": is_verify,
-        "is_referral": is_referral,
+        "is_referral": kind == KIND_REFERRAL,
         "is_enctypes": line.contains(ENCTYPES_GUARD),
-        "chain_class": chain_class,
-        "success_effect": success_effect,
+        "chain_class": F.when(kind.isin(*CHAIN_CLASSES), kind),
+        # success: preauth → true (reader:271); TGS header → true
+        # (reader:252, on the EXTRACTED request type — a whole-line
+        # contains("TGS-REQ") would also fire on an AS-REQ whose
+        # principal embeds the substring; ATOM allows '-'); any error
+        # line → false (setErrorIfUnset always clears success,
+        # KDCLogRecord.java:187). Last effect wins at the record level.
+        "success_effect": F.when(
+            kind.isin(KIND_PREAUTH, KIND_TGS), F.lit(True)
+        ).when(is_error, F.lit(False)),
         # ts is (re)set by header lines and headerless verify lines
         # (reader:245,304,307) — both start with the timestamp.
         "sets_ts": is_header | is_verify,
     }
+
+
+def line_features(line: Column) -> dict[str, Column]:
+    """Per-line boolean/classification columns (the cheap pass), each a
+    self-contained expression over ``line``.
+
+    For a projection of all of them, prefer projecting ``line_kind`` once
+    and ``kind_features`` over it (``operators.sessionize.featurize``).
+    Heavy field extraction happens per-record in ``header_fields`` /
+    ``enctype_fields``.
+    """
+    return kind_features(line_kind(line), line)
 
 
 def header_fields(header_line: Column) -> dict[str, Column]:

@@ -4,11 +4,14 @@ The reference assembles lines into one KDCLogRecord until a terminator line
 "TS sending N bytes to IP" (KDCLogRecordReader.java:208-324). Here that is
 a declarative pipeline:
 
-1. per-line boolean features (one codegen'd projection — every regex is
-   contains()-prefiltered, functions/kdc_parse.py);
-2. record id = count of terminator lines strictly BEFORE the line, per
-   file (running sum, exclusive window) — so a record = [line after the
-   previous terminator .. its own terminator];
+1. per-line features (``featurize``): ONE classification CASE per line
+   (``line_kind``, the reader's if/else-if chain, every regex behind a
+   contains() guard) projected once as ``_kind``, then the feature
+   booleans derived from it in a second projection — both in the same
+   codegen'd stage, no Python, no shuffle;
+2. record id = count of terminator lines (``is_sending``) strictly
+   BEFORE the line, per file (running sum, exclusive window) — so a
+   record = [line after the previous terminator .. its own terminator];
 3. one groupBy(file, rec_id) with marker aggregates encoding the state
    machine's merge rules, keeping whole LINES for the few positions that
    matter:
@@ -28,6 +31,11 @@ a declarative pipeline:
 Cost at scale: one shuffle for the two same-key windows (partitionBy file;
 single Exchange+Sort) plus one partial-agg'd groupBy. Parallelism tracks
 the file count, which fits the KDC workload (many per-server daily logs).
+
+The Column trees of steps 1 and 3-4 are built once per live JVM
+(``appcache.per_jvm``) and shared by ``sessionize``,
+``sessionize_split_parallel`` and the streaming tail assembler: a plan
+build then costs a few hundred py4j round trips instead of thousands.
 """
 
 from __future__ import annotations
@@ -35,12 +43,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kdcloganalyzer_spark.appcache import per_jvm
 from kdcloganalyzer_spark.functions.kdc_parse import (
     TIMESTAMP,
     enctype_fields,
     header_fields,
-    line_features,
+    kind_features,
+    line_kind,
 )
+
+
+def _feature_trees():
+    line = F.col("line")
+    feats = kind_features(F.col("_kind"), line)
+    return line_kind(line).alias("_kind"), {k: v.alias(k) for k, v in feats.items()}
+
+
+def featurize(lines: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` (which must include ``line``) plus the per-line feature
+    columns of ``kdc_parse.line_features``.
+
+    ``line_kind`` is projected once, as ``_kind``, and the features read
+    it from a second projection. CollapseProject will not merge the two,
+    because every feature references ``_kind``: the CASE stays a single
+    expression in the optimized plan and runs once per line.
+    """
+    kind, feats = per_jvm("kdc_line_features", _feature_trees)
+    return lines.select(*keep, kind).select(*keep, *feats.values())
+
+
+def feature_names() -> list[str]:
+    """Names of the columns ``featurize`` adds, in order."""
+    return list(per_jvm("kdc_line_features", _feature_trees)[1])
 
 
 def sessionize(lines: DataFrame) -> DataFrame:
@@ -57,10 +91,7 @@ def sessionize(lines: DataFrame) -> DataFrame:
     order_cols = (
         ["_block_start", "_mid"] if "_block_start" in lines.columns else ["line_no"]
     )
-    feats = line_features(F.col("line"))
-    df = lines.select(
-        "file", *order_cols, "line", *[v.alias(k) for k, v in feats.items()]
-    )
+    df = featurize(lines, "file", *order_cols, "line")
 
     w_order = Window.partitionBy("file").orderBy(*order_cols)
     # Record id: terminators strictly before this line, within the file.
@@ -99,16 +130,9 @@ def sessionize_split_parallel(lines_raw: DataFrame) -> DataFrame:
     struct, which is the total in-file order. Shuffle count matches
     ``sessionize`` (one Sort for the split windows + the groupBy exchange)
     plus one broadcast of the split-offset table."""
-    feats = line_features(F.col("line"))
-    base = lines_raw.select(
-        "file",
-        "_block_start",
-        "_mid",
-        "line",
-        *[v.alias(k) for k, v in feats.items()],
-    )
+    base = featurize(lines_raw, "file", "_block_start", "_mid", "line")
     # Per-split terminator totals: a narrow scan branch (file, offset,
-    # one boolean) — column pruning keeps the other feature regexes out.
+    # one boolean).
     w_file = (
         Window.partitionBy("file")
         .orderBy("_block_start")
@@ -141,7 +165,7 @@ def sessionize_split_parallel(lines_raw: DataFrame) -> DataFrame:
             (F.col("_offset") + F.col("_local_rec")).alias("rec_id"),
             F.struct("_block_start", "_local_rn").alias("_ord"),
             "line",
-            *feats.keys(),
+            *feature_names(),
         )
     )
     return _assemble(df, "_ord")
@@ -149,8 +173,16 @@ def sessionize_split_parallel(lines_raw: DataFrame) -> DataFrame:
 
 def _assemble(df: DataFrame, ord_col: str) -> DataFrame:
     """groupBy(file, rec_id) with the reader's merge rules; ``df`` carries
-    file, rec_id, line, the line_features columns, and an orderable
+    file, rec_id, line, the ``featurize`` columns, and an orderable
     ``ord_col`` giving total in-file line order."""
+    aggs, complete, out = per_jvm(
+        f"kdc_assemble:{ord_col}", lambda: _assemble_trees(ord_col)
+    )
+    return df.groupBy("file", "rec_id").agg(*aggs).filter(complete).select(*out)
+
+
+def _assemble_trees(ord_col: str):
+    """(aggregates, completeness filter, output projection) of ``_assemble``."""
 
     def first_where(cond, col):
         return F.min_by(F.when(cond, col), F.when(cond, F.col(ord_col)))
@@ -158,7 +190,7 @@ def _assemble(df: DataFrame, ord_col: str) -> DataFrame:
     def last_where(cond, col):
         return F.max_by(F.when(cond, col), F.when(cond, F.col(ord_col)))
 
-    rec = df.groupBy("file", "rec_id").agg(
+    aggs = [
         F.max("is_sending").alias("complete"),
         F.max("is_header").alias("valid"),
         last_where(F.col("is_header"), F.col("line")).alias("header_line"),
@@ -171,7 +203,7 @@ def _assemble(df: DataFrame, ord_col: str) -> DataFrame:
         first_where(F.col("is_error"), F.col("is_verify")).alias("error_is_verify"),
         F.max("is_referral").alias("referral"),
         last_where(F.col("is_enctypes"), F.col("line")).alias("enc_line"),
-    )
+    ]
 
     hdr = header_fields(F.col("header_line"))
     enctypes, chosen = enctype_fields(F.col("enc_line"))
@@ -188,7 +220,7 @@ def _assemble(df: DataFrame, ord_col: str) -> DataFrame:
         F.col("error_is_verify"), F.lit("BAD_AUTHENTICATION")
     ).otherwise(F.col("chain_class"))
 
-    return rec.filter(F.col("complete")).select(
+    out = [
         F.to_timestamp(ts_raw).alias("ts"),
         ts_raw.alias("ts_raw"),
         F.when(hdr["hdr_reqtype"] == "AS-REQ", F.lit("AUTH"))
@@ -207,4 +239,5 @@ def _assemble(df: DataFrame, ord_col: str) -> DataFrame:
         error.alias("error"),
         enctypes.alias("enctypes"),
         chosen.alias("chosen_enctype"),
-    )
+    ]
+    return aggs, F.col("complete"), out

@@ -18,7 +18,6 @@ from __future__ import annotations
 from kdcloganalyzer_spark import appcache
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -27,6 +26,7 @@ from kdcloganalyzer_spark.operators.sessionize import sessionize
 from kdcloganalyzer_spark.plans.registry import query
 from kdcloganalyzer_spark.sources.kdc_log import read_log_lines, read_log_lines_raw
 from kdcloganalyzer_spark.sources.kdc_synth import (
+    n_records_for_sf,
     synth_dir_for_sf,
     synth_path_for_sf,
 )
@@ -105,11 +105,10 @@ def kdc_records_parquet(spark: SparkSession, sf_dir: str) -> str:
         # consumer (≈80 kdc ids) paid 18 scan tasks per pass — measured
         # 0.42 → 0.24 s per records aggregate after compaction. Width
         # scales with the corpus (~2M records ≈ 100 MB per file, n from
-        # the synth dir name); repartition (not coalesce) keeps the
+        # kdc_synth's sizing rule); repartition (not coalesce) keeps the
         # one-time parse itself parallel. Row content unchanged — no
         # RECORDS_VERSION bump.
-        m = re.search(r"_(\d+)$", os.path.basename(synth_path_for_sf(sf_dir)))
-        n_rec = int(m.group(1)) if m else 1_000_000
+        n_rec = n_records_for_sf(sf_dir)
         kdc_records(spark, sf_dir).withColumn(
             "ts", F.col("ts").cast("timestamp_ntz")
         ).repartition(max(1, n_rec // 2_000_000)).write.mode(

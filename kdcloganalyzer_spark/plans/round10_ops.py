@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans.registry import query
+from kdcloganalyzer_spark.plans.round9_ops import source_index
 
 # Shared oracle texts (identical rows => identical SQL twin).
 QUOTA_ORACLE = """
@@ -130,29 +131,9 @@ def pipeline_interleave_sources_ranged(
     )
     # r15: ONE bounded collect supplies both control values (source
     # count and dense index = position in sort order) — same rewrite
-    # as pipeline_interleave_sources; drops a count() action, two
-    # extra documents scans and the broadcast join.
-    sources = sorted(
-        row[0] for row in docs.select("source").distinct().collect()
-    )
-    # same bounded-domain guards as pipeline_interleave_sources
-    # (ADVICE r15): fail loud on NULL sources, and keep the literal map
-    # under the ~64-entry codegen-recompile bound.
-    assert all(s is not None for s in sources), (
-        "pipeline_interleave_sources_ranged: NULL source value"
-    )
-    assert len(sources) <= 64, (
-        f"pipeline_interleave_sources_ranged: {len(sources)} sources "
-        "exceeds the literal-map codegen bound"
-    )
-    n_src = len(sources)
-    idx_map = F.create_map(
-        *[
-            lit
-            for i, s in enumerate(sources)
-            for lit in (F.lit(s), F.lit(i))
-        ]
-    )
+    # and bounded-domain contract as pipeline_interleave_sources; drops
+    # a count() action, two extra documents scans and the broadcast join.
+    n_src, idx_map = source_index(docs, "pipeline_interleave_sources_ranged")
     epoch = (
         docs.withColumn("rk", F.row_number().over(w) - 1)
         .select(

@@ -7,6 +7,8 @@ units so hashes are summation-order-free (CLAUDE.md convention)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1507,7 +1509,9 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_replace(F.lower(F.col("text")), "[^a-z]+", " "),
         F.lit(" "),
     )
-    stop_alt = "|".join(_RAKE_STOP)
+    # escaped, so a stopword can never inject regex syntax (Java reads
+    # Python's escapes of non-alphanumerics as literals too)
+    stop_alt = "|".join(re.escape(w) for w in _RAKE_STOP)
     seg = F.regexp_replace(norm, f"(?<= )(?:{stop_alt})(?= )", "|")
     phrases = F.filter(
         F.transform(F.split(seg, "[|]"), lambda s: F.trim(s)),

@@ -9,7 +9,7 @@ paths in whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans.registry import query
@@ -220,6 +220,34 @@ def pipeline_quota_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def source_index(docs: DataFrame, qid: str) -> tuple[int, Column]:
+    """(source count, literal map source → dense index in sort order),
+    from one bounded collect of the distinct ``docs.source`` values.
+
+    Bounded-domain contract, failed loud (ADVICE r15): a NULL source
+    has no sort position and create_map rejects NULL keys, and the
+    literal map stays cheap only up to ~64 sources (the repo's measured
+    codegen-recompile bound for fresh literal expressions) — above
+    that, switch to a broadcast join against the collected (source,
+    idx) frame. Both raise ValueError naming ``qid``."""
+    sources = [row[0] for row in docs.select("source").distinct().collect()]
+    if any(s is None for s in sources):
+        raise ValueError(
+            f"{qid}: NULL source value — the dense source index requires "
+            "non-null sources"
+        )
+    if len(sources) > 64:
+        raise ValueError(
+            f"{qid}: {len(sources)} sources exceeds the literal-map codegen "
+            "bound; use a broadcast-join index"
+        )
+    sources.sort()
+    idx_map = F.create_map(
+        *[lit for i, s in enumerate(sources) for lit in (F.lit(s), F.lit(i))]
+    )
+    return len(sources), idx_map
+
+
 @query(
     "pipeline_interleave_sources",
     oracle="""
@@ -263,32 +291,7 @@ def pipeline_interleave_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count and each source's dense index = position in sort order) —
     # the old form paid a count() action plus a distinct+rank subtree
     # inside the main job, i.e. two extra documents scans and a join.
-    sources = sorted(
-        row[0] for row in docs.select("source").distinct().collect()
-    )
-    # Bounded-domain contract, failed loud (ADVICE r15): a NULL source
-    # would TypeError inside sorted() above with an opaque message, and
-    # create_map rejects NULL keys outright — assert the precondition
-    # where the fix is obvious. The literal map stays cheap up to ~64
-    # sources (the repo's measured codegen-recompile bound for fresh
-    # literal expressions, CLAUDE.md r12); above that, switch to a
-    # broadcast join against the collected (source, idx) frame.
-    assert all(s is not None for s in sources), (
-        "pipeline_interleave_sources: NULL source value — the dense "
-        "source index requires non-null sources"
-    )
-    assert len(sources) <= 64, (
-        f"pipeline_interleave_sources: {len(sources)} sources exceeds "
-        "the literal-map codegen bound; use a broadcast-join index"
-    )
-    n_src = len(sources)
-    idx_map = F.create_map(
-        *[
-            lit
-            for i, s in enumerate(sources)
-            for lit in (F.lit(s), F.lit(i))
-        ]
-    )
+    n_src, idx_map = source_index(docs, "pipeline_interleave_sources")
     return (
         docs.withColumn("rk", F.row_number().over(w) - 1)
         .select(

@@ -109,8 +109,8 @@ def tail_twin_records_parquet(spark: SparkSession, sf_dir: str) -> str:
     Non-circular for the streaming-tail oracle: this runs the
     window-function batch sessionizer over whole files; the streaming
     path re-assembles the same records from mid-record chunk splits via
-    applyInPandasWithState — only the final `_assemble` projection is
-    shared code."""
+    applyInPandasWithState — only the line featurization and the final
+    `_assemble` projection are shared code."""
     out = tail_records_path_for_sf(sf_dir)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         from kdcloganalyzer_spark.operators.sessionize import sessionize

@@ -13,7 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: local[N] task slots (and shuffle partitions) when SPARK_GRAFT_CPUS is unset
+DEFAULT_CPUS = "32"
+DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
 
 
 def get_spark(
@@ -23,7 +25,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's tuned defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

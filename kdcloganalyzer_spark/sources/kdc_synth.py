@@ -129,17 +129,25 @@ def generate_logs(
     return out_dir
 
 
-def synth_path_for_sf(sf_dir: str) -> str:
-    """Deterministic corpus dir for an sf — path only, NO generation
-    (safe at import time; oracle SQL strings embed this path)."""
+def n_records_for_sf(sf_dir: str) -> int:
+    """KDC corpus size for an sf dir: 1M records per sf unit, at least
+    200, with sf read from the first ``sf<number>`` in the path.
+
+    Raises ValueError when the path names no scale factor."""
     import re
 
     m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.001
-    n = max(200, int(1_000_000 * sf))
+    if m is None:
+        raise ValueError(f"no scale factor (sf<number>) in {sf_dir!r}")
+    return max(200, int(1_000_000 * float(m.group(1))))
+
+
+def synth_path_for_sf(sf_dir: str) -> str:
+    """Deterministic corpus dir for an sf — path only, NO generation
+    (safe at import time; oracle SQL strings embed this path)."""
     # v2: TGS-success records carry the enctype-negotiation line (bump the
     # dir name to invalidate pre-change cached corpora in /tmp).
-    return f"/tmp/kdc_synth_v2_{n}"
+    return f"/tmp/kdc_synth_v2_{n_records_for_sf(sf_dir)}"
 
 
 def synth_dir_for_sf(sf_dir: str) -> str:
@@ -147,6 +155,4 @@ def synth_dir_for_sf(sf_dir: str) -> str:
 
     sf0.001 → 1k records, sf0.01 → 10k, sf0.1 → 100k (~700k lines).
     """
-    out = synth_path_for_sf(sf_dir)
-    n = int(out.rsplit("_", 1)[1])
-    return generate_logs(out, n)
+    return generate_logs(synth_path_for_sf(sf_dir), n_records_for_sf(sf_dir))

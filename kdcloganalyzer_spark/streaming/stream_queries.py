@@ -577,8 +577,7 @@ def stream_sessionize_tail_kdc(
     bounded bench keeps NoTimeout for determinism)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kdcloganalyzer_spark.functions.kdc_parse import line_features
-    from kdcloganalyzer_spark.operators.sessionize import _assemble
+    from kdcloganalyzer_spark.operators.sessionize import _assemble, featurize
 
     d, _fnames = _staged_tail_chunks(log_dir, n_chunks, n_files)
     sdf = (
@@ -586,12 +585,8 @@ def stream_sessionize_tail_kdc(
         .option("maxFilesPerTrigger", n_files)
         .json(d)
     )
-    feats = line_features(F.col("line"))
-    annotated = sdf.select(
-        "file",
-        "seq",
-        "line",
-        feats["is_sending"].alias("is_sending"),
+    annotated = featurize(sdf, "file", "seq", "line").select(
+        "file", "seq", "line", "is_sending"
     )
 
     def assemble_tail(key, pdfs, state):
@@ -661,16 +656,8 @@ def stream_sessionize_tail_kdc(
         GroupStateTimeout.NoTimeout,
     )
     lines_df = _run_to_memory(stateful, "append")
-    feats2 = line_features(F.col("line"))
     return _assemble(
-        lines_df.select(
-            "file",
-            "rec_id",
-            "line_no",
-            "line",
-            *[v.alias(n) for n, v in feats2.items()],
-        ),
-        "line_no",
+        featurize(lines_df, "file", "rec_id", "line_no", "line"), "line_no"
     )
 
 

@@ -11,8 +11,10 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
-from kdcloganalyzer_spark.operators.sessionize import sessionize
+from kdcloganalyzer_spark.functions.kdc_parse import line_features, line_kind
+from kdcloganalyzer_spark.operators.sessionize import featurize, sessionize
 from kdcloganalyzer_spark.sources.kdc_log import read_log_lines
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "fixtures", "kdc", "golden.log")
@@ -181,3 +183,158 @@ def test_multi_file_isolation(spark, tmp_path):
     assert clients == ["xa", "xb"]
     # b.log's leading sending line terminates an empty, invalid record.
     assert sum(1 for r in rows if not r["valid"]) == 1
+
+
+# --- golden classifier table -------------------------------------------------
+# One row per line: the expected line_kind, then the nine line_features
+# columns in FEATURES order. The feature values were captured from the
+# earlier per-feature classifier (nine independent boolean trees), so this
+# table pins that the single-CASE classifier reproduces it, precedence
+# edges included.
+Y, N, NULL = True, False, None
+T = "2015-11-22T16:00:00"
+FEATURES = (
+    "is_header", "is_sending", "is_error", "is_verify", "is_referral",
+    "is_enctypes", "chain_class", "success_effect", "sets_ts",
+)
+CLASSIFIER_TABLE = [
+    (f'{T} AS-REQ alice@EXAMPLE.ORG from IPv4:10.0.0.1 for krbtgt/EXAMPLE.ORG@EXAMPLE.ORG',
+     'AS-REQ', Y, N, N, N, N, N, NULL, NULL, Y),
+    (f'{T} TGS-REQ alice@EXAMPLE.ORG from IPv4:10.0.0.1 for host/a.example.org@EXAMPLE.ORG',
+     'TGS-REQ', Y, N, N, N, N, N, NULL, Y, Y),
+    (f'{T} TGS-REQ bob@EXAMPLE.ORG from IPv6:fe80::1 for host/b.example.org@EXAMPLE.ORG',
+     'TGS-REQ', Y, N, N, N, N, N, NULL, Y, Y),
+    (f'{T} AS-REQ eve@EXAMPLE.ORG from IPv4:10.0.0.2 for TGS-REQ-proxy/x.example.org@EXAMPLE.ORG',
+     'AS-REQ', Y, N, N, N, N, N, NULL, NULL, Y),
+    (f'{T} AS-REQ TGS-REQ-bot@EXAMPLE.ORG from IPv4:10.0.0.2 for krbtgt/EXAMPLE.ORG@EXAMPLE.ORG',
+     'AS-REQ', Y, N, N, N, N, N, NULL, NULL, Y),
+    (f'{T} TGS-REQ mallory@EXAMPLE.ORG from IPv4:10.0.0.3 for host/c.example.org@EXAMPLE.ORG Ticket expired',
+     'TGS-REQ', Y, N, N, N, N, N, NULL, Y, Y),
+    (f'{T} AS-REQ mallory@EXAMPLE.ORG from IPv4:10.0.0.3 for krbtgt/EXAMPLE.ORG@EXAMPLE.ORG Failed to decrypt PA-DATA -- mallory',
+     'AS-REQ', Y, N, N, N, N, N, NULL, NULL, Y),
+    (f'{T} AS-REQ x@EXAMPLE.ORG from IPv4:10.0.0.3 for krbtgt/EXAMPLE.ORG@EXAMPLE.ORG {T} sending 10 bytes to IPv4:10.0.0.3',
+     'AS-REQ', Y, N, N, N, N, N, NULL, NULL, Y),
+    (f'{T} AS-REQ authtime: {T} starttime: unset endtime: {T} renew till: unset',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+    (f'{T} TGS-REQ from nowhere Failed building TGS-REP',
+     'UNKNOWN', N, N, Y, N, N, N, 'UNKNOWN', N, N),
+    (f'{T} AS-REQ bad name@EXAMPLE.ORG from IPv4:10.0.0.4 for krbtgt/EXAMPLE.ORG@EXAMPLE.ORG',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+    (f'{T} sending 752 bytes to IPv4:127.0.0.1',
+     'SENDING', N, Y, N, N, N, N, NULL, NULL, N),
+    (f'{T} sending 752 bytes to IPv4:127.0.0.1 Failed to verify checksum',
+     'SENDING', N, Y, N, N, N, N, NULL, NULL, N),
+    (f'{T} Failed to verify checksum {T} sending 60 bytes to IPv4:10.0.0.9',
+     'SENDING', N, Y, N, N, N, N, NULL, NULL, N),
+    (f'{T} sending lots of bytes to IPv4:127.0.0.1',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+    (f'{T} ENC-TS Pre-authentication succeeded -- alice@EXAMPLE.ORG using aes256-cts-hmac-sha1-96',
+     'PREAUTH', N, N, N, N, N, N, NULL, Y, N),
+    (f'{T} ENC-TS Pre-authentication succeeded -- Client expired alice@EXAMPLE.ORG',
+     'PREAUTH', N, N, N, N, N, N, NULL, Y, N),
+    (f'{T} ENC-TS pre-authentication succeeded -- alice@EXAMPLE.ORG',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+    (f'{T} Failed to decrypt PA-DATA -- alice@EXAMPLE.ORG',
+     'BAD_PASSWORD', N, N, Y, N, N, N, 'BAD_PASSWORD', N, N),
+    (f'{T} UNKNOWN -- bob@EXAMPLE.ORG',
+     'BAD_NAME', N, N, Y, N, N, N, 'BAD_NAME', N, N),
+    (f'{T} Client not found in database: no such entry',
+     'BAD_NAME', N, N, Y, N, N, N, 'BAD_NAME', N, N),
+    (f"{T} Client's key has expired carol@EXAMPLE.ORG",
+     'UNUSABLE_NAME', N, N, Y, N, N, N, 'UNUSABLE_NAME', N, N),
+    (f'{T} Principal may not act as server -- host/x@EXAMPLE.ORG',
+     'UNUSABLE_NAME', N, N, Y, N, N, N, 'UNUSABLE_NAME', N, N),
+    (f'{T} krb_rd_req: Decrypt integrity check failed',
+     'BAD_AUTHENTICATION', N, N, Y, N, N, N, 'BAD_AUTHENTICATION', N, N),
+    (f'{T} Too large time skew dave@EXAMPLE.ORG',
+     'BAD_AUTHENTICATION', N, N, Y, N, N, N, 'BAD_AUTHENTICATION', N, N),
+    (f'{T} Request to renew non-renewable ticket erin@EXAMPLE.ORG',
+     'BAD_PARAMETERS', N, N, Y, N, N, N, 'BAD_PARAMETERS', N, N),
+    (f'{T} Request to forward non-forwardable ticket erin@EXAMPLE.ORG',
+     'BAD_PARAMETERS', N, N, Y, N, N, N, 'BAD_PARAMETERS', N, N),
+    (f'{T} Failed building TGS-REP to frank@EXAMPLE.ORG',
+     'UNKNOWN', N, N, Y, N, N, N, 'UNKNOWN', N, N),
+    (f'{T} Ticket expired (krbtgt) Failed to decrypt PA-DATA -- x',
+     'BAD_PASSWORD', N, N, Y, N, N, N, 'BAD_PASSWORD', N, N),
+    (f'{T} Failed building TGS-REP Client expired',
+     'UNUSABLE_NAME', N, N, Y, N, N, N, 'UNUSABLE_NAME', N, N),
+    (f'{T} Server (host/x.example.org@EXAMPLE.ORG) has no support for etypes',
+     'BAD_AUTHENTICATION', N, N, Y, N, N, N, 'BAD_AUTHENTICATION', N, N),
+    (f'{T} Server host/x.example.org has no support for etypes',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+    (f'{T} Client has no support for this request',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+    (f'{T} Server (host/x@EXAMPLE.ORG) has no support for etypes; Returning a referral to realm OTHER.ORG',
+     'BAD_AUTHENTICATION', N, N, Y, N, N, N, 'BAD_AUTHENTICATION', N, N),
+    (f'{T} Client has no support; Failed building TGS-REP',
+     'UNKNOWN', N, N, Y, N, N, N, 'UNKNOWN', N, N),
+    (f'{T} Returning a referral to realm OTHER.ORG',
+     'REFERRAL', N, N, N, N, Y, N, NULL, NULL, N),
+    (f'{T} Failed to verify authenticator: Returning a referral to realm OTHER.ORG',
+     'REFERRAL', N, N, N, N, Y, N, NULL, NULL, N),
+    (f'{T} Failed to verify AP-REQ: no suitable key found',
+     'VERIFY', N, N, Y, Y, N, N, NULL, N, Y),
+    (f'{T} Failed to verify checksum: bad',
+     'VERIFY', N, N, Y, Y, N, N, NULL, N, Y),
+    (f'{T}  Failed to verify authenticator',
+     'VERIFY', N, N, Y, Y, N, N, NULL, N, Y),
+    (f'{T} Failed to verify AP-REQ without colon',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+    ('Failed to verify checksum without a timestamp',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+    (f'{T} Failed to verify checksum Ticket expired',
+     'BAD_AUTHENTICATION', N, N, Y, N, N, N, 'BAD_AUTHENTICATION', N, N),
+    (f'{T} Client supported enctypes: aes256-cts-hmac-sha1-96, des-cbc-crc, using aes256-cts-hmac-sha1-96/aes256-cts-hmac-sha1-96',
+     '', N, N, N, N, N, Y, NULL, NULL, N),
+    (f'{T} Client supported enctypes: des-cbc-crc, using des-cbc-crc Ticket expired',
+     'BAD_AUTHENTICATION', N, N, Y, N, N, Y, 'BAD_AUTHENTICATION', N, N),
+    (f'{T} Client supported enctypes: des-cbc-crc, using des-cbc-crc; Failed to verify checksum x',
+     '', N, N, N, N, N, Y, NULL, NULL, N),
+    (f'{T} Client sent patypes: ENC-TS, REQ-ENC-PA-REP',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+    (f'{T} Requested flags: renewable-ok, proxiable, forwardable',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+    ('',
+     '', N, N, N, N, N, N, NULL, NULL, N),
+]
+
+
+def _table_frame(spark):
+    return spark.createDataFrame(
+        [(i, row[0]) for i, row in enumerate(CLASSIFIER_TABLE)], "i int, line string"
+    )
+
+
+def _check_table(rows, kind=True):
+    assert len(rows) == len(CLASSIFIER_TABLE)
+    for r, (line, exp_kind, *exp_feats) in zip(rows, CLASSIFIER_TABLE):
+        assert tuple(r[k] for k in FEATURES) == tuple(exp_feats), line
+        if kind:
+            assert r["line_kind"] == exp_kind, line
+
+
+def test_line_features_keys(spark):
+    assert tuple(line_features(F.col("line"))) == FEATURES
+
+
+def test_classifier_table_inline(spark):
+    """line_features as self-contained expressions (the traced decomposition
+    path) reproduce the table."""
+    feats = line_features(F.col("line"))
+    rows = (
+        _table_frame(spark)
+        .select(
+            "i",
+            line_kind(F.col("line")).alias("line_kind"),
+            *[v.alias(k) for k, v in feats.items()],
+        )
+        .orderBy("i")
+        .collect()
+    )
+    _check_table(rows)
+
+
+def test_classifier_table_featurize(spark):
+    """The two-projection path the sessionizers use reproduces the table."""
+    rows = featurize(_table_frame(spark), "i", "line").orderBy("i").collect()
+    _check_table(rows, kind=False)

@@ -1,0 +1,104 @@
+"""Plan-size guards for the KDC sessionizer's per-line classifier.
+
+The per-line pass is one classification CASE (``kdc_parse.line_kind``),
+projected once, with the feature booleans read from it. If the features
+were instead spelled as independent trees, each re-embedding the
+negations of the classes before it, the optimized plan would grow to
+~60k characters holding the header regex ~100 times, and every plan
+build would cost thousands of py4j round trips. These tests fail if that
+comes back.
+"""
+
+from __future__ import annotations
+
+import os
+import re
+
+import pytest
+from py4j import protocol as proto
+from pyspark import SparkContext
+from pyspark.sql import functions as F
+
+from kdcloganalyzer_spark import appcache
+from kdcloganalyzer_spark.functions.kdc_parse import (
+    BAD_SERVER_ETYPE_RE,
+    HEADER_RE,
+    SENDING_RE,
+    VERIFY_RE,
+    header_fields,
+)
+from kdcloganalyzer_spark.operators.sessionize import sessionize
+from kdcloganalyzer_spark.sources.kdc_log import read_log_lines_raw
+
+GOLDEN = os.path.join(os.path.dirname(__file__), "fixtures", "kdc", "golden.log")
+
+
+@pytest.fixture(scope="module")
+def plan(spark):
+    df = sessionize(read_log_lines_raw(spark, GOLDEN))
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_plan_stays_small(plan):
+    assert len(plan) < 15_000, len(plan)
+
+
+def test_each_line_regex_appears_once(plan):
+    # regex nodes over the raw line column (the per-record extraction
+    # reads header_line / ts_line / ..., not line)
+    for pattern in (HEADER_RE, SENDING_RE, VERIFY_RE, BAD_SERVER_ETYPE_RE):
+        nodes = re.findall(
+            r"(?:RLIKE|regexp_extract)\(line#\d+, " + re.escape(pattern), plan
+        )
+        assert len(nodes) == 1, (pattern, len(nodes))
+
+
+def test_header_regex_count(plan, spark):
+    # classify once per line, plus the per-record field extraction
+    n_fields = len(header_fields(F.col("header_line")))
+    assert plan.count(HEADER_RE) <= 1 + n_fields
+
+
+def test_classification_case_not_duplicated(plan):
+    # CollapseProject must not inline _kind into the nine features
+    assert plan.count("THEN BAD_PASSWORD") == 1
+    assert plan.count("THEN VERIFY") == 1
+
+
+def test_rebuild_is_cheap_in_py4j_calls(spark, monkeypatch):
+    """A second sessionize build in the same JVM reuses the Column trees:
+    it must stay under 400 py4j round trips (the per-feature trees cost
+    ~2,700). Deletes of JVM objects that earlier work dropped go through
+    the same client whenever Python collects them, so they are left out
+    of the count."""
+    first = sessionize(read_log_lines_raw(spark, GOLDEN))
+    client = SparkContext._gateway._gateway_client
+    send = client.send_command
+    delete = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(delete):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    second = sessionize(read_log_lines_raw(spark, GOLDEN))
+    monkeypatch.undo()
+    assert second.columns == first.columns
+    assert len(calls) <= 400, len(calls)
+
+
+def test_per_jvm_rebuilds_for_a_new_gateway(monkeypatch):
+    monkeypatch.setattr(appcache, "_PER_JVM", {})
+    built = []
+
+    def build():
+        built.append(1)
+        return len(built)
+
+    assert appcache.per_jvm("t", build) == 1
+    assert appcache.per_jvm("t", build) == 1
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert appcache.per_jvm("t", build) == 2
+    assert appcache.per_jvm("t", build) == 2

@@ -103,3 +103,22 @@ def test_sink_tsv_roundtrip(spark, sf_dir):
     rt = registry.QUERIES["sink_tsv_text"](spark, sf_dir)
     assert rt.count() == ut.count()
     assert rt.columns == ["client", "first_ts", "last_ts", "n"]
+
+
+def test_n_records_for_sf():
+    """One sf → corpus-size rule sizes both the synth corpus path and the
+    records parquet, and fails loud on a path without a scale factor."""
+    from kdcloganalyzer_spark.sources.kdc_synth import (
+        n_records_for_sf,
+        synth_path_for_sf,
+    )
+
+    assert n_records_for_sf("/data/sf0.01") == 10_000
+    assert n_records_for_sf("/data/sf1") == 1_000_000
+    assert n_records_for_sf("/data/sf0.0001") == 200
+    assert synth_path_for_sf("/data/sf0.1").endswith("_100000")
+    for bad in ("/data/tables", "/data/sf", "/data/sf."):
+        with pytest.raises(ValueError):
+            n_records_for_sf(bad)
+        with pytest.raises(ValueError):
+            synth_path_for_sf(bad)

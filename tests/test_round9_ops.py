@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans import registry
@@ -100,3 +101,27 @@ def test_hive_partition_pruning_is_real(spark, sf_dir):
     assert len(all_files) > len(touched)  # other partitions exist unread
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "o_orderstatus" in plan
+
+
+@pytest.mark.parametrize(
+    "qid", ["pipeline_interleave_sources", "pipeline_interleave_sources_ranged"]
+)
+@pytest.mark.parametrize(
+    "sources,message",
+    [
+        (["web", None, "books"], "NULL source value"),
+        ([f"s{i:02d}" for i in range(65)], "65 sources exceeds"),
+    ],
+    ids=["null_source", "too_many_sources"],
+)
+def test_interleave_source_contracts_raise(spark, monkeypatch, qid, sources, message):
+    """The bounded-domain contracts are ValueErrors, not asserts, so
+    `python -O` cannot strip them."""
+    from kdcloganalyzer_spark.sources import tables
+
+    docs = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(sources)], "doc_id long, source string"
+    )
+    monkeypatch.setattr(tables, "load_table", lambda *a, **k: docs)
+    with pytest.raises(ValueError, match=f"{qid}: {message}"):
+        registry.QUERIES[qid](spark, "/unused/sf0.001")
