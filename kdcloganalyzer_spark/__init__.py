@@ -10,6 +10,12 @@ Design rules (SURVEY.md §0, §4):
 - Python UDFs only where built-in functions can't express the semantics,
   and then always Arrow-batched (pandas_udf / mapInPandas).
 - Every operator id in SURVEY.md §2 maps to ``plans.registry.QUERIES``.
+
+Logging: modules log through ``logging.getLogger(__name__)``, children of
+the package logger ``kdcloganalyzer_spark``. The package installs no
+handler, so a best-effort handler that swallows an exception still shows
+it (with its traceback) on stderr through logging's last-resort handler,
+unless the application configures logging itself.
 """
 
 __version__ = "0.1.0"

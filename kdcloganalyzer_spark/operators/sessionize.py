@@ -175,14 +175,21 @@ def _assemble(df: DataFrame, ord_col: str) -> DataFrame:
     """groupBy(file, rec_id) with the reader's merge rules; ``df`` carries
     file, rec_id, line, the ``featurize`` columns, and an orderable
     ``ord_col`` giving total in-file line order."""
-    aggs, complete, out = per_jvm(
+    aggs, complete, ts_match, out = per_jvm(
         f"kdc_assemble:{ord_col}", lambda: _assemble_trees(ord_col)
     )
-    return df.groupBy("file", "rec_id").agg(*aggs).filter(complete).select(*out)
+    return (
+        df.groupBy("file", "rec_id")
+        .agg(*aggs)
+        .filter(complete)
+        .select("*", ts_match)
+        .select(*out)
+    )
 
 
 def _assemble_trees(ord_col: str):
-    """(aggregates, completeness filter, output projection) of ``_assemble``."""
+    """(aggregates, completeness filter, timestamp match, output projection)
+    of ``_assemble``."""
 
     def first_where(cond, col):
         return F.min_by(F.when(cond, col), F.when(cond, F.col(ord_col)))
@@ -207,9 +214,14 @@ def _assemble_trees(ord_col: str):
 
     hdr = header_fields(F.col("header_line"))
     enctypes, chosen = enctype_fields(F.col("enc_line"))
-    ts_raw = F.nullif(
-        F.regexp_extract(F.col("ts_line"), f"^({TIMESTAMP})", 1), F.lit("")
+    # Extracted once, in its own projection (read four times below, so
+    # CollapseProject keeps it apart); a miss is '' → NULL. Not nullif:
+    # Spark 4 plans each nullif as its own With common expression, so ts
+    # and ts_raw would each run the regex.
+    ts_match = F.regexp_extract(F.col("ts_line"), f"^({TIMESTAMP})", 1).alias(
+        "_ts_match"
     )
+    ts_raw = F.when(F.col("_ts_match") != "", F.col("_ts_match"))
     # verify-line error keeps only the matched suffix (reader:305,308);
     # chain errors keep the whole line (reader:273 etc.).
     error = F.when(
@@ -240,4 +252,4 @@ def _assemble_trees(ord_col: str):
         enctypes.alias("enctypes"),
         chosen.alias("chosen_enctype"),
     ]
-    return aggs, F.col("complete"), out
+    return aggs, F.col("complete"), ts_match, out

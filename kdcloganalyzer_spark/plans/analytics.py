@@ -17,6 +17,8 @@ it natively as TIMESTAMP_NS. Microsecond-exact comparisons therefore use
 
 from __future__ import annotations
 
+import logging
+
 from kdcloganalyzer_spark import appcache
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -24,6 +26,8 @@ from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans.registry import query
 from kdcloganalyzer_spark.sources.tables import load_table
+
+log = logging.getLogger(__name__)
 
 _GAP_MIN = 30
 
@@ -603,6 +607,7 @@ def _lineitem_num_rows(sf_dir: str) -> int:
             )
         return pq.ParquetFile(path).metadata.num_rows
     except Exception:  # noqa: BLE001 — storage heuristic, never fatal
+        log.warning("unreadable parquet footer under %s", path, exc_info=True)
         return 0
 
 

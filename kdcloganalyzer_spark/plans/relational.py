@@ -15,6 +15,8 @@ to Catalyst + AQE.
 
 from __future__ import annotations
 
+import logging
+
 from kdcloganalyzer_spark import appcache
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -22,6 +24,8 @@ from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans.registry import query
 from kdcloganalyzer_spark.sources.tables import load_table
+
+log = logging.getLogger(__name__)
 
 
 def _cents(col):
@@ -692,6 +696,7 @@ def _evict_bucketed_tables() -> None:
                 )
                 path = loc[0][1].removeprefix("file:") if loc else None
             except Exception:  # noqa: BLE001 — hygiene is best-effort
+                log.warning("no location for bucketed table %s", t.name, exc_info=True)
                 path = None
             spark.sql(f"DROP TABLE IF EXISTS {t.name}")
             if path:

@@ -3690,10 +3690,11 @@ def events_haar_wavelet(spark: SparkSession, sf_dir: str) -> DataFrame:
     # data while the hash stayed green. One bounded control-scalar
     # count (≤ a few dozen groups) makes that day fail loudly instead.
     n_days = d.count()
-    assert n_days <= 32, (
-        f"events span {n_days} days > the 32-slot Haar frame; widen the"
-        " pyramid (next power of two) before trusting this decomposition"
-    )
+    if n_days > 32:
+        raise ValueError(
+            f"events span {n_days} days > the 32-slot Haar frame; widen the"
+            " pyramid (next power of two) before trusting this decomposition"
+        )
     base = (
         spark.range(32)
         .select(F.col("id").cast("bigint").alias("j"))

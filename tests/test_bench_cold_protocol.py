@@ -7,6 +7,7 @@ exactly as it does to the streaming tier — not stream-only."""
 
 from __future__ import annotations
 
+import logging
 import os
 import sys
 
@@ -105,6 +106,46 @@ def test_unpersist_called_on_evicted_dataframes():
     cache["k2"] = (b, [1, 2, 3])
     appcache.dict_cache_evictor(cache)()
     assert cache == {} and a.unpersisted and b.unpersisted
+
+
+def test_failing_evictor_is_logged_and_others_still_run(monkeypatch, caplog):
+    """A raising evictor must neither stop the others nor pass silently:
+    its cache stays warm, so a "cold" re-run would time a warm one."""
+    cleared = []
+
+    def broken():
+        raise RuntimeError("evictor exploded")
+
+    monkeypatch.setattr(
+        appcache,
+        "_EVICTORS",
+        [
+            (lambda qid: qid == "q", broken),
+            (lambda qid: qid == "q", lambda: cleared.append("q")),
+        ],
+    )
+    with caplog.at_level(logging.WARNING, logger="kdcloganalyzer_spark"):
+        assert appcache.evict_for("q") is True
+    assert cleared == ["q"]
+    (rec,) = caplog.records
+    assert rec.name == "kdcloganalyzer_spark.appcache"
+    assert rec.exc_info and "evictor exploded" in str(rec.exc_info[1])
+    caplog.clear()
+    monkeypatch.setattr(appcache, "_EVICTORS", [(lambda qid: True, broken)])
+    assert appcache.evict_for("q") is False
+    assert len(caplog.records) == 1
+
+
+def test_failed_unpersist_is_logged(caplog):
+    class BrokenDF:
+        def unpersist(self):
+            raise RuntimeError("gone")
+
+    cache = {"k": BrokenDF()}
+    with caplog.at_level(logging.WARNING, logger="kdcloganalyzer_spark"):
+        appcache.dict_cache_evictor(cache)()
+    assert cache == {}
+    assert [r.exc_info[1].args for r in caplog.records] == [("gone",)]
 
 
 def test_every_registered_evictor_matches_a_live_qid():

@@ -24,6 +24,7 @@ from kdcloganalyzer_spark.functions.kdc_parse import (
     BAD_SERVER_ETYPE_RE,
     HEADER_RE,
     SENDING_RE,
+    TIMESTAMP,
     VERIFY_RE,
     header_fields,
 )
@@ -57,6 +58,15 @@ def test_header_regex_count(plan, spark):
     # classify once per line, plus the per-record field extraction
     n_fields = len(header_fields(F.col("header_line")))
     assert plan.count(HEADER_RE) <= 1 + n_fields
+
+
+def test_record_timestamp_extracted_once(plan):
+    # ts and ts_raw share one extraction (a nullif per use would plan a
+    # separate With common expression, and so a second regex, for each)
+    nodes = re.findall(
+        r"regexp_extract\(ts_line#\d+, \^\(" + re.escape(TIMESTAMP), plan
+    )
+    assert len(nodes) == 1, len(nodes)
 
 
 def test_classification_case_not_duplicated(plan):

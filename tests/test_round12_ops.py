@@ -3,6 +3,10 @@ alone do not pin (HLL-twin agreement with the exact forms)."""
 
 from __future__ import annotations
 
+import datetime
+
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans import registry
@@ -1257,3 +1261,21 @@ def test_calendar_heatmap_cross_foots(spark, sf_dir):
     for r in rows:
         assert 1 <= r["dow"] <= 7 and 0 <= r["hour"] <= 23
         assert 1 <= r["n_users"] <= r["n"]
+
+
+def test_haar_wavelet_rejects_more_than_32_days(spark, tmp_path):
+    """The 32-slot frame would silently drop day 33+: a 33-day events
+    table must raise, also under ``python -O`` (so not an assert)."""
+    day0 = datetime.datetime(2024, 1, 1)
+    pd.DataFrame(
+        {
+            "event_id": range(33),
+            "ts": [day0 + datetime.timedelta(days=i, hours=1) for i in range(33)],
+            "user_id": [1] * 33,
+            "event_type": ["view"] * 33,
+            "value": [1.0] * 33,
+            "props": ["{}"] * 33,
+        }
+    ).to_parquet(tmp_path / "events.parquet", index=False)
+    with pytest.raises(ValueError, match="33 days"):
+        registry.QUERIES["events_haar_wavelet"](spark, str(tmp_path))

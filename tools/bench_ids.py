@@ -3,6 +3,11 @@ methodology (3 noop-sink executions, record min + median) so a single
 operator can be measured before/after an optimization without paying
 the full 405-id suite. Prints one JSON line per id.
 
+``compiles`` is the Janino compile count of each run. A healthy id shows
+``[n, 0, 0]``: its warm runs hit the codegen cache. A non-zero count on
+runs 2-3 flags generated code that changes from run to run (a literal
+that differs per build) or a codegen cache too small for the ids run.
+
 Usage:
     python tools/bench_ids.py <id> [<id> ...]
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/bench_ids.py ...
@@ -21,7 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kdcloganalyzer_spark.plans import registry  # noqa: E402
-from kdcloganalyzer_spark.session import get_spark  # noqa: E402
+from kdcloganalyzer_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -42,15 +47,18 @@ def main() -> None:
     for qid in ids:
         fn = registry.QUERIES[qid]
         spark.sparkContext.setJobDescription(f"bench_ids: {qid}")
-        runs = []
+        runs, compiles = [], []
         for _ in range(3):
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
+            compiles.append(codegen_compiles(spark) - c0)
         out[qid] = {
             "min": round(min(runs), 3),
             "median": round(sorted(runs)[1], 3),
             "runs": [round(r, 3) for r in runs],
+            "compiles": compiles,
         }
         print(json.dumps({qid: out[qid]}), flush=True)
     spark.sparkContext.setJobDescription(None)
