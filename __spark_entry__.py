@@ -11,6 +11,7 @@ the registry to the driver's interface.
 
 from __future__ import annotations
 
+import logging
 import os
 import sys
 from collections.abc import Callable
@@ -23,6 +24,7 @@ from kdcloganalyzer_spark.plans import registry  # noqa: E402
 
 registry.load_all()
 
+log = logging.getLogger(__name__)
 _HERE = os.path.dirname(os.path.abspath(__file__))
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 FLAGSHIP = "agg_min_max_count"
@@ -60,7 +62,7 @@ def entry(spark: SparkSession) -> DataFrame:
             spark, "/root/testdata/sf0.01"
         )
     except Exception:  # noqa: BLE001 — hedge only; smoke check must pass
-        pass
+        log.warning("oracle-input prestage failed", exc_info=True)
     return registry.QUERIES[FLAGSHIP](spark, SMOKE_SF_DIR)
 
 

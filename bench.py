@@ -12,6 +12,7 @@ a cluster run would actually pay.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import random
 import re
@@ -22,6 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kdcloganalyzer_spark.plans import registry
 from kdcloganalyzer_spark.session import DEFAULT_CPUS, get_spark
+
+log = logging.getLogger(__name__)
 
 
 def _loadavg() -> list[float]:
@@ -281,7 +284,7 @@ def _warm_streaming_engine(spark) -> None:
             "noop"
         ).mode("overwrite").save()
     except Exception:  # noqa: BLE001 — warm-up is best-effort
-        pass
+        log.warning("sessionize warm-up failed", exc_info=True)
 
 
 def _evict_amortized(qid: str) -> bool:
@@ -298,6 +301,7 @@ def _evict_amortized(qid: str) -> bool:
 
         return appcache.evict_for(qid)
     except Exception:  # noqa: BLE001 — bench must survive anything
+        log.warning("cache eviction failed for %s", qid, exc_info=True)
         return False
 
 

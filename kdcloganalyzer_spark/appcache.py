@@ -1,23 +1,42 @@
-"""Hygiene for app-scoped module-level caches and staged temp dirs.
+"""App-scoped memos for amortized builds, and staged temp dirs.
 
-The plan modules amortize expensive index builds (minhash signatures,
-IVF/PQ quantizers, symmetric edge lists, the KDC records table) in
-module-level dicts keyed on ``(applicationId, sf_dir, ...)``. That is the
-right contract for a long-lived session, but a process that creates and
-stops several SparkSessions (pytest does exactly that) would otherwise
-accumulate dead-app entries forever, pinning lazy localCheckpoint blocks
-for the process lifetime — ADVICE r5. ``evict_stale`` drops every entry
-whose applicationId is not the live one; each cache getter calls it
-before its own lookup, so the caches are bounded by one app's working
-set.
+The engine is parse-once, query-many: the KDC records persist, edge
+lists, ANN indexes, MinHash signatures, BPE merges, stream results and
+staged layouts are each built once per (session, sf) and then read by
+many queries. ``memo(readers)`` is the one implementation of that
+contract. It decorates a builder ``build(spark, *args)`` and
 
-``tempdir`` is ``tempfile.mkdtemp`` plus an atexit ``shutil.rmtree`` so
-staged inputs / streaming checkpoints don't outlive the process.
+- keys each entry on ``(applicationId, *args)``. Not ``id(spark)``:
+  CPython reuses a stopped session's id, which would hand back
+  DataFrames bound to a dead session;
+- drops dead-app entries before each lookup, so a process that creates
+  and stops several sessions (pytest does) holds one app's working set
+  instead of pinning every old app's blocks (ADVICE r5);
+- registers its own evictor: ``evict_for(qid)`` clears the memo when
+  ``readers`` matches ``qid``. That is what makes the bench's min-of-N
+  cold re-samples genuinely cold (VERDICT r13 item 2);
+- exposes its dict as ``.cache``.
+
+``readers`` names the query ids that read through the memo:
+
+- a tuple of ids;
+- a module name: every id that module registers (the records persist);
+- a callable ``qid -> bool`` (the ``stream_`` prefix);
+- ``None``: no evictor, so those ids are never re-sampled cold. Say why
+  on the line above the decorator.
+
+A builder must not call its own memo for the same key: the entry is
+stored only after ``build`` returns, so that recursion never ends.
+
+``register_evictor`` remains for the one cache that is not a dict (the
+Spark catalog's bucketed tables). ``per_jvm`` holds Column trees per JVM;
+``tempdir`` is ``tempfile.mkdtemp`` plus an atexit ``shutil.rmtree``.
 """
 
 from __future__ import annotations
 
 import atexit
+import functools
 import logging
 import shutil
 import tempfile
@@ -25,19 +44,19 @@ from collections.abc import Callable
 
 log = logging.getLogger(__name__)
 
-#: (matcher, evictor) pairs — the bench's min-of-N COLD protocol
-#: (VERDICT r13 item 2) asks each amortized cache to be clearable BY
-#: QUERY ID, so a re-run is genuinely cold. Matchers answer "does this
-#: qid read through the cache I guard"; evictors drop the entries (and
-#: best-effort unpersist DataFrames). Registered by the owning plan
-#: module at import, consumed by bench.py.
+#: (matcher, evictor) pairs: matchers answer "does this qid read through
+#: the cache I guard", evictors drop the entries. Consumed by
+#: ``evict_for`` (bench.py, perfbench).
 _EVICTORS: list[tuple[Callable[[str], bool], Callable[[], None]]] = []
+
+#: every ``memo`` builder, in definition order
+_MEMOS: list[Callable] = []
 
 
 def register_evictor(
     matcher: Callable[[str], bool], evict: Callable[[], None]
 ) -> None:
-    """Register an amortized-cache eviction hook.
+    """Register an eviction hook for a cache that is not a ``memo``.
 
     ``matcher(qid)`` must return True for every query id whose plan
     reads through the guarded cache (so evicting for that id makes its
@@ -64,12 +83,51 @@ def evict_for(qid: str) -> bool:
     return hit
 
 
-def dict_cache_evictor(cache: dict) -> Callable[[], None]:
-    """Evictor for the standard app-scoped dict cache: pop every entry
-    and best-effort unpersist any DataFrame values (tuple values are
-    unpacked — the ANN index caches store (df, codebook) pairs). The
-    popped reference is the real cleanup; a failed unpersist only
-    delays block reclamation to app exit."""
+def memo(readers, *, per_app: bool = True):
+    """Decorator: memoize ``build(spark, *args)`` for the live app.
+
+    See the module docstring for the contract and for ``readers``.
+    ``per_app=False`` keys on ``args`` alone and keeps entries across
+    sessions, for a path memo whose files outlive the app that wrote
+    them (the staged multiline CSV)."""
+
+    def deco(build):
+        cache: dict = {}
+
+        @functools.wraps(build)
+        def get(spark, *args):
+            key = args
+            if per_app:
+                app = spark.sparkContext.applicationId
+                _evict_stale(cache, app)
+                key = (app, *args)
+            if key not in cache:
+                cache[key] = build(spark, *args)
+            return cache[key]
+
+        get.cache = cache
+        get.readers = readers
+        if readers is not None:
+            register_evictor(_matcher(readers), _dict_cache_evictor(cache))
+        _MEMOS.append(get)
+        return get
+
+    return deco
+
+
+def _matcher(readers) -> Callable[[str], bool]:
+    if callable(readers):
+        return readers
+    if isinstance(readers, str):
+        return _module_ids_matcher(readers)
+    return frozenset(readers).__contains__
+
+
+def _dict_cache_evictor(cache: dict) -> Callable[[], None]:
+    """Pop every entry and best-effort unpersist any DataFrame values
+    (tuple values are unpacked — the ANN index caches store
+    (df, codebook) pairs). The popped reference is the real cleanup; a
+    failed unpersist only delays block reclamation to app exit."""
 
     def _evict() -> None:
         for k in list(cache):
@@ -86,10 +144,9 @@ def dict_cache_evictor(cache: dict) -> Callable[[], None]:
     return _evict
 
 
-def module_ids_matcher(module_name: str) -> Callable[[str], bool]:
-    """Matcher: every qid registered by ``module_name`` — the right
-    scope for a cache that (nearly) every query in one plan module
-    reads through (e.g. the kdc_records persist)."""
+def _module_ids_matcher(module_name: str) -> Callable[[str], bool]:
+    """Matcher: every qid registered by ``module_name`` (keyed on the
+    query callable's ``__module__``)."""
 
     def _match(qid: str) -> bool:
         from kdcloganalyzer_spark.plans import registry
@@ -100,17 +157,12 @@ def module_ids_matcher(module_name: str) -> Callable[[str], bool]:
     return _match
 
 
-def evict_stale(cache: dict, spark) -> None:
-    """Drop cache entries from stopped SparkSessions.
-
-    Keys must be tuples whose first element is the owning applicationId
-    (the convention every app-scoped cache here follows). Entries of the
-    LIVE app are untouched; dead-app DataFrames can't be unpersisted
-    through their stopped session, so dropping the reference is all the
-    cleanup there is (the JVM-side blocks died with the app).
-    """
-    app = spark.sparkContext.applicationId
-    for k in [k for k in cache if isinstance(k, tuple) and k and k[0] != app]:
+def _evict_stale(cache: dict, app: str) -> None:
+    """Drop the entries of every app but ``app``. Dead-app DataFrames
+    can't be unpersisted through their stopped session, so dropping the
+    reference is all the cleanup there is (the JVM-side blocks died
+    with the app)."""
+    for k in [k for k in cache if k[0] != app]:
         cache.pop(k, None)
 
 

@@ -955,18 +955,6 @@ def connected_components(
     )
 
 
-def _cosine(a, b):
-    """Cosine over array<float> columns, computed in double precision."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(ad, bd, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.sqrt(F.aggregate(ad, F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(bd, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (na * nb)
-
-
 def _dot(a, b):
     """Dot product over two array<double> columns (whole-stage codegen)."""
     return F.aggregate(

@@ -31,18 +31,6 @@ from kdcloganalyzer_spark.sources.kdc_synth import (
     synth_path_for_sf,
 )
 
-_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# Every id in this module reads through the kdc_records persist; the
-# bench's min-of-N COLD protocol (VERDICT r13 item 2) evicts it so a
-# flagged id's re-sample genuinely re-pays the sessionize. The on-disk
-# records parquet (records_path_for_sf) is NOT touched: it is a
-# deployment artifact (the oracle twin), not in-process amortization.
-appcache.register_evictor(
-    appcache.module_ids_matcher(__name__),
-    appcache.dict_cache_evictor(_CACHE),
-)
-
 # Bump whenever the parser/sessionizer output changes; the path ALSO
 # embeds the synth corpus's own versioned dir name, so regenerating or
 # re-versioning the corpus (kdc_synth.py) auto-invalidates these records
@@ -109,7 +97,7 @@ def kdc_records_parquet(spark: SparkSession, sf_dir: str) -> str:
         # one-time parse itself parallel. Row content unchanged — no
         # RECORDS_VERSION bump.
         n_rec = n_records_for_sf(sf_dir)
-        kdc_records(spark, sf_dir).withColumn(
+        _persisted_records(spark, sf_dir).withColumn(
             "ts", F.col("ts").cast("timestamp_ntz")
         ).repartition(max(1, n_rec // 2_000_000)).write.mode(
             "overwrite"
@@ -117,20 +105,23 @@ def kdc_records_parquet(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
+# Every id in this module reads through the persist, so the bench's
+# min-of-N COLD protocol evicts it for any of them: a re-sample then
+# re-pays the sessionize. The on-disk records parquet is not touched: it
+# is a deployment artifact (the oracle twin), not in-process amortization.
+@appcache.memo(readers=__name__)
+def _persisted_records(spark: SparkSession, sf_dir: str) -> DataFrame:
+    log_dir = synth_dir_for_sf(sf_dir)
+    return sessionize(read_log_lines_raw(spark, log_dir)).persist()
+
+
 def kdc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # keyed on applicationId, not id(spark): CPython can reuse a stopped
-    # session's id, which would hand back DataFrames bound to a dead session
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_CACHE, spark)
-    if key not in _CACHE:
-        log_dir = synth_dir_for_sf(sf_dir)
-        df = sessionize(read_log_lines_raw(spark, log_dir)).persist()
-        _CACHE[key] = df
-        # Materialize the oracle twin while the parse is hot: every
-        # oracle-backed KDC query constructed in this session can then
-        # assume the DuckDB side exists.
-        kdc_records_parquet(spark, sf_dir)
-    return _CACHE[key]
+    df = _persisted_records(spark, sf_dir)
+    # Materialize the oracle twin while the parse is hot: every
+    # oracle-backed KDC query constructed in this session can then
+    # assume the DuckDB side exists.
+    kdc_records_parquet(spark, sf_dir)
+    return df
 
 
 def _accepted(spark: SparkSession, sf_dir: str) -> DataFrame:

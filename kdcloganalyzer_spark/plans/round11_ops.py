@@ -72,7 +72,7 @@ def embed_cluster_kmeans_int(
     (ivf_build_ctes — the same CTE prefix the IVF search oracle uses).
 
     Scale: the index build amortizes across the whole ANN family via
-    the per-(session, sf) _IVF_CACHE; the report itself is one codegen
+    the per-(session, sf) _ivf_index memo; the report itself is one codegen
     fold per row + one 16-row partial-agg'd shuffle. At 100 TB the
     build runs on a deterministic sample and the report streams over
     the assigned corpus — no driver materialization beyond the 16
@@ -831,29 +831,19 @@ _BPE_TRAIN_CTES = (
 )
 
 
-_BPE_MERGE_CACHE: dict = {}
-appcache.register_evictor(
-    lambda qid: qid
-    in (
+@appcache.memo(
+    readers=(
         "text_bpe_train_merges",
         "pipeline_bpe_tokenize",
         "pipeline_tokenizer_fertility",
-    ),
-    appcache.dict_cache_evictor(_BPE_MERGE_CACHE),
+    )
 )
-
-
 def _bpe_merges(spark: SparkSession, sf_dir: str):
     """Greedy BPE training (the text_bpe_train_merges loop), cached per
     (session, sf) so the apply id reuses the learned merges instead of
     re-training — the amortized-index contract applied to tokenizers."""
-    from kdcloganalyzer_spark import appcache
     from kdcloganalyzer_spark.sources.tables import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_BPE_MERGE_CACHE, spark)
-    if key in _BPE_MERGE_CACHE:
-        return _BPE_MERGE_CACHE[key]
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         F.explode(
@@ -901,7 +891,6 @@ def _bpe_merges(spark: SparkSession, sf_dir: str):
         vocab = vocab.withColumn(
             "s", F.expr(f"replace(s, '<{pl}><{pr}>', '<{pl}{pr}>')")
         ).localCheckpoint(eager=False)
-    _BPE_MERGE_CACHE[key] = merges
     return merges
 
 
@@ -2087,32 +2076,24 @@ def pipeline_compaction_bins(
 # ---------------------------------------------------------------------------
 
 
-_LP3_CACHE: dict = {}
-appcache.register_evictor(
-    lambda qid: qid == "graph_community_modularity",
-    appcache.dict_cache_evictor(_LP3_CACHE),
-)
-
-
-def _lp3_labels(spark: SparkSession, sf_dir: str, sym: DataFrame):
-    """The 3-round LP label table, eagerly checkpointed and cached per
-    (session, sf): the modularity eval (and future partition-consumers)
-    reuse one materialization instead of re-running the vote rounds —
-    the amortized-index contract applied to the community partition."""
-    from kdcloganalyzer_spark import appcache
+@appcache.memo(readers=("graph_community_modularity",))
+def _lp3_labels(spark: SparkSession, sf_dir: str):
+    """The 3-round LP label table over the shared co-order edges,
+    eagerly checkpointed and cached per (session, sf): the modularity
+    eval (and future partition-consumers) reuse one materialization
+    instead of re-running the vote rounds — the amortized-index
+    contract applied to the community partition."""
+    from kdcloganalyzer_spark.plans.analytics import _coorder_edges
     from kdcloganalyzer_spark.plans.round8_ops import (
         lp_initial_labels,
         lp_vote_round,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_LP3_CACHE, spark)
-    if key not in _LP3_CACHE:
-        labels = lp_initial_labels(sym)
-        for _ in range(3):
-            labels = lp_vote_round(sym, labels)
-        _LP3_CACHE[key] = labels.localCheckpoint(eager=True)
-    return _LP3_CACHE[key]
+    sym = _coorder_edges(spark, sf_dir)
+    labels = lp_initial_labels(sym)
+    for _ in range(3):
+        labels = lp_vote_round(sym, labels)
+    return labels.localCheckpoint(eager=True)
 
 
 def _modularity_oracle() -> str:
@@ -2174,7 +2155,7 @@ def graph_community_modularity(
     from kdcloganalyzer_spark.plans.analytics import _coorder_edges
 
     sym = _coorder_edges(spark, sf_dir)
-    labels = _lp3_labels(spark, sf_dir, sym)
+    labels = _lp3_labels(spark, sf_dir)
     m2 = sym.count()
     members = labels.groupBy(F.col("lab").alias("community")).agg(
         F.count("*").cast("bigint").alias("n_members")
@@ -2335,44 +2316,13 @@ def scan_csv_multiline_quoted(
     the operator encodes the production rule: multiline CSV at scale
     must arrive as many small files, or be rewritten to parquet at
     ingest (this plan's write side IS that rewrite)."""
-    import os
-
-    from kdcloganalyzer_spark import appcache
-    from kdcloganalyzer_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    notes = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit('"'),
-            F.expr("replace(substring(text, 1, 80), ' ', '\\n')"),
-        ).alias("note"),
-    )
-    key = f"{sf_dir}::mlcsv"
-    if key not in _MLCSV_CACHE:
-        d = appcache.tempdir(prefix="mlcsv_")
-        out = os.path.join(d, "notes_csv")
-        (
-            notes.coalesce(2)
-            .write.mode("overwrite")
-            .option("header", "true")
-            .option("quote", '"')
-            .option("escape", '"')
-            # the WRITER trims field whitespace by default — a field
-            # ending in '\n' silently loses it (measured: one lost
-            # newline per space-terminated 80-char prefix)
-            .option("ignoreLeadingWhiteSpace", "false")
-            .option("ignoreTrailingWhiteSpace", "false")
-            .csv(out)
-        )
-        _MLCSV_CACHE[key] = out
     back = (
         spark.read.schema("doc_id bigint, note string")
         .option("header", "true")
         .option("multiLine", "true")
         .option("quote", '"')
         .option("escape", '"')
-        .csv(_MLCSV_CACHE[key])
+        .csv(_multiline_csv(spark, sf_dir))
     )
     return back.select(
         "doc_id",
@@ -2386,11 +2336,39 @@ def scan_csv_multiline_quoted(
     )
 
 
-_MLCSV_CACHE: dict = {}
-appcache.register_evictor(
-    lambda qid: qid == "scan_csv_multiline_quoted",
-    appcache.dict_cache_evictor(_MLCSV_CACHE),
-)
+# Process-scoped: the CSV sits in a process-lifetime temp dir, so a later
+# session in the same process reads it back instead of rewriting it.
+@appcache.memo(readers=("scan_csv_multiline_quoted",), per_app=False)
+def _multiline_csv(spark: SparkSession, sf_dir: str) -> str:
+    """Write each document's quoted, newline-bearing note as CSV (what
+    scan_csv_multiline_quoted reads back); returns the CSV dir."""
+    import os
+
+    from kdcloganalyzer_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    notes = docs.select(
+        "doc_id",
+        F.concat(
+            F.lit('"'),
+            F.expr("replace(substring(text, 1, 80), ' ', '\\n')"),
+        ).alias("note"),
+    )
+    out = os.path.join(appcache.tempdir(prefix="mlcsv_"), "notes_csv")
+    (
+        notes.coalesce(2)
+        .write.mode("overwrite")
+        .option("header", "true")
+        .option("quote", '"')
+        .option("escape", '"')
+        # the WRITER trims field whitespace by default — a field
+        # ending in '\n' silently loses it (measured: one lost
+        # newline per space-terminated 80-char prefix)
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .csv(out)
+    )
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -790,16 +790,10 @@ def _coreset_oracle(k: int = 16) -> str:
     """
 
 
-#: Per-(appId, sf) coreset result (16 control rows) — the traversal is
-#: 16 TakeOrdered passes; like the IVF build it runs once per session.
-_CORESET_CACHE: dict = {}
-appcache.register_evictor(
-    lambda qid: qid == "sample_coreset_kcenter",
-    appcache.dict_cache_evictor(_CORESET_CACHE),
-)
-
-
+# The coreset result (16 control rows): the traversal is 16 TakeOrdered
+# passes, so like the IVF build it runs once per session.
 @query("sample_coreset_kcenter", oracle=_coreset_oracle())
+@appcache.memo(readers=("sample_coreset_kcenter",))
 def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-CENTER CORESET SELECTION — Gonzalez (1985) farthest-point
     traversal exposed as a data-pruning operator: the 16 selected
@@ -823,14 +817,9 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means seeding) or swaps for parallel Gonzalez (pick the farthest
     point per partition, then max-of-maxes — same approximation bound
     up to a factor 2)."""
-    from kdcloganalyzer_spark import appcache
     from kdcloganalyzer_spark.operators.dedup import spread
     from kdcloganalyzer_spark.operators.similarity import _sqdist_to_literal
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_CORESET_CACHE, spark)
-    if key in _CORESET_CACHE:
-        return _CORESET_CACHE[key]
     base = (
         spread(load_table(spark, sf_dir, "embeddings"))
         .select("vec_id", "embedding")
@@ -868,7 +857,6 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("d2_sel", 6).alias("d2_sel_r6"),
         F.round("cover_d2", 6).alias("cover_d2_r6"),
     ).localCheckpoint(eager=True)
-    _CORESET_CACHE[key] = out
     return out
 
 
@@ -878,16 +866,6 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PCA_ROUNDS = 6
 _PCA_SCALE = 1 << 20  # shared quantum with the Lloyd idiom
-
-#: Per-(appId, sf) final report — the iteration is deterministic, so
-#: like the ANN index builds it runs once per session (cold cost in
-#: BASELINE round-12 rows) and re-reads serve the pinned 10 rows.
-_PCA_CACHE: dict = {}
-appcache.register_evictor(
-    lambda qid: qid == "embed_pca_power_iteration",
-    appcache.dict_cache_evictor(_PCA_CACHE),
-)
-
 
 def _pca_oracle(rounds: int = _PCA_ROUNDS, dim: int = 64) -> str:
     s = _PCA_SCALE
@@ -969,7 +947,11 @@ def _duck_round_half_away(y: float) -> int:
     return int(math.floor(y + 0.5)) if y >= 0 else int(math.ceil(y - 0.5))
 
 
+# The final report: the iteration is deterministic, so like the ANN
+# index builds it runs once per session (cold cost in BASELINE round-12
+# rows) and re-reads serve the pinned 10 rows.
 @query("embed_pca_power_iteration", oracle=_pca_oracle())
+@appcache.memo(readers=("embed_pca_power_iteration",))
 def embed_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOP PRINCIPAL COMPONENT via EXACT-INTEGER POWER ITERATION — the
     embedding-drift / outlier audit PCA every curation pipeline wants:
@@ -1009,12 +991,6 @@ def embed_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver-side k×k block."""
     import math
 
-    from kdcloganalyzer_spark import appcache
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_PCA_CACHE, spark)
-    if key in _PCA_CACHE:
-        return _PCA_CACHE[key]
     ev = load_table(spark, sf_dir, "embeddings")
     s = _PCA_SCALE
     dim = 64
@@ -1095,7 +1071,6 @@ def embed_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    _PCA_CACHE[key] = out
     return out
 
 
@@ -1786,16 +1761,6 @@ def events_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HITS_ROUNDS = 5
 _HITS_S = 1 << 20
 
-#: Per-(appId, sf) final report — deterministic like the other iterative
-#: builds; the 10-shuffle fused plan runs once per session (cold cost in
-#: the BASELINE round-12 rows), re-reads serve the pinned 10 rows.
-_HITS_CACHE: dict = {}
-appcache.register_evictor(
-    lambda qid: qid == "graph_hits_bipartite",
-    appcache.dict_cache_evictor(_HITS_CACHE),
-)
-
-
 def _hits_oracle(rounds: int = _HITS_ROUNDS) -> str:
     s = _HITS_S
     ctes = [
@@ -1843,7 +1808,11 @@ def _hits_oracle(rounds: int = _HITS_ROUNDS) -> str:
     """
 
 
+# The final report: deterministic like the other iterative builds, so the
+# 10-shuffle fused plan runs once per session and re-reads serve the
+# pinned 10 rows.
 @query("graph_hits_bipartite", oracle=_hits_oracle())
+@appcache.memo(readers=("graph_hits_bipartite",))
 def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS (Kleinberg hubs & authorities) on the directed customer →
     supplier co-order graph — the link-analysis twin of graph_pagerank:
@@ -1864,13 +1833,8 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree / triangles / HITS). At 100 TB the window-max swaps for a
     broadcast 1-row max (the documented control-scalar form) to avoid
     the single-partition window over a large node set."""
-    from kdcloganalyzer_spark import appcache
     from kdcloganalyzer_spark.plans.analytics import _coorder_edges
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_HITS_CACHE, spark)
-    if key in _HITS_CACHE:
-        return _HITS_CACHE[key]
     s = _HITS_S
     sym = _coorder_edges(spark, sf_dir)
     ed = sym.where(F.col("src").startswith("c")).select(
@@ -1925,7 +1889,6 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rank"),
     ).where(F.col("rank") <= 5)
     out = hubs.unionAll(auths).localCheckpoint(eager=True)
-    _HITS_CACHE[key] = out
     return out
 
 

@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.plans.analytics import CMS_ORACLE
 from kdcloganalyzer_spark.plans.kdc_queries import (
     DRIVER_RECORDS_GLOB,
@@ -34,52 +35,19 @@ from kdcloganalyzer_spark.sources.kdc_synth import (
 )
 from kdcloganalyzer_spark.streaming import stream_queries as SQ
 
-#: Per-(appId, sf, qid) materialized results of the bounded streaming
-#: runs. A bounded availableNow run is a pure function of the input
-#: table, and in a live deployment the StreamingQuery runs ONCE — its
-#: sink is the queryable surface; re-invoking the registered callable is
-#: a consumer re-reading that sink, not a reason to replay the whole
-#: stream. Same amortized contract as the ANN/index caches and
-#: stream_queries._STATE_CKPT_CACHE (r10-verdict-sanctioned): first call
-#: per (appId, sf) pays the full run (the cold costs stay recorded in
-#: BASELINE.md §stream-tier), later calls read the pinned result.
-#: evict_stale bounds it to the live app's working set.
-_STREAM_RESULT_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+def _stream_ids(qid: str) -> bool:
+    """Readers of the stream-result memos. A bounded availableNow run is
+    a pure function of the input table, and in a live deployment the
+    StreamingQuery runs ONCE — its sink is the queryable surface;
+    re-invoking the registered callable is a consumer re-reading that
+    sink, not a reason to replay the whole stream. So each stream id
+    memoizes its result behind ``localCheckpoint(eager=True)``: the
+    first call per (app, sf) pays the full run (cold costs in
+    BASELINE.md §stream-tier), later calls cost a block fetch; values,
+    schema and hashes are unchanged. Evicting for any ``stream_`` id
+    clears every stream result."""
+    return qid.startswith("stream_")
 
-
-def _register_stream_evictor() -> None:
-    from kdcloganalyzer_spark import appcache
-
-    appcache.register_evictor(
-        lambda qid: qid.startswith("stream_"),
-        _STREAM_RESULT_CACHE.clear,
-    )
-
-
-_register_stream_evictor()
-
-
-def _amortized(fn):
-    """Wrap a registered streaming query with the per-(appId, sf) result
-    cache. ``localCheckpoint(eager=True)`` pins the materialized rows so
-    re-reads cost a block fetch, never a stream replay; values, schema,
-    and hashes are unchanged (the driver gate and the oracle compare see
-    the same rows either way)."""
-    import functools
-
-    from kdcloganalyzer_spark import appcache
-
-    @functools.wraps(fn)
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, sf_dir, fn.__name__)
-        appcache.evict_stale(_STREAM_RESULT_CACHE, spark)
-        if key not in _STREAM_RESULT_CACHE:
-            _STREAM_RESULT_CACHE[key] = fn(spark, sf_dir).localCheckpoint(
-                eager=True
-            )
-        return _STREAM_RESULT_CACHE[key]
-
-    return wrapper
 
 #: Columns every sessionizer variant emits, in registration order (the
 #: records parquet additionally carries the ``enctypes`` array).
@@ -140,10 +108,10 @@ def tail_twin_records_parquet(spark: SparkSession, sf_dir: str) -> str:
     FROM events GROUP BY 1, 2
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-day tumbling window × event_type aggregation."""
-    return SQ.tumbling_window_agg(spark, sf_dir)
+    return SQ.tumbling_window_agg(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -161,10 +129,10 @@ def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) GROUP BY 1
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming 2-day/1-day sliding window aggregation."""
-    return SQ.sliding_window_agg(spark, sf_dir)
+    return SQ.sliding_window_agg(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -191,10 +159,10 @@ def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY user_id, sid
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-user session windows (30-minute inactivity gap)."""
-    return SQ.session_window_agg(spark, sf_dir)
+    return SQ.session_window_agg(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -209,13 +177,13 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY user_id
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary-state streaming aggregation (applyInPandasWithState):
     per-user running counters in executor state, update-mode emissions.
     Oracle-checkable because the bounded stream's final state per user
     must equal the batch GROUP BY."""
-    return SQ.stateful_user_counts(spark, sf_dir)
+    return SQ.stateful_user_counts(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -228,12 +196,12 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast enrichment join + segment aggregation;
     bounded complete-mode result equals the batch LEFT JOIN the oracle
     computes (unmatched users aggregate under the NULL segment)."""
-    return SQ.static_join_agg(spark, sf_dir)
+    return SQ.static_join_agg(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -247,20 +215,20 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream range join (clicks ⋈ purchases within
     1 hour, per user); bounded inner-join emissions equal the batch
     range join."""
-    return SQ.stream_stream_join(spark, sf_dir)
+    return SQ.stream_stream_join(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query("stream_watermark_late_drop")
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-driven late-data drop (append mode, two ordered
     micro-batches; rows-only — output is watermark-order-defined)."""
-    return SQ.watermark_late_drop(spark, sf_dir)
+    return SQ.watermark_late_drop(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -270,7 +238,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM read_parquet('{DRIVER_RECORDS_GLOB}')
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming multi-line KDC sessionizer (file-granular micro-batches
     via foreachBatch). Hash-verified against the materialized records
@@ -281,7 +249,8 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kdcloganalyzer_spark.plans.kdc_queries import kdc_records_parquet
 
     kdc_records_parquet(spark, sf_dir)  # oracle twin
-    return SQ.stream_sessionize_kdc(spark, synth_dir_for_sf(sf_dir))
+    df = SQ.stream_sessionize_kdc(spark, synth_dir_for_sf(sf_dir))
+    return df.localCheckpoint(eager=True)
 
 
 @query(
@@ -292,7 +261,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM read_parquet('{DRIVER_TAIL_RECORDS_GLOB}')
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_sessionize_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionizer for a GROWING single file (`tail -f`):
     applyInPandasWithState carries the partial-record tail across
@@ -318,7 +287,7 @@ def stream_sessionize_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.withColumn(
         "enctypes", F.concat_ws("|", F.col("enctypes"))
-    )
+    ).localCheckpoint(eager=True)
 
 
 @query(
@@ -330,7 +299,7 @@ def stream_sessionize_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY user_id
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-fired EVENT-TIME STATE TIMEOUTS: idle per-user session
     state closed by the watermark (applyInPandasWithState +
@@ -342,7 +311,8 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, which is what a timeout reaper closing EVERY idle
     session means (streaming/stream_queries.py:
     session_timeout_closures)."""
-    return SQ.session_timeout_closures(spark, sf_dir)
+    df = SQ.session_timeout_closures(spark, sf_dir)
+    return df.localCheckpoint(eager=True)
 
 
 @query(
@@ -354,12 +324,12 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY event_type
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup of a twice-replayed source: state-store
     dropDuplicates under a watermark collapses the replay to one copy;
     the oracle aggregates the single original."""
-    return SQ.stream_dedup_events(spark, sf_dir)
+    return SQ.stream_dedup_events(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -377,17 +347,17 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r WHERE rn = 1
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming keyed-upsert sink: foreachBatch merges each micro-batch's
     per-user aggregate (latest event, additive count) into a keyed
     parquet table across two disjoint micro-batches; the converged table
     equals the batch latest-per-user query the oracle computes."""
-    return SQ.foreach_batch_upsert(spark, sf_dir)
+    return SQ.foreach_batch_upsert(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query("stream_count_min_sketch", oracle=CMS_ORACLE)
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CMS: cell counts maintained as a stateful streaming
     aggregation (d×w = 1024 state rows total, regardless of stream
@@ -400,7 +370,7 @@ def stream_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cells = SQ.cms_stream_cells(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events").select("event_type")
-    return cms_estimate_vs_exact(cells, ev)
+    return cms_estimate_vs_exact(cells, ev).localCheckpoint(eager=True)
 
 
 @query(
@@ -409,14 +379,14 @@ def stream_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, count(*) AS n FROM events GROUP BY event_type
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State-store-as-a-table (Spark 4 state data source): a stateful
     streaming count runs to a checkpoint, then the ENGINE'S state store
     is read back as a batch DataFrame and hash-verified against the
     plain batch GROUP BY — the checkpoint-audit / state-rehydration
     surface (streaming/stream_queries.py:state_store_counts)."""
-    return SQ.state_store_counts(spark, sf_dir)
+    return SQ.state_store_counts(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -430,11 +400,11 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 1, 2
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_union_two_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two file streams unioned into one windowed aggregation (bounded
     run ≡ the batch per-day × parity-feed aggregation)."""
-    return SQ.union_two_sources_agg(spark, sf_dir)
+    return SQ.union_two_sources_agg(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -448,11 +418,12 @@ def stream_union_two_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY prefix
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_binaryfile_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming binaryFile intake manifest (bounded run ≡ the batch
     per-prefix file/byte census over the same staged assets)."""
-    return SQ.binaryfile_manifest_stream(spark, sf_dir)
+    df = SQ.binaryfile_manifest_stream(spark, sf_dir)
+    return df.localCheckpoint(eager=True)
 
 
 @query(
@@ -466,7 +437,7 @@ def stream_binaryfile_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING count(*) >= 3
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_kdc_failed_auth_alert(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -478,7 +449,7 @@ def stream_kdc_failed_auth_alert(
     kdc_records_parquet(spark, sf_dir)  # oracle twin
     return SQ.kdc_failed_auth_alert_stream(
         spark, synth_dir_for_sf(sf_dir)
-    )
+    ).localCheckpoint(eager=True)
 
 
 @query(
@@ -499,7 +470,7 @@ def stream_kdc_failed_auth_alert(
     ) WHERE rk <= 3
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-day top-3 event types: mergeable counts aggregate
     in the stream (watermark-bounded state), rank-and-cut runs batch on
@@ -508,7 +479,7 @@ def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer ranks the tiny summary). Oracle: the bounded stream's final
     counts must equal the batch GROUP BY, so the ranked cut is
     deterministic under the (n DESC, event_type) total order."""
-    return SQ.windowed_topk_types(spark, sf_dir)
+    return SQ.windowed_topk_types(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -520,7 +491,7 @@ def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY event_type
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_dedup_within_watermark(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -530,7 +501,8 @@ def stream_dedup_within_watermark(
     grows with the key universe. Same doubled feed and oracle as
     stream_dedup_exact: the two ids differ only in the state-eviction
     contract, which is exactly the 100 TB difference."""
-    return SQ.stream_dedup_events_within_watermark(spark, sf_dir)
+    df = SQ.stream_dedup_events_within_watermark(spark, sf_dir)
+    return df.localCheckpoint(eager=True)
 
 
 @query(
@@ -570,7 +542,7 @@ def stream_dedup_within_watermark(
     FROM s GROUP BY user_id
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_rate_limit_alert(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -582,7 +554,8 @@ def stream_rate_limit_alert(
     mode backtest of the same policy. A hash match between the
     sequential stateful replay and the window closed form proves the
     two implementations compute the same function."""
-    return SQ.stream_rate_limit_keeper(spark, sf_dir)
+    df = SQ.stream_rate_limit_keeper(spark, sf_dir)
+    return df.localCheckpoint(eager=True)
 
 
 @query(
@@ -614,7 +587,7 @@ def stream_rate_limit_alert(
     FROM w
     """,
 )
-@_amortized
+@appcache.memo(readers=_stream_ids)
 def stream_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of events_bollinger_bands: mergeable per-day
     counts aggregate in the stream (watermark-bounded state), the
@@ -622,4 +595,5 @@ def stream_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily summary — the stream/serving split production monitors use
     (a rolling frame across CLOSED windows is not a streaming
     aggregation). Hash-verified against the batch id's oracle."""
-    return SQ.windowed_bollinger_bands(spark, sf_dir)
+    df = SQ.windowed_bollinger_bands(spark, sf_dir)
+    return df.localCheckpoint(eager=True)

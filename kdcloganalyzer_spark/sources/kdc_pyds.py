@@ -29,11 +29,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-_REGISTERED: set[str] = set()
+from kdcloganalyzer_spark import appcache
 
 
 def read_kdc_python_source(spark: SparkSession, log_dir: str) -> DataFrame:
     """Read a KDC log directory through the registered Python data source."""
+    _register_source(spark)
+    return spark.read.format("kdclog").option("path", log_dir).load()
+
+
+# Readers not declared: a registration, not data.
+@appcache.memo(readers=None)
+def _register_source(spark: SparkSession) -> None:
+    """Register format("kdclog") with the live session, once per app."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceReader,
@@ -209,12 +217,4 @@ def read_kdc_python_source(spark: SparkSession, log_dir: str) -> DataFrame:
                 # trailing incomplete record dropped (reader:317-320,
                 # by design — B2 applies to split handling, not EOF)
 
-    # keyed on applicationId, not id(spark): CPython can reuse a stopped
-    # session's id for a new one, which would skip re-registration
-    key = spark.sparkContext.applicationId
-    if key not in _REGISTERED:
-        spark.dataSource.register(KDCLogDataSource)
-        _REGISTERED.add(key)
-    return (
-        spark.read.format("kdclog").option("path", log_dir).load()
-    )
+    spark.dataSource.register(KDCLogDataSource)

@@ -30,28 +30,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
+from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.schemas import DRIVER_TABLES
 
-#: Spark-inferred read schemas, keyed (applicationId, path) — METADATA
-#: only, never data or results. Passing the schema back to
-#: ``spark.read.schema(...)`` skips the JVM-side footer
-#: inference a bare ``spark.read.parquet`` repeats on every call
-#: (measured 0.09 s → 0.018 s per load at sf0.1; queries load 2-7
-#: tables, so the saving is per-query-construction-sized, guide §1.2).
-#: App-scoped like every other cache here (evict_stale). Deliberately
-#: NOT in the eviction registry: the registry exists so the bench's
-#: min-of-N COLD protocol can re-pay amortized DATA/INDEX builds, and a
-#: registered evictor marks its consumer ids as amortized (min-of-3
-#: cold loop). Schema metadata is the same class as the
-#: _nano_ts_columns footer cache below (never registered): it exists on
-#: any warm cluster catalog, costs ~0.08 s to rebuild, and caching it
-#: changes no query's data path.
-_SCHEMA_CACHE: dict = {}
+# Readers not declared: the bench's min-of-N COLD protocol re-pays
+# amortized DATA/INDEX builds, and a declared reader marks its consumer
+# ids as amortized (min-of-3 cold loop). A read schema is METADATA only,
+# the same class as the _nano_ts_columns footer cache below: it exists on
+# any warm cluster catalog, costs ~0.08 s to rebuild, and caching it
+# changes no query's data path.
+@appcache.memo(readers=None)
+def _read_schema(spark: SparkSession, path: str):
+    """Spark's inferred read schema of ``path``. Passing it back to
+    ``spark.read.schema(...)`` skips the JVM-side footer inference a bare
+    ``spark.read.parquet`` repeats on every call (measured 0.09 s →
+    0.018 s per load at sf0.1; queries load 2-7 tables, so the saving is
+    per-query-construction-sized, guide §1.2)."""
+    return spark.read.parquet(path).schema
 
-#: applicationIds whose session confs (UTC timezone / nanosAsLong) are
-#: already pinned — each pin is a py4j round trip per load_table call
-#: otherwise. Same metadata class as _SCHEMA_CACHE.
-_CONF_PINNED: dict = {}
+
+# Readers not declared: a pinned session conf is not data (same class as
+# _read_schema); pinning once saves a py4j round trip per load_table.
+@appcache.memo(readers=None)
+def _pin_conf(spark: SparkSession, key: str, value: str) -> None:
+    spark.conf.set(key, value)
 
 
 @lru_cache(maxsize=256)
@@ -73,14 +75,9 @@ def ensure_utc_session(spark: SparkSession) -> None:
     calls this ONCE up front. Unconditional — not keyed on whether an NTZ
     column happens to be present — so behavior is uniform across testdata
     generations, and pure-transform helpers like normalize_ts stay free
-    of session-state side effects. Memoized per applicationId (nothing
-    in this repo re-flips the session timezone; the memo is cleared with
-    the schema cache on cold eviction)."""
-    app = spark.sparkContext.applicationId
-    pinned = _CONF_PINNED.setdefault(app, set())
-    if "tz" not in pinned:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        pinned.add("tz")
+    of session-state side effects. Pinned once per app (nothing in
+    this repo re-flips the session timezone)."""
+    _pin_conf(spark, "spark.sql.session.timeZone", "UTC")
 
 
 def normalize_ts(df: DataFrame, *cols: str, schema=None) -> DataFrame:
@@ -119,29 +116,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nano_cols = _nano_ts_columns(path)
     if nano_cols:
         # Runtime-settable; applied here so the loader works under any
-        # SparkSession (the driver builds its own). Pinned once per app
-        # (the memo clears with the schema cache on cold eviction).
-        pinned = _CONF_PINNED.setdefault(
-            spark.sparkContext.applicationId, set()
-        )
-        if "nanos" not in pinned:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            pinned.add("nanos")
-    from kdcloganalyzer_spark import appcache
-
-    appcache.evict_stale(_SCHEMA_CACHE, spark)
-    key = (spark.sparkContext.applicationId, path)
-    cached = _SCHEMA_CACHE.get(key)
-    if cached is None:
-        df = spark.read.parquet(path)
-        # df.schema round-trips the JVM once; every later load of this
-        # path skips inference entirely. A fresh DataFrame (fresh
-        # attribute ids) is still built per call, so self-joins of two
-        # load_table results stay unambiguous.
-        _SCHEMA_CACHE[key] = df.schema
-    else:
-        df = spark.read.schema(cached).parquet(path)
-    schema = _SCHEMA_CACHE[key]
+        # SparkSession (the driver builds its own). Pinned once per app.
+        _pin_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
+    # A fresh DataFrame (fresh attribute ids) is built per call, so
+    # self-joins of two load_table results stay unambiguous.
+    schema = _read_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     ts_cols = [
         f.name
         for f in schema.fields

@@ -1,5 +1,5 @@
-"""Property tests for the streaming `_amortized` result cache
-(plans/streaming_queries.py) — VERDICT r12 item 6.
+"""Property tests for the streaming result memos
+(plans/streaming_queries.py, ``appcache.memo``) — VERDICT r12 item 6.
 
 The cache is the amortization contract the bench's steady numbers rest
 on, so its invariants get pinned mechanically:
@@ -9,15 +9,13 @@ on, so its invariants get pinned mechanically:
 2. the cache key carries sf_dir — two scales must produce two distinct
    entries with their own results (this test FAILS if the key ever
    drops sf_dir: the second scale would serve the first scale's rows);
-3. `appcache.evict_stale` drops dead-app entries on the next call, so a
-   session bounce can never serve a frame whose JVM-side blocks died
-   with the old app.
+3. the memo drops dead-app entries on the next call, so a session
+   bounce can never serve a frame whose JVM-side blocks died with the
+   old app.
 """
 
 from __future__ import annotations
 
-import kdcloganalyzer_spark.plans.streaming_queries as PS
-from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.plans import registry
 
 registry.load_all()
@@ -32,10 +30,10 @@ def _rows(df):
 def test_second_invocation_identical_and_cached(spark, sf_dir):
     fn = registry.QUERIES[CHEAP_ID]
     first = _rows(fn(spark, sf_dir))
-    key = (spark.sparkContext.applicationId, sf_dir, CHEAP_ID)
-    assert key in PS._STREAM_RESULT_CACHE, (
-        "amortized id did not populate the result cache under the "
-        "(appId, sf_dir, qid) key"
+    key = (spark.sparkContext.applicationId, sf_dir)
+    assert key in fn.cache, (
+        "amortized id did not populate its result memo under the "
+        "(appId, sf_dir) key"
     )
     assert _rows(fn(spark, sf_dir)) == first
 
@@ -46,8 +44,8 @@ def test_cache_key_carries_sf_dir(spark, sf_dir):
     other_sf = "/root/testdata/sf0.01"
     bigger = _rows(fn(spark, other_sf))
     app = spark.sparkContext.applicationId
-    assert (app, sf_dir, CHEAP_ID) in PS._STREAM_RESULT_CACHE
-    assert (app, other_sf, CHEAP_ID) in PS._STREAM_RESULT_CACHE
+    assert (app, sf_dir) in fn.cache
+    assert (app, other_sf) in fn.cache
     # sf0.01 has 10x the events of sf0.001: identical results would mean
     # the cache served a stale scale's frame.
     assert small != bigger
@@ -58,14 +56,12 @@ def test_evict_stale_drops_dead_app_entries(spark, sf_dir):
     fn = registry.QUERIES[CHEAP_ID]
     fn(spark, sf_dir)  # ensure one live entry exists
     app = spark.sparkContext.applicationId
-    live_key = (app, sf_dir, CHEAP_ID)
-    dead_key = ("app-DEAD-0000", sf_dir, CHEAP_ID)
-    PS._STREAM_RESULT_CACHE[dead_key] = PS._STREAM_RESULT_CACHE[live_key]
-    appcache.evict_stale(PS._STREAM_RESULT_CACHE, spark)
-    assert dead_key not in PS._STREAM_RESULT_CACHE
-    assert live_key in PS._STREAM_RESULT_CACHE
-    # the wrapper itself evicts before lookup, so a dead entry can never
-    # be served even if evict_stale were not called explicitly
-    PS._STREAM_RESULT_CACHE[dead_key] = PS._STREAM_RESULT_CACHE[live_key]
-    fn(spark, sf_dir)
-    assert dead_key not in PS._STREAM_RESULT_CACHE
+    live_key = (app, sf_dir)
+    dead_key = ("app-DEAD-0000", sf_dir)
+    live = fn.cache[live_key]
+    fn.cache[dead_key] = live
+    # the memo drops dead-app entries before its lookup, so a dead entry
+    # can never be served, and the live one is still a hit
+    assert fn(spark, sf_dir) is live
+    assert dead_key not in fn.cache
+    assert live_key in fn.cache

@@ -16,6 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
 from kdcloganalyzer_spark import appcache  # noqa: E402
 from kdcloganalyzer_spark.plans import (  # noqa: E402
+    analytics as an,
     kdc_queries as kq,
     llm_pipeline as lp,
     round11_ops as r11,
@@ -25,9 +26,13 @@ from kdcloganalyzer_spark.plans import (  # noqa: E402
 
 
 def test_evict_amortized_clears_stream_cache():
-    sq._STREAM_RESULT_CACHE[("app", "sf", "q")] = object()
+    """Any stream_ id clears every stream-result memo, as the one shared
+    stream cache was cleared before."""
+    for fn in (sq.stream_window_tumbling, sq.stream_bollinger_bands):
+        fn.cache[("app", "sf")] = object()
     assert bench._evict_amortized("stream_window_tumbling") is True
-    assert sq._STREAM_RESULT_CACHE == {}
+    assert sq.stream_window_tumbling.cache == {}
+    assert sq.stream_bollinger_bands.cache == {}
 
 
 def test_evict_amortized_covers_the_batch_amortized_ids():
@@ -35,10 +40,10 @@ def test_evict_amortized_covers_the_batch_amortized_ids():
     must each be evictable, and eviction must actually drain the cache
     that serves them."""
     cases = [
-        ("embed_pca_power_iteration", r12._PCA_CACHE),
-        ("graph_hits_bipartite", r12._HITS_CACHE),
-        ("sample_coreset_kcenter", r12._CORESET_CACHE),
-        ("agg_enctype_dim", kq._CACHE),
+        ("embed_pca_power_iteration", r12.embed_pca_power_iteration.cache),
+        ("graph_hits_bipartite", r12.graph_hits_bipartite.cache),
+        ("sample_coreset_kcenter", r12.sample_coreset_kcenter.cache),
+        ("agg_enctype_dim", kq._persisted_records.cache),
         # join_bucketed's cache is the Spark catalog (needs a session);
         # its registration is covered by the registry test below.
     ]
@@ -52,14 +57,14 @@ def test_evictor_registry_has_index_and_staging_hooks():
     """The shared index caches named by VERDICT r13 item 2 are each
     behind a registered evictor keyed to their consumer ids."""
     for qid, cache in [
-        ("sim_search_ivf", lp._IVF_CACHE),
-        ("sim_search_pq", lp._PQ_CACHE),
-        ("sim_search_ivfpq", lp._IVFPQ_CACHE),
-        ("dedup_embedding_cosine", lp._PIVOT_CACHE),
-        ("text_bpe_train_merges", r11._BPE_MERGE_CACHE),
-        ("pipeline_bpe_tokenize", r11._BPE_MERGE_CACHE),
-        ("graph_community_modularity", r11._LP3_CACHE),
-        ("scan_csv_multiline_quoted", r11._MLCSV_CACHE),
+        ("sim_search_ivf", lp._ivf_index.cache),
+        ("sim_search_pq", lp._pq_index.cache),
+        ("sim_search_ivfpq", lp._ivfpq_corpus.cache),
+        ("dedup_embedding_cosine", lp._pivot_index.cache),
+        ("text_bpe_train_merges", r11._bpe_merges.cache),
+        ("pipeline_bpe_tokenize", r11._bpe_merges.cache),
+        ("graph_community_modularity", r11._lp3_labels.cache),
+        ("scan_csv_multiline_quoted", r11._multiline_csv.cache),
     ]:
         cache[("app", "sf")] = object()
         assert appcache.evict_for(qid) is True, qid
@@ -82,15 +87,14 @@ def test_kdc_module_matcher_scopes_to_kdc_ids():
     from kdcloganalyzer_spark.plans import registry
 
     registry.load_all()
-    m = appcache.module_ids_matcher(
-        "kdcloganalyzer_spark.plans.kdc_queries"
-    )
+    assert kq._persisted_records.readers == kq.__name__
+    m = appcache._matcher(kq._persisted_records.readers)
     assert m("agg_enctype_dim") and m("kdc_password_spray")
     assert not m("join_bucketed") and not m("nonexistent_id")
 
 
 def test_unpersist_called_on_evicted_dataframes():
-    """dict_cache_evictor must best-effort unpersist DataFrame values,
+    """The memo evictor must best-effort unpersist DataFrame values,
     including tuple-packed ones (the ANN caches store (df, codebook))."""
 
     class FakeDF:
@@ -104,7 +108,7 @@ def test_unpersist_called_on_evicted_dataframes():
     a, b = FakeDF(), FakeDF()
     cache["k1"] = a
     cache["k2"] = (b, [1, 2, 3])
-    appcache.dict_cache_evictor(cache)()
+    appcache._dict_cache_evictor(cache)()
     assert cache == {} and a.unpersisted and b.unpersisted
 
 
@@ -143,7 +147,7 @@ def test_failed_unpersist_is_logged(caplog):
 
     cache = {"k": BrokenDF()}
     with caplog.at_level(logging.WARNING, logger="kdcloganalyzer_spark"):
-        appcache.dict_cache_evictor(cache)()
+        appcache._dict_cache_evictor(cache)()
     assert cache == {}
     assert [r.exc_info[1].args for r in caplog.records] == [("gone",)]
 
@@ -174,15 +178,27 @@ def test_every_registered_evictor_matches_a_live_qid():
 def test_edge_cache_evictors_registered():
     """ADVICE r14: the shared graph edge caches must be behind
     registered evictors so graph ids get genuine min-of-3 cold."""
-    from kdcloganalyzer_spark.plans import analytics as an
-
     for qid, cache in [
-        ("graph_pagerank", an._EDGE_CACHE),
-        ("graph_triangle_count", an._COPART_EDGE_CACHE),
+        ("graph_pagerank", an._coorder_edges.cache),
+        ("graph_triangle_count", an._copart_edges.cache),
     ]:
         cache[("app", "sf")] = object()
         assert appcache.evict_for(qid) is True, qid
         assert cache == {}, qid
+
+
+def test_evict_amortized_logs_and_returns_false_on_failure(monkeypatch, caplog):
+    """A raising eviction registry must not kill the bench: the id keeps
+    its single cold sample, and the failure is logged once."""
+
+    def broken(qid):
+        raise RuntimeError("registry exploded")
+
+    monkeypatch.setattr(appcache, "evict_for", broken)
+    with caplog.at_level(logging.WARNING):
+        assert bench._evict_amortized("stream_window_tumbling") is False
+    (rec,) = caplog.records
+    assert rec.exc_info and "registry exploded" in str(rec.exc_info[1])
 
 
 def test_local_table_guard_prefers_calmer_table(tmp_path, monkeypatch):

@@ -8,9 +8,14 @@ the full 405-id suite. Prints one JSON line per id.
 runs 2-3 flags generated code that changes from run to run (a literal
 that differs per build) or a codegen cache too small for the ids run.
 
+An id that raises is recorded as ``{"error": ...}`` and the run goes on,
+so one scale rehearsal can time a whole id list above the broadcast
+gates (tools/build_sf1.py / build_sf3.py build the datasets).
+
 Usage:
     python tools/bench_ids.py <id> [<id> ...]
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/bench_ids.py ...
+    SPARK_GRAFT_SF_DIR=/tmp/rehearsal/sf1 python tools/bench_ids.py ...
 
 Same env contract as bench.py (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS).
 Not part of the driver contract — a developer tool only.
@@ -48,18 +53,22 @@ def main() -> None:
         fn = registry.QUERIES[qid]
         spark.sparkContext.setJobDescription(f"bench_ids: {qid}")
         runs, compiles = [], []
-        for _ in range(3):
-            c0 = codegen_compiles(spark)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            compiles.append(codegen_compiles(spark) - c0)
-        out[qid] = {
-            "min": round(min(runs), 3),
-            "median": round(sorted(runs)[1], 3),
-            "runs": [round(r, 3) for r in runs],
-            "compiles": compiles,
-        }
+        try:
+            for _ in range(3):
+                c0 = codegen_compiles(spark)
+                t0 = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                runs.append(time.perf_counter() - t0)
+                compiles.append(codegen_compiles(spark) - c0)
+            out[qid] = {
+                "min": round(min(runs), 3),
+                "median": round(sorted(runs)[1], 3),
+                "runs": [round(r, 3) for r in runs],
+                "compiles": compiles,
+            }
+        except Exception as ex:  # noqa: BLE001 — e.g. an OOM above a gate
+            # one failing id must not end a scale rehearsal of the rest
+            out[qid] = {"error": f"{type(ex).__name__}: {str(ex)[:200]}"}
         print(json.dumps({qid: out[qid]}), flush=True)
     spark.sparkContext.setJobDescription(None)
     print(json.dumps({"all": out}))
