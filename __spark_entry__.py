@@ -11,6 +11,7 @@ the registry to the driver's interface.
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 import sys
@@ -83,27 +84,18 @@ def _gate_order(ids: list[str]) -> list[str]:
     (a capped gate would otherwise never revisit them — ADVICE r2).
     """
     import glob
-    import json
 
     latest: dict[str, dict] = {}
     seen_round: dict[str, int] = {}
     for rnd, p in enumerate(
         sorted(glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")))
     ):
-        try:
-            with open(p) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
+        rows, _ = _load_state(p)
         latest.update(rows)
         for q in rows:
             seen_round[q] = rnd
-    cost: dict[str, float] = {}
-    try:
-        with open(os.path.join(_HERE, "BENCH_LOCAL.json")) as f:
-            cost = json.load(f)["queries"]
-    except (OSError, ValueError, KeyError):
-        pass
+    bench, _ = _load_state(os.path.join(_HERE, "BENCH_LOCAL.json"))
+    cost: dict[str, float] = bench.get("queries", {})
 
     def failed(row: dict) -> bool:
         return (
@@ -124,16 +116,12 @@ def _gate_order(ids: list[str]) -> list[str]:
     import hashlib
 
     this_round = len(glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")))
+    # An unreadable state file keeps its history on disk: nothing is
+    # re-fingerprinted (so nothing is re-queued) and it is not rewritten.
     fp_path = os.path.join(_HERE, "GATE_ORACLE_FP.json")
-    fp_state: dict[str, dict] = {}
-    try:
-        with open(fp_path) as f:
-            fp_state = json.load(f)
-    except (OSError, ValueError):
-        pass
-
+    fp_state, fp_ok = _load_state(fp_path)
     fp_dirty = False
-    for q in ids:
+    for q in ids if fp_ok else ():
         fp = hashlib.md5(
             ORACLES.get(q, "").encode("utf-8")
         ).hexdigest()[:16]
@@ -142,13 +130,7 @@ def _gate_order(ids: list[str]) -> list[str]:
             fp_state[q] = {"fp": fp, "round": this_round}
             fp_dirty = True
     if fp_dirty:
-        try:  # best-effort persistence; ordering must never break the gate
-            tmp = fp_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(fp_state, f, indent=0, sort_keys=True)
-            os.replace(tmp, fp_path)
-        except OSError:
-            pass
+        _save_state(fp_path, fp_state)
 
     def oracle_changed_since_cert(q: str) -> bool:
         st = fp_state.get(q)
@@ -180,23 +162,12 @@ def _gate_order(ids: list[str]) -> list[str]:
     # never-certified ids OLDEST-first; a new id can never again outrank
     # an id that has waited a round longer.
     fs_path = os.path.join(_HERE, "GATE_FIRST_SEEN.json")
-    first_seen: dict[str, int] = {}
-    try:
-        with open(fs_path) as f:
-            first_seen = json.load(f)
-    except (OSError, ValueError):
-        pass
+    first_seen, fs_ok = _load_state(fs_path)
     unseen = [q for q in ids if q not in first_seen]
-    if unseen:
+    if unseen and fs_ok:
         for q in unseen:
             first_seen[q] = this_round
-        try:  # best-effort persistence; ordering must never break the gate
-            tmp = fs_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(first_seen, f, indent=0, sort_keys=True)
-            os.replace(tmp, fs_path)
-        except OSError:
-            pass
+        _save_state(fs_path, first_seen)
 
     by_cost = sorted(ids, key=lambda q: (cost.get(q, 0.5), q))
     urgent = [q for q in by_cost if needs_first_check(q)]
@@ -249,6 +220,35 @@ def _gate_order(ids: list[str]) -> list[str]:
         if nxt is not None:
             out.append(nxt)
     return out
+
+
+def _load_state(path: str) -> tuple[dict, bool]:
+    """``(state, writable)`` for a gate JSON file. A missing file is an
+    empty, writable state; an unparsable one is logged and read as empty
+    but must not be overwritten, so its history survives for repair."""
+    try:
+        with open(path) as f:
+            state = json.load(f)
+    except OSError:
+        return {}, True
+    except ValueError:
+        log.warning("unreadable gate state %s; left as is", path, exc_info=True)
+        return {}, False
+    if not isinstance(state, dict):
+        log.warning("gate state %s is not an object; left as is", path)
+        return {}, False
+    return state, True
+
+
+def _save_state(path: str, state: dict) -> None:
+    """Best-effort atomic write: ordering must never break the gate."""
+    try:
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(state, f, indent=0, sort_keys=True)
+        os.replace(tmp, path)
+    except OSError:
+        log.warning("could not write gate state %s", path, exc_info=True)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -25,11 +25,42 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans.registry import query
-from kdcloganalyzer_spark.sources.tables import load_table
+from kdcloganalyzer_spark.sources.tables import cents, load_table
 
 log = logging.getLogger(__name__)
 
 _GAP_MIN = 30
+
+
+def hll_estimate(col: str) -> F.Column:
+    """``_est``: the lgK=14 HLL distinct-count estimate of ``col``, an
+    aggregate."""
+    return F.hll_sketch_estimate(
+        F.hll_sketch_agg(F.col(col), F.lit(14))
+    ).alias("_est")
+
+
+def hll_in_envelope(
+    exact: str, est: str = "_est", floor=3.0, rel: float = 0.025
+) -> F.Column:
+    """TRUE iff the sketch estimate column ``est`` lies within
+    max(``floor``, ``rel`` × exact) of the exact count ``exact``. A
+    lgK=14 HLL has RSE ≈ 0.81%, so the default 2.5% is ≈ 3σ; ``floor``
+    may be a Column."""
+    return F.abs(F.col(est).cast("double") - F.col(exact)) <= F.greatest(
+        F.lit(floor), rel * F.col(exact)
+    )
+
+
+def _gap_session_id(w) -> F.Column:
+    """Running count of session starts over ``w`` (a per-user, time-ordered
+    window): an event opens a session when it is the user's first or
+    follows the previous one by more than ``_GAP_MIN`` minutes."""
+    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
+    new_sess = F.when(
+        gap_us.isNull() | (gap_us > _GAP_MIN * 60 * 1_000_000), 1
+    ).otherwise(0)
+    return F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0))
 
 
 # ---------------------------------------------------------------------------
@@ -72,17 +103,8 @@ def sessionize_events_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     are gap-0 and land in the same session, so output is order-stable."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts")
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us > _GAP_MIN * 60 * 1_000_000), 1
-    ).otherwise(0)
     sess = ev.select(
-        "user_id",
-        "ts",
-        F.sum(new_sess)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("int")
-        .alias("sess_id"),
+        "user_id", "ts", _gap_session_id(w).cast("int").alias("sess_id")
     )
     return sess.groupBy("user_id", "sess_id").agg(
         F.min("ts").alias("sess_start"),
@@ -491,9 +513,7 @@ def rollup_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
     ).agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_value_c"),
+        F.sum(cents("value")).cast("bigint").alias("sum_value_c"),
     )
     b = h.groupBy("event_type").agg(
         F.min("hour").alias("lo"), F.max("hour").alias("hi")
@@ -830,7 +850,7 @@ def events_markov_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Triangle counting over the part co-order graph
 # ---------------------------------------------------------------------------
 #: Shared by graph_triangle_count and its shuffle-regime twin
-#: (plans/round13_ops.py) — identical triangle set by construction.
+#: graph_triangle_count_shuffle — identical triangle set by construction.
 TRIANGLE_ORACLE = """
     WITH e AS (
       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -853,7 +873,9 @@ TRIANGLE_ORACLE = """
 
 
 @query("graph_triangle_count", oracle=TRIANGLE_ORACLE)
-def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+def graph_triangle_count(
+    spark: SparkSession, sf_dir: str, **gate: int
+) -> DataFrame:
     """Top-20 parts by triangle participation in the part co-order graph
     (an edge per distinct part pair sharing an order) — the clustering /
     community-density primitive alongside graph_pagerank's centrality
@@ -868,15 +890,36 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     an algebraic identity check between the two formulations. The edge
     list is cached per (session, sf) like the PageRank graph and the
     ANN quantizers — the wedge+closing pipeline (the per-run cost) is
-    exchange-free until its final tiny aggregate."""
+    exchange-free until its final tiny aggregate. ``gate`` passes
+    ``broadcast_max_edges`` through to ``triangle_counts``."""
     from kdcloganalyzer_spark.operators.graph import triangle_counts
 
     edges = _copart_edges(spark, sf_dir)
     return (
-        triangle_counts(edges, materialized=True)
+        triangle_counts(edges, materialized=True, **gate)
         .orderBy(F.desc("tri_n"), F.asc("node"))
         .limit(20)
     )
+
+
+@query("graph_triangle_count_shuffle", oracle=TRIANGLE_ORACLE)
+def graph_triangle_count_shuffle(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """TRIANGLE COUNTS, SHUFFLE REGIME — ``triangle_counts`` with the
+    broadcast gate forced shut, so the plan is the generic
+    last-reducer-safe layout a 100 TB graph actually runs: oriented
+    wedges and the closing edge set exchanged as volume-sized
+    co-partitioned equi-joins (operators/graph.py above-gate path; the
+    r13 sf1 audit sized those exchanges to the counted edge volume
+    after measuring the session-default width 2.2x slower). Same
+    oracle as ``graph_triangle_count`` — the two regimes must produce
+    the identical triangle set, which makes this id the standing
+    hash-verified receipt for the scale path (previously the shuffle
+    regime was only ever exercised off-bench at sf1). The edge cache
+    is shared with the broadcast twin, so the bench prices exactly the
+    regime difference."""
+    return graph_triangle_count(spark, sf_dir, broadcast_max_edges=0)
 
 
 @appcache.memo(
@@ -1072,6 +1115,22 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # RFM segmentation
 # ---------------------------------------------------------------------------
+def _rfm_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user (r_days, freq, monetary_cents), recency counted from the
+    corpus max timestamp (a 1-row control collect)."""
+    ev = load_table(spark, sf_dir, "events")
+    mx_us = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
+    return ev.groupBy("user_id").agg(
+        F.expr(f"({mx_us}L - unix_micros(max(ts))) div 86400000000").alias(
+            "r_days"
+        ),
+        F.count("*").alias("freq"),
+        F.sum(F.round(F.col("value") * 100)).cast("bigint").alias(
+            "monetary_cents"
+        ),
+    )
+
+
 @query(
     "events_rfm_segmentation",
     oracle="""
@@ -1110,17 +1169,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort into a broadcast of 3 cut values). The corpus max ts is
     a 1-row aggregate collected driver-side (bounded control data — the
     sanctioned scalar pattern, never a BNLJ 1-row join)."""
-    ev = load_table(spark, sf_dir, "events")
-    mx_us = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
-    u = ev.groupBy("user_id").agg(
-        F.expr(f"({mx_us}L - unix_micros(max(ts))) div 86400000000").alias(
-            "r_days"
-        ),
-        F.count("*").alias("freq"),
-        F.sum(F.round(F.col("value") * 100)).cast("bigint").alias(
-            "monetary_cents"
-        ),
-    )
+    u = _rfm_users(spark, sf_dir)
     w_r = Window.orderBy("r_days", "user_id")
     w_f = Window.orderBy(F.desc("freq"), "user_id")
     w_m = Window.orderBy(F.desc("monetary_cents"), "user_id")
@@ -1200,17 +1249,7 @@ def events_rfm_segmentation_approx(spark: SparkSession, sf_dir: str) -> DataFram
     base is localCheckpointed so the cutoff job and the final
     projection share one materialization instead of re-shuffling
     events twice."""
-    ev = load_table(spark, sf_dir, "events")
-    mx_us = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
-    u = ev.groupBy("user_id").agg(
-        F.expr(f"({mx_us}L - unix_micros(max(ts))) div 86400000000").alias(
-            "r_days"
-        ),
-        F.count("*").alias("freq"),
-        F.sum(F.round(F.col("value") * 100)).cast("bigint").alias(
-            "monetary_cents"
-        ),
-    ).localCheckpoint(eager=False)
+    u = _rfm_users(spark, sf_dir).localCheckpoint(eager=False)
     cuts = u.agg(
         F.expr(
             "approx_percentile(r_days, array(0.25,0.5,0.75), 1000000)"
@@ -1595,25 +1634,25 @@ def sessionize_stats_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     group, so at 100 TB the quantile slots swap to the KLL sketch
     (agg_quantile_sketch) and everything else is a partial-agg'd
     global aggregate."""
+    return _session_rollup(_gap_sessions(spark, sf_dir))
+
+
+def _gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per gap session: (user_id, sess_id, dur_us, n_events)."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts")
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    new_sess = F.when(
-        gap_us.isNull() | (gap_us > _GAP_MIN * 60 * 1_000_000), 1
-    ).otherwise(0)
-    s = ev.select(
-        "user_id",
-        "ts",
-        F.sum(new_sess)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("sess_id"),
-    )
-    sess = s.groupBy("user_id", "sess_id").agg(
+    s = ev.select("user_id", "ts", _gap_session_id(w).alias("sess_id"))
+    return s.groupBy("user_id", "sess_id").agg(
         (
             F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))
         ).alias("dur_us"),
         F.count("*").alias("n_events"),
     )
+
+
+def _session_rollup(sess: DataFrame, *extra: F.Column) -> DataFrame:
+    """The session-quality rollup of ``sess`` (``_gap_sessions`` rows),
+    plus ``extra`` columns."""
     return sess.agg(
         F.count("*").alias("n_sessions"),
         F.sum("n_events").cast("bigint").alias("n_events"),
@@ -1630,6 +1669,98 @@ def sessionize_stats_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("n_events") == 1, 1))
         .cast("bigint")
         .alias("n_bounces"),
+        *extra,
+    )
+
+
+def _sess_rollup_sketch_oracle() -> str:
+    return f"""
+    WITH o AS (
+      SELECT user_id, ts,
+             epoch_us(ts) - lag(epoch_us(ts))
+               OVER (PARTITION BY user_id ORDER BY ts) AS gap_us
+      FROM events
+    ), s AS (
+      SELECT user_id, ts,
+             sum(CASE WHEN gap_us IS NULL
+                        OR gap_us > {_GAP_MIN} * 60 * 1000000
+                      THEN 1 ELSE 0 END)
+               OVER (PARTITION BY user_id ORDER BY ts
+                     ROWS UNBOUNDED PRECEDING) AS sess_id
+      FROM o
+    ), sess AS (
+      SELECT user_id, sess_id,
+             epoch_us(max(ts)) - epoch_us(min(ts)) AS dur_us,
+             count(*) AS n_events
+      FROM s GROUP BY user_id, sess_id
+    )
+    SELECT count(*) AS n_sessions,
+           CAST(sum(n_events) AS BIGINT) AS n_events,
+           CAST(round(2 * quantile_cont(dur_us, 0.5)) AS BIGINT)
+             AS med2_dur_us,
+           CAST(round(10 * quantile_cont(dur_us, 0.9)) AS BIGINT)
+             AS p90x10_dur_us,
+           CAST(max(dur_us) AS BIGINT) AS max_dur_us,
+           CAST(round(2 * quantile_cont(n_events, 0.5)) AS BIGINT)
+             AS med2_events,
+           CAST(count(*) FILTER (n_events = 1) AS BIGINT) AS n_bounces,
+           TRUE AS sketch_in_envelope
+    FROM sess
+    """
+
+
+@query("sessionize_stats_rollup_sketch", oracle=_sess_rollup_sketch_oracle())
+def sessionize_stats_rollup_sketch(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """SESSION STATS ROLLUP, KLL/SKETCH FORM — the quantile swap
+    ``sessionize_stats_rollup``'s docstring names (plans/analytics.py):
+    exact percentile() holds every session's value per group, so at
+    100 TB the three quantile slots swap to a mergeable percentile
+    sketch (``percentile_approx``, GK — one partial-agg'd pass, fixed
+    sketch state per partition) while count/sum/max/bounces are
+    already partial-agg'd. Twin discipline: the reported columns are
+    the EXACT twin's (hash gate re-verifies the whole rollup);
+    the sketch feeds ``sketch_in_envelope`` — TRUE iff each sketch
+    quantile v_q lands within max(3, 1% of n) session-ranks of its
+    target (count(x <= v_q) >= floor(q*n) - tol AND count(x < v_q) <=
+    ceil(q*n) + tol, for q in {0.5 dur, 0.9 dur, 0.5 events}).
+    Sketch points and rank counts are bounded control scalars (two
+    1-row collects on the session summary)."""
+    sess = _gap_sessions(spark, sf_dir).localCheckpoint(eager=False)
+    a = sess.agg(
+        F.percentile_approx("dur_us", [0.5, 0.9], 2000).alias("dq"),
+        F.percentile_approx("n_events", 0.5, 2000).alias("e50"),
+        F.count("*").alias("n"),
+    ).first()
+    d50, d90 = int(a["dq"][0]), int(a["dq"][1])
+    e50, n = int(a["e50"]), int(a["n"])
+    tol = max(3, n // 100)
+    checks = [
+        ("d50", "dur_us", d50, n // 2),
+        ("d90", "dur_us", d90, (9 * n) // 10),
+        ("e50", "n_events", e50, n // 2),
+    ]
+    r = sess.agg(
+        *[
+            F.sum(
+                F.when(F.col(col) <= F.lit(v), 1).otherwise(0)
+            ).alias(f"le_{tag}")
+            for tag, col, v, _ in checks
+        ],
+        *[
+            F.sum(
+                F.when(F.col(col) < F.lit(v), 1).otherwise(0)
+            ).alias(f"lt_{tag}")
+            for tag, col, v, _ in checks
+        ],
+    ).first()
+    in_env = all(
+        r[f"le_{tag}"] >= target - tol and r[f"lt_{tag}"] <= target + tol
+        for tag, _, _, target in checks
+    )
+    return _session_rollup(
+        sess, F.lit(bool(in_env)).alias("sketch_in_envelope")
     )
 
 
@@ -1758,7 +1889,7 @@ def agg_exact_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark sum(BIGINT) already overflows loudly under ANSI mode, not
     silently)."""
     ev = load_table(spark, sf_dir, "events")
-    c = F.round(F.col("value") * 100).cast("bigint")
+    c = cents("value")
     m = ev.select(
         "event_type",
         c.alias("c"),
@@ -1836,7 +1967,7 @@ def retention_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "cohort_week",
             offset.alias("week_offset"),
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+            cents("value").alias("cents"),
         )
         .filter(F.col("week_offset") <= _MAX_OFFSET)
         .groupBy("cohort_week", "week_offset")
@@ -1998,7 +2129,7 @@ def events_ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("bigint"),
+                cents("value"),
             ).otherwise(0)
         )
         .cast("bigint")
@@ -2039,7 +2170,9 @@ def events_ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m JOIN mu ON m.month = mu.month
     """,
 )
-def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_dau_mau_stickiness(
+    spark: SparkSession, sf_dir: str, hll: bool = False
+) -> DataFrame:
     """DAU/MAU STICKINESS — the engagement ratio every consumer product
     tracks: average daily actives over monthly actives, per month. The
     ratio is exact integer micro-units of (Σdau · 1e6) / (days · mau) —
@@ -2052,7 +2185,8 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-day exact distinct is the heavy node — the documented swap
     is HLL sketches per (day) merged upward to (month), which this
     repo's agg_hll_sketch_merge / users_few_services_approx already
-    exhibit; the report shape here stays identical."""
+    exhibit; the report shape here stays identical. ``hll`` adds those
+    sketches and the ``hll_in_envelope`` flag checking them."""
     ev = load_table(spark, sf_dir, "events")
     # r15: BOTH distinct grains derive from one (user, day) activity
     # collapse — dau = per-day row count, mau = per-month count over
@@ -2071,12 +2205,26 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    d = ud.groupBy("day").agg(F.count("*").alias("dau"))
+    sk, est, env = [], [], []
+    if hll:
+        sk = [F.hll_sketch_agg(F.col("user_id"), F.lit(14)).alias("sk")]
+        est = [
+            F.sum(F.hll_sketch_estimate("sk")).alias("_sum_dau_est"),
+            F.hll_sketch_estimate(F.hll_union_agg("sk", F.lit(False))).alias(
+                "_mau_est"
+            ),
+        ]
+        in_env = hll_in_envelope(
+            "sum_dau", "_sum_dau_est", 2.0 * F.col("n_days"), 0.02
+        ) & hll_in_envelope("mau", "_mau_est")
+        env = [in_env.alias("hll_in_envelope")]
+    d = ud.groupBy("day").agg(*sk, F.count("*").alias("dau"))
     m = d.groupBy(
         F.date_trunc("month", "day").cast("date").alias("month")
     ).agg(
         F.sum("dau").cast("bigint").alias("sum_dau"),
         F.count("*").alias("n_days"),
+        *est,
     )
     mu = (
         ud.select(
@@ -2095,7 +2243,59 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("sum_dau * 1000000 div (n_days * mau)").alias(
             "stickiness_micro"
         ),
+        *env,
     )
+
+
+@query(
+    "events_dau_mau_stickiness_hll",
+    oracle="""
+    WITH d AS (
+      SELECT CAST(ts AS DATE) AS day,
+             CAST(count(DISTINCT user_id) AS BIGINT) AS dau
+      FROM events GROUP BY 1
+    ),
+    m AS (
+      SELECT CAST(date_trunc('month', day) AS DATE) AS month,
+             CAST(sum(dau) AS BIGINT) AS sum_dau,
+             CAST(count(*) AS BIGINT) AS n_days
+      FROM d GROUP BY 1
+    ),
+    mu AS (
+      SELECT CAST(date_trunc('month', ts) AS DATE) AS month,
+             CAST(count(DISTINCT user_id) AS BIGINT) AS mau
+      FROM events GROUP BY 1
+    )
+    SELECT m.month, mu.mau, m.sum_dau, m.n_days,
+           m.sum_dau * 1000000 // (m.n_days * mu.mau)
+             AS stickiness_micro,
+           TRUE AS hll_in_envelope
+    FROM m JOIN mu ON m.month = mu.month
+    """,
+)
+def events_dau_mau_stickiness_hll(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """DAU/MAU STICKINESS, HLL-SKETCH FORM — the per-day-distinct swap
+    ``events_dau_mau_stickiness``'s docstring names (analytics.py),
+    registered as a runnable query (VERDICT r11 item 2). At true 100 TB
+    the per-day exact COUNT(DISTINCT user_id) is the heavy node (a
+    user-keyed distinct shuffle per day); the mergeable-summary form
+    builds ONE Datasketches HLL per day in a single partial-agg'd pass
+    (no distinct materialization ever shuffles raw user ids — sketches
+    merge map-side), then rolls days → months two ways: Σ estimate(day)
+    for the DAU numerator and estimate(hll_union_agg(day sketches)) for
+    the MAU denominator — the union over sketches is exact-over-sketches,
+    so the month sketch equals a month-grain sketch without rescanning.
+
+    Output = the exact twin's columns + ``hll_in_envelope``: the per-month
+    Σ-of-day-estimates within max(2·n_days, 2% of Σdau) — per-day errors
+    are independent, so the summed RELATIVE error shrinks ~1/√n_days and
+    2% is a ≫3σ bound — and the union-sketch MAU within max(3, 2.5%)
+    (single sketch at lgK=14, RSE ≈0.81%, so 2.5% ≈ 3σ). The oracle
+    asserts the literal TRUE; the reported metric stays the exact
+    integer-micro stickiness, so the hash also re-verifies the metric."""
+    return events_dau_mau_stickiness(spark, sf_dir, hll=True)
 
 
 @query(
@@ -2144,12 +2344,20 @@ def analytics_pareto_concentration(
     approx_percentile over spend (the events_rfm_segmentation_approx
     swap) instead of a global rank, and the curve is read off the same
     way."""
+    return _pareto_curve(_customer_spend(spark, sf_dir))
+
+
+def _customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-customer exact-cents spend: (o_custkey, spend)."""
     orders = load_table(spark, sf_dir, "orders")
-    s = orders.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("spend")
+    return orders.groupBy("o_custkey").agg(
+        F.sum(cents("o_totalprice")).cast("bigint").alias("spend")
     )
+
+
+def _pareto_curve(s: DataFrame, *extra: F.Column) -> DataFrame:
+    """Cumulative spend share at each decile boundary of the customers
+    in ``s`` (``_customer_spend`` rows), plus ``extra`` columns."""
     w_rank = Window.orderBy(F.desc("spend"), F.asc("o_custkey"))
     w_all = Window.partitionBy()
     r = s.select(
@@ -2179,7 +2387,85 @@ def analytics_pareto_concentration(
             "CAST(max(cum) AS DECIMAL(38,0)) * 1000000"
             " div CAST(max(total) AS DECIMAL(38,0))"
         ).alias("cum_share_micro"),
+        *extra,
     )
+
+
+@query(
+    "analytics_pareto_concentration_approx",
+    oracle="""
+    WITH s AS (
+      SELECT o_custkey,
+             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               AS spend
+      FROM orders GROUP BY 1
+    ),
+    r AS (
+      SELECT spend,
+             row_number() OVER (ORDER BY spend DESC, o_custkey) AS rk,
+             count(*) OVER () AS n_cust,
+             sum(spend) OVER () AS total,
+             sum(spend) OVER (ORDER BY spend DESC, o_custkey
+                              ROWS UNBOUNDED PRECEDING) AS cum
+      FROM s
+    )
+    SELECT CAST(decile AS INT) AS decile,
+           CAST(max(cum) AS BIGINT) AS cum_cents,
+           CAST(max(cum) * 1000000 // max(total) AS BIGINT)
+             AS cum_share_micro,
+           TRUE AS approx_in_envelope
+    FROM (SELECT cum, total,
+                 CAST(rk * 10 // n_cust AS BIGINT) AS decile
+          FROM r WHERE rk * 10 % n_cust = 0 OR rk = n_cust) x
+    GROUP BY decile
+    """,
+)
+def analytics_pareto_concentration_approx(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PARETO CURVE, APPROX-BOUNDARY FORM — the billions-of-entities
+    swap ``analytics_pareto_concentration``'s docstring names: decile
+    boundaries from ``percentile_approx`` (Greenwald-Khanna, one
+    mergeable partial-agg'd pass) instead of a global rank-over-summary
+    window — at true scale the unpartitioned rank is the one
+    non-mergeable node, and the GK sketch is how the same curve is
+    read off without it. Twin discipline (ADVICE r13 wording): the
+    curve columns reported here are the EXACT twin's, kept solely so
+    the hash gate re-verifies the curve; the approx machinery feeds
+    ``approx_in_envelope`` — TRUE iff every GK decile boundary b_d
+    sits within max(3, 1% of n) customers of its exact rank target
+    (count(spend >= b_d) >= t_d - tol AND count(spend > b_d) <=
+    t_d + tol, t_d = d*n/10) — so a drifting sketch flips the flag and
+    the driver hash catches it. Boundaries and rank counts are bounded
+    control scalars (two 1-row collects), never a row-space join."""
+    s = _customer_spend(spark, sf_dir).localCheckpoint(eager=False)
+    qs = [round(1 - d / 10, 1) for d in range(1, 10)]  # 0.9 .. 0.1
+    head = s.agg(
+        F.percentile_approx("spend", qs, 10000).alias("bnd"),
+        F.count("*").alias("n"),
+    ).first()
+    bnds, n = list(head["bnd"]), int(head["n"])
+    tol = max(3, n // 100)
+    ranks = s.agg(
+        *[
+            F.sum(
+                F.when(F.col("spend") >= F.lit(int(b)), 1).otherwise(0)
+            ).alias(f"ge{d}")
+            for d, b in enumerate(bnds, start=1)
+        ],
+        *[
+            F.sum(
+                F.when(F.col("spend") > F.lit(int(b)), 1).otherwise(0)
+            ).alias(f"gt{d}")
+            for d, b in enumerate(bnds, start=1)
+        ],
+    ).first()
+    in_env = all(
+        ranks[f"ge{d}"] >= (d * n) // 10 - tol
+        and ranks[f"gt{d}"] <= (d * n) // 10 + tol
+        for d in range(1, 10)
+    )
+    return _pareto_curve(s, F.lit(bool(in_env)).alias("approx_in_envelope"))
 
 
 @query(
@@ -2280,9 +2566,7 @@ def rollup_weighted_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookback, so the window operator streams it."""
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
+        F.sum(cents("value")).cast("bigint").alias("cents")
     )
     w = Window.orderBy("day")
     num = F.lit(16) * F.col("cents")
@@ -2360,11 +2644,11 @@ def analytics_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from a half has a NULL conditional sum, exactly the old full-join
     # miss → 'none'.
     is_h1 = F.col("o_orderdate") < F.lit(mid)
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    price_c = cents("o_totalprice")
     spend = orders.select(
         "o_custkey",
-        F.when(is_h1, cents).alias("c1"),
-        F.when(~is_h1, cents).alias("c2"),
+        F.when(is_h1, price_c).alias("c1"),
+        F.when(~is_h1, price_c).alias("c2"),
     ).groupBy("o_custkey").agg(
         F.sum("c1").cast("bigint").alias("s1"),
         F.sum("c2").cast("bigint").alias("s2"),
@@ -2501,7 +2785,7 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_forecast_seasonal_naive(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, *keys: str
 ) -> DataFrame:
     """FORECAST BACKTEST (seasonal-naive vs naive) — the baseline every
     forecasting system must beat, evaluated the way M-competitions do:
@@ -2515,20 +2799,27 @@ def events_forecast_seasonal_naive(
     summary. Per-series forecasting at scale partitions the same plan
     by series key (the window gains a partitionBy and nothing else
     changes) — millions of independent series parallelize trivially;
-    it is long single series that do not."""
+    it is long single series that do not. ``keys`` are the series
+    columns (none: one global series)."""
     ev = load_table(spark, sf_dir, "events")
-    d = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
+    # The keyed form truncates ts to its day and zero-guards the MASE
+    # divisor (a flat series); each form keeps the spelling its
+    # certified plan has.
+    day = F.date_trunc("day", "ts").cast("date") if keys else F.to_date("ts")
+    d = ev.groupBy(*keys, day.alias("day")).agg(
+        F.sum(cents("value")).cast("bigint").alias("cents")
     )
-    w = Window.orderBy("day")
+    w = Window.partitionBy(*keys).orderBy("day")
     j = d.select(
+        *keys,
         "cents",
         F.lag("cents", 7).over(w).alias("forecast"),
         F.lag("cents", 1).over(w).alias("naive"),
     ).where(F.col("forecast").isNotNull() & F.col("naive").isNotNull())
-    return j.agg(
+    naive_err = "CAST(sum(abs(cents - naive)) AS DECIMAL(38,0))"
+    if keys:
+        naive_err = f"nullif({naive_err}, 0)"
+    return j.groupBy(*keys).agg(
         F.count("*").alias("n_days"),
         F.sum(F.abs(F.col("cents") - F.col("forecast")))
         .cast("bigint")
@@ -2540,9 +2831,58 @@ def events_forecast_seasonal_naive(
         # data volume; *1e6 passes BIGINT range past ~sf3 of this series
         F.expr(
             "CAST(sum(abs(cents - forecast)) AS DECIMAL(38,0)) * 1000000"
-            " div CAST(sum(abs(cents - naive)) AS DECIMAL(38,0))"
+            f" div {naive_err}"
         ).alias("mase_micro"),
     )
+
+
+@query(
+    "events_forecast_seasonal_naive_series",
+    oracle="""
+    WITH d AS (
+      SELECT event_type,
+             CAST(date_trunc('day', ts) AS DATE) AS day,
+             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+               AS cents
+      FROM events GROUP BY 1, 2
+    ),
+    j AS (
+      SELECT event_type, day, cents,
+             lag(cents, 7) OVER win AS forecast,
+             lag(cents, 1) OVER win AS naive
+      FROM d
+      WINDOW win AS (PARTITION BY event_type ORDER BY day)
+    )
+    SELECT event_type,
+           CAST(count(*) AS BIGINT) AS n_days,
+           CAST(sum(abs(cents - forecast)) AS BIGINT)
+             AS seasonal_abs_err,
+           CAST(sum(abs(cents - naive)) AS BIGINT) AS naive_abs_err,
+           CAST(sum(abs(cents - forecast)) * 1000000
+             // nullif(sum(abs(cents - naive)), 0) AS BIGINT)
+             AS mase_micro
+    FROM j WHERE forecast IS NOT NULL AND naive IS NOT NULL
+    GROUP BY event_type
+    """,
+)
+def events_forecast_seasonal_naive_series(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PER-SERIES FORECAST BACKTEST — the partitionBy form
+    ``events_forecast_seasonal_naive``'s docstring promises ("per-series
+    forecasting at scale partitions the same plan by series key; the
+    window gains a partitionBy and nothing else changes"): one MASE row
+    PER EVENT TYPE, forecast(d) = actual(d−7) vs the 1-day naive,
+    exact integer error cents, one scaled division per series.
+
+    Scale: the corpus collapses to (series, day) in one partial-agg'd
+    shuffle; both lag forecasts ride ONE window keyed by the series —
+    millions of independent series spread across the cluster instead of
+    serializing through the global form's single-partition sort. The
+    MASE division is DECIMAL(38,0)-widened (error-cent sums are
+    unbounded in data volume — r15 overflow audit) and nullif-guarded
+    against a perfectly-flat series on BOTH engines."""
+    return events_forecast_seasonal_naive(spark, sf_dir, "event_type")
 
 
 @query(
@@ -2746,9 +3086,7 @@ def events_anomaly_seasonal_residual(
     rejects). Two bounded collects over a calendar-sized summary."""
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
+        F.sum(cents("value")).cast("bigint").alias("cents")
     )
     w = Window.orderBy("day")
     r = d.select(
@@ -2833,18 +3171,12 @@ def sessionize_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins at all — the whole report is window algebra over one sort."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    new_s = F.when(
-        gap_us.isNull() | (gap_us > _GAP_MIN * 60 * 1_000_000), 1
-    ).otherwise(0)
     s = ev.select(
         "user_id",
         "ts",
         "event_id",
         "event_type",
-        F.sum(new_s)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("sess_id"),
+        _gap_session_id(w).alias("sess_id"),
     )
     ws = Window.partitionBy("user_id", "sess_id").orderBy(
         "ts", "event_id"
@@ -2917,7 +3249,7 @@ def events_velocity_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         F.unix_timestamp("ts").alias("sec"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     base = Window.partitionBy("user_id").orderBy("sec")
     w1h = base.rangeBetween(-3599, 0)
@@ -3073,7 +3405,7 @@ def agg_incremental_moments_merge(
         F.when(F.col("event_id") % 10 < 8, "base")
         .otherwise("delta")
         .alias("slice"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     parts = c.groupBy("event_type", "slice").agg(
         F.count("*").alias("n"),

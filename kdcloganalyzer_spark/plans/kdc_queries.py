@@ -557,9 +557,7 @@ def q_sink_tsv(spark: SparkSession, sf_dir: str) -> DataFrame:
     user \\t first \\t last \\t n — written then read back, so the hash
     match verifies the full write→parse round trip (timestamps rendered
     as 'YYYY-MM-DD HH:MM:SS' strings by both engines' casts)."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="user_time_tsv_")
+    out = appcache.tempdir(prefix="user_time_tsv_")
     ut = _user_time(spark, sf_dir).select(
         "client",
         F.col("first_ts").cast("string"),

@@ -54,8 +54,5 @@ def load_all() -> None:
         round10_ops,
         round11_ops,
         round12_ops,
-        round13_ops,
-        round14_ops,
-        round15_ops,
         streaming_queries,
     )

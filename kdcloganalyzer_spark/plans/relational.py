@@ -2,8 +2,8 @@
 
 Every query here is oracle-checked against DuckDB. Conventions:
 - computed columns aliased identically on both sides;
-- money/value aggregates accumulate EXACT INTEGER units (`_cents`, or
-  `_rev_e4` for discounted revenue) — `round(sum(DOUBLE))` is
+- money/value aggregates accumulate EXACT INTEGER units (`tables.cents`,
+  or `_rev_e4` for discounted revenue) — `round(sum(DOUBLE))` is
   summation-order-dependent and flipped a driver hash in r9
   (analytics_nation_trade_volume); the whole class is migrated;
 - top-k / window queries carry a total tie-break order.
@@ -22,22 +22,13 @@ from kdcloganalyzer_spark import appcache
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kdcloganalyzer_spark.plans.analytics import hll_in_envelope
 from kdcloganalyzer_spark.plans.registry import query
-from kdcloganalyzer_spark.sources.tables import load_table
+from kdcloganalyzer_spark.sources.tables import cents, load_table
 
 log = logging.getLogger(__name__)
 
 
-def _cents(col):
-    """Exact integer cents of a 2-decimal money DOUBLE column.
-
-    All money/value columns in the driver tables carry exactly 2
-    decimals (verified against the parquet), so this is lossless and
-    makes every downstream sum order-free. SQL twin:
-    ``CAST(round(x * 100) AS BIGINT)``."""
-    if isinstance(col, str):
-        col = F.col(col)
-    return F.round(col * 100).cast("bigint")
 
 
 def _rev_e4(price="l_extendedprice", discount="l_discount"):
@@ -45,7 +36,7 @@ def _rev_e4(price="l_extendedprice", discount="l_discount"):
     (100 − discount percent). SQL twin:
     ``CAST(round(p*100) AS BIGINT) * (100 - CAST(round(d*100) AS
     BIGINT))``."""
-    return _cents(price) * (100 - _cents(discount))
+    return cents(price) * (100 - cents(discount))
 
 
 # ---------------------------------------------------------------------------
@@ -144,7 +135,7 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_name", "n_name")
         .agg(
             F.count("*").alias("n_customers"),
-            F.sum(_cents("c_acctbal")).cast("bigint").alias(
+            F.sum(cents("c_acctbal")).cast("bigint").alias(
                 "total_acctbal_c"
             ),
         )
@@ -337,7 +328,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return orders.rollup("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("n"),
-        F.sum(_cents("o_totalprice")).cast("bigint").alias("total_c"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("total_c"),
     )
 
 
@@ -369,9 +360,7 @@ def window_rank_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.rank().over(by_price).alias("rnk"),
         F.lag("o_orderkey").over(by_date).alias("prev_order"),
-        F.sum(_cents("o_totalprice"))
-        .over(running)
-        .cast("bigint")
+        F.sum(cents("o_totalprice")).over(running).cast("bigint")
         .alias("running_spend_c"),
     )
 
@@ -481,17 +470,13 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout that makes 100 TB scans cheap when queries carry partition
     predicates. Oracle computes the same aggregate from the unpartitioned
     table."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="orders_part_")
+    out = appcache.tempdir(prefix="orders_part_")
     orders = load_table(spark, sf_dir, "orders")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     back = spark.read.parquet(out).filter(F.col("o_orderstatus") == "F")
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("total_c"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("total_c"),
     )
 
 
@@ -500,9 +485,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 @appcache.memo(readers=None)
 def _daypart_events(spark: SparkSession, sf_dir: str) -> str:
     """The events table as day-partitioned parquet; returns its dir."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="events_daypart_")
+    out = appcache.tempdir(prefix="events_daypart_")
     ev = load_table(spark, sf_dir, "events")
     (
         ev.withColumn("day", F.to_date("ts"))
@@ -551,9 +534,7 @@ def join_dynamic_partition_pruning(
         .groupBy("day", "event_type")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_value_c"),
+            F.sum(cents("value")).cast("bigint").alias("sum_value_c"),
         )
     )
 
@@ -817,7 +798,7 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(
-            _cents("value") * F.round(F.col("weight") * 10).cast("bigint")
+            cents("value") * F.round(F.col("weight") * 10).cast("bigint")
         )
         .cast("bigint")
         .alias("weighted_e3"),
@@ -848,9 +829,7 @@ def rollup_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     queried range. The oracle computes the daily answer directly from
     raw events, proving rollup-then-reaggregate is lossless for
     decomposable aggregates."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="events_rollup_")
+    out = appcache.tempdir(prefix="events_rollup_")
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour"),
@@ -858,7 +837,7 @@ def rollup_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
     ).agg(
         F.count("*").alias("n"),
-        F.sum(_cents("value")).alias("sum_value_c"),
+        F.sum(cents("value")).alias("sum_value_c"),
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
     )
@@ -939,7 +918,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's conditional aggregation."""
     types = ["click", "error", "purchase", "signup", "view"]
     ev = load_table(spark, sf_dir, "events").withColumn(
-        "value_c", _cents("value")
+        "value_c", cents("value")
     )
     piv = (
         ev.groupBy((F.col("user_id") % 10).alias("cohort"))
@@ -1092,9 +1071,7 @@ def sink_partition_overwrite_upsert(
     rewrites ONLY that partition in place; static overwrite mode would
     have wiped every other partition. The read-back aggregate proves the
     untouched partitions survived and the touched one was replaced."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="events_upsert_")
+    out = appcache.tempdir(prefix="events_upsert_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value", "event_type"
     )
@@ -1111,7 +1088,7 @@ def sink_partition_overwrite_upsert(
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        F.sum(_cents("value")).cast("bigint").alias("total_c"),
+        F.sum(cents("value")).cast("bigint").alias("total_c"),
     )
 
 
@@ -1142,9 +1119,8 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupt column, which forces every schema column through the parser;
     the eager localCheckpoint then lets us unpersist before returning."""
     import os
-    import tempfile
 
-    out = tempfile.mkdtemp(prefix="orders_csv_")
+    out = appcache.tempdir(prefix="orders_csv_")
     orders = load_table(spark, sf_dir, "orders")
     orders.select("o_orderkey", "o_orderstatus", "o_totalprice").write.mode(
         "overwrite"
@@ -1163,7 +1139,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count("*").alias("n"),
-                F.sum(_cents("o_totalprice")).cast("bigint").alias(
+                F.sum(cents("o_totalprice")).cast("bigint").alias(
                     "total_c"
                 ),
             )
@@ -1186,9 +1162,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     estates actually hold): documents written as ORC, re-read, and
     re-aggregated to the numbers the oracle computes from parquet —
     pushdown/pruning applies to ORC scans the same as parquet."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="docs_orc_")
+    out = appcache.tempdir(prefix="docs_orc_")
     docs = load_table(spark, sf_dir, "documents")
     docs.select("doc_id", "lang", "source", "n_chars").write.mode(
         "overwrite"
@@ -1213,9 +1187,7 @@ def sink_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as JSONL, re-read with an EXPLICIT schema (never inferred —
     inference is a second full scan and types drift), re-aggregated to
     the same numbers the oracle computes from parquet."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="orders_jsonl_")
+    out = appcache.tempdir(prefix="orders_jsonl_")
     orders = load_table(spark, sf_dir, "orders")
     orders.select("o_orderkey", "o_orderstatus", "o_totalprice").write.mode(
         "overwrite"
@@ -1225,7 +1197,7 @@ def sink_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).json(out)
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
-        F.sum(_cents("o_totalprice")).cast("bigint").alias("total_c"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("total_c"),
     )
 
 
@@ -1253,7 +1225,7 @@ def agg_skew_salted_twostage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stage1 = salted.groupBy("event_type", "salt").agg(
         F.count("*").alias("pn"),
-        F.sum(_cents("value")).alias("psum_c"),
+        F.sum(cents("value")).alias("psum_c"),
     )
     return stage1.groupBy("event_type").agg(
         F.sum("pn").alias("n"),
@@ -1331,9 +1303,7 @@ def scan_custom_delimiter(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference (CustomFileInputFormat.java:19-32) applies identically:
     Spark plans splits per file and the lineSep reader handles
     delimiter-straddling records per split."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="custom_delim_")
+    out = appcache.tempdir(prefix="custom_delim_")
     docs = load_table(spark, sf_dir, "documents")
     docs.select("text").write.mode("overwrite").option("lineSep", "\x1e").text(out)
     back = spark.read.option("lineSep", "\x1e").text(out)
@@ -1394,9 +1364,7 @@ def sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchange format log estates still receive from appliances; the
     scan parallelizes per file like any text source, and explicit
     schemas avoid the inference pass."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="orders_xml_")
+    out = appcache.tempdir(prefix="orders_xml_")
     orders = load_table(spark, sf_dir, "orders")
     orders.filter(F.col("o_orderkey") % 10 == 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1411,7 +1379,7 @@ def sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
-        F.sum(_cents("o_totalprice")).cast("bigint").alias("total_c"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("total_c"),
     )
 
 
@@ -1469,7 +1437,7 @@ def join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("c_mktsegment")
             .agg(
                 F.count("*").alias("n"),
-                F.sum(_cents("o_totalprice")).cast("bigint").alias(
+                F.sum(cents("o_totalprice")).cast("bigint").alias(
                     "total_c"
                 ),
             )
@@ -1605,7 +1573,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
         F.count("o_totalprice").cast("bigint").alias("n_with_price"),
-        F.sum(_cents("o_totalprice")).cast("bigint").alias("sum_price_c"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("sum_price_c"),
     )
 
 
@@ -1643,9 +1611,7 @@ def _zkey_sql(x: str, y: str) -> str:
 def _zorder_docs(spark: SparkSession, sf_dir: str) -> str:
     """(doc_id, n_chars, bucket, zkey) written sorted by zkey; returns
     its dir."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="docs_zorder_")
+    out = appcache.tempdir(prefix="docs_zorder_")
     docs = load_table(spark, sf_dir, "documents")
     bucket = (F.col("doc_id") % 1024).cast("long")
     zk = _zkey_spark(F.col("n_chars"), bucket)
@@ -1758,9 +1724,9 @@ def analytics_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     f = li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
     qty = F.round(F.col("l_quantity")).cast("bigint")
-    price_c = _cents("l_extendedprice")
+    price_c = cents("l_extendedprice")
     disc_e4 = _rev_e4()
-    charge_e6 = disc_e4 * (100 + _cents("l_tax"))
+    charge_e6 = disc_e4 * (100 + cents("l_tax"))
     return (
         f.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -1952,7 +1918,7 @@ def analytics_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_name",
             "nation",
             "revenue_e4",
-            _cents("c_acctbal").alias("acctbal_c"),
+            cents("c_acctbal").alias("acctbal_c"),
         )
         .orderBy(F.desc("revenue_e4"), F.asc("c_custkey"))
         .limit(20)
@@ -2023,7 +1989,7 @@ def analytics_large_volume_orders(
             "c_name",
             "c_custkey",
             "o_orderkey",
-            _cents("o_totalprice").alias("totalprice_c"),
+            cents("o_totalprice").alias("totalprice_c"),
             "sum_qty",
         )
         .orderBy(F.desc("totalprice_c"), F.asc("o_orderkey"))
@@ -2137,8 +2103,7 @@ def analytics_nation_trade_volume(
         )
         .agg(
             F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("bigint")
-                * (100 - F.round(F.col("l_discount") * 100).cast("bigint"))
+                cents("l_extendedprice") * (100 - cents("l_discount"))
             )
             .cast("bigint")
             .alias("revenue_e4")
@@ -2287,7 +2252,7 @@ def join_hint_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n"),
-            F.sum(_cents("l_extendedprice")).cast("bigint").alias(
+            F.sum(cents("l_extendedprice")).cast("bigint").alias(
                 "sum_price_c"
             ),
         )
@@ -2422,7 +2387,7 @@ def scan_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return df.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
-        F.sum(_cents("o_totalprice")).cast("bigint").alias("sum_price_c"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("sum_price_c"),
     )
 
 
@@ -2474,7 +2439,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("k")
         .agg(
             F.count("*").alias("n"),
-            F.sum(_cents("value")).cast("bigint").alias("sum_value_c"),
+            F.sum(cents("value")).cast("bigint").alias("sum_value_c"),
         )
     )
 
@@ -2805,7 +2770,7 @@ def scan_manifest_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return df.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
-        F.sum(_cents("o_totalprice")).cast("bigint").alias("sum_price_c"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("sum_price_c"),
     )
 
 
@@ -2850,7 +2815,7 @@ def window_time_range_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         F.count("*").over(w).alias("n_1h"),
-        F.sum(_cents("value")).over(w).cast("bigint").alias("sum_1h_c"),
+        F.sum(cents("value")).over(w).cast("bigint").alias("sum_1h_c"),
     )
 
 
@@ -2891,7 +2856,7 @@ def agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("try_cast(get_json_object(props, '$.k') AS BIGINT)")
         ).alias("n_campaigns"),
         F.count(F.when(big, 1)).alias("n_big"),
-        F.sum(F.when(big, _cents("value"))).cast("bigint").alias(
+        F.sum(F.when(big, cents("value"))).cast("bigint").alias(
             "sum_big_c"
         ),
     )
@@ -2928,7 +2893,7 @@ def agg_cube_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.grouping("o_orderstatus").cast("int").alias("g_status"),
         F.grouping("o_orderpriority").cast("int").alias("g_priority"),
         F.count("*").alias("n"),
-        F.sum(_cents("o_totalprice")).cast("bigint").alias("total_c"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("total_c"),
     ).select(
         "o_orderstatus", "o_orderpriority", "g_status", "g_priority",
         "n", "total_c",
@@ -3014,7 +2979,7 @@ def fn_struct_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rec = F.struct(
         F.col("o_orderstatus").alias("status"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         F.struct(
             F.col("o_custkey").alias("cust"),
             F.col("o_orderpriority").alias("prio"),
@@ -3065,9 +3030,7 @@ def analytics_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan_manifest_pruned), and the aggregate ships one partial row per
     task."""
     li = load_table(spark, sf_dir, "lineitem")
-    rev = F.round(F.col("l_extendedprice") * 100).cast("bigint") * F.round(
-        F.col("l_discount") * 100
-    ).cast("bigint")
+    rev = cents("l_extendedprice") * cents("l_discount")
     return (
         li.where(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -3194,9 +3157,7 @@ def analytics_disjunctive_revenue(
             & F.col("l_quantity").between(20, 30)
         )
     )
-    rev = F.round(F.col("l_extendedprice") * 100).cast("bigint") * (
-        100 - F.round(F.col("l_discount") * 100).cast("bigint")
-    )
+    rev = _rev_e4()
     return j.where(basket).agg(
         F.sum(rev).cast("bigint").alias("revenue_e4"),
         F.count("*").alias("n_lines"),
@@ -3429,7 +3390,7 @@ def analytics_dormant_rich_customers(
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
-        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_c"),
+        cents("c_acctbal").alias("bal_c"),
     )
     thresh = (
         c.where(F.col("bal_c") > 0)
@@ -3503,9 +3464,7 @@ def analytics_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents, so min/equality are exact."""
     li = load_table(spark, sf_dir, "lineitem")
     ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.min(
-            F.round(F.col("l_extendedprice") * 100).cast("bigint")
-        ).alias("cost_c")
+        F.min(cents("l_extendedprice")).alias("cost_c")
     )
     w = Window.partitionBy("l_partkey")
     best = (
@@ -3591,9 +3550,7 @@ def analytics_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name").alias("sn_name"),
     )
     asia = r.where(F.col("r_name") == "ASIA").select("r_regionkey")
-    rev = F.round(F.col("l_extendedprice") * 100).cast("bigint") * (
-        100 - F.round(F.col("l_discount") * 100).cast("bigint")
-    )
+    rev = _rev_e4()
     sales = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
@@ -3667,9 +3624,7 @@ def analytics_product_type_profit(
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
     )
-    profit = F.round(F.col("l_extendedprice") * 100).cast("bigint") * (
-        100 - F.round(F.col("l_discount") * 100).cast("bigint")
-    )
+    profit = _rev_e4()
     return (
         li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
         .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
@@ -3709,9 +3664,7 @@ def analytics_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     would be cached/reused in a multi-query session (here linear
     lineage keeps it one pass + one tiny scan of the aggregate)."""
     li = load_table(spark, sf_dir, "lineitem")
-    val = F.round(F.col("l_extendedprice") * 100).cast(
-        "bigint"
-    ) * F.col("l_quantity").cast("bigint")
+    val = cents("l_extendedprice") * F.col("l_quantity").cast("bigint")
     v = li.groupBy("l_partkey").agg(
         F.sum(val).cast("bigint").alias("value_c")
     )
@@ -3854,9 +3807,7 @@ def analytics_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    revenue = F.round(F.col("l_extendedprice") * 100).cast("bigint") * (
-        100 - F.round(F.col("l_discount") * 100).cast("bigint")
-    )
+    revenue = _rev_e4()
     rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         F.sum(revenue).cast("bigint").alias("total_e4")
     )
@@ -4037,7 +3988,7 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return rec.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
-        F.sum(_cents("o_totalprice")).cast("bigint").alias("sum_price_c"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("sum_price_c"),
         F.sum("o_orderkey").cast("bigint").alias("key_sum"),
     )
 
@@ -4190,7 +4141,7 @@ def fn_agg_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     suite stays one partial-agg'd pass."""
     ev = load_table(spark, sf_dir, "events")
     ord_key = (
-        F.round(F.col("value") * 100).cast("bigint")
+        cents("value")
         * F.lit(10000000000)
         + F.col("event_id")
     )
@@ -4266,14 +4217,14 @@ def fn_decimal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only the G group rows, not the N input rows — one
     partial-agg'd shuffle total."""
     orders = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    price_c = cents("o_totalprice")
 
     def dec(c: str) -> F.Column:
         return F.format_string(
             "%d.%02d", F.expr(f"{c} div 100"), F.col(c) % 100
         )
 
-    agg = orders.select("o_orderstatus", cents.alias("cents")).groupBy(
+    agg = orders.select("o_orderstatus", price_c.alias("cents")).groupBy(
         "o_orderstatus"
     ).agg(
         F.sum("cents").alias("total_c"),
@@ -4436,9 +4387,7 @@ def scan_commit_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = spark.read.parquet(*[f"{base}/{d}" for d in sorted(live)])
     return snap.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_cents"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("sum_cents"),
     )
 
 
@@ -4887,9 +4836,7 @@ def scan_commit_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = spark.read.parquet(*[f"{base}/{d}" for d in sorted(live)])
     return snap.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_cents"),
+        F.sum(cents("o_totalprice")).cast("bigint").alias("sum_cents"),
     )
 
 
@@ -4930,9 +4877,7 @@ def analytics_period_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("month", "o_orderdate").cast("date").alias("month")
         )
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("rev_cents"),
+            F.sum(cents("o_totalprice")).cast("bigint").alias("rev_cents"),
             F.count("*").alias("n_orders"),
         )
     )
@@ -4963,7 +4908,9 @@ def analytics_period_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE e.user_id < 30
     """,
 )
-def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+def window_running_distinct(
+    spark: SparkSession, sf_dir: str, hll: bool = False
+) -> DataFrame:
     """RUNNING COUNT-DISTINCT — per user, how many distinct event types
     have been seen up to each event (the vocabulary-discovery /
     feature-coverage curve). SQL windows cannot express COUNT(DISTINCT)
@@ -4979,20 +4926,70 @@ def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain (distinct URLS seen) would swap the exact set for a per-row
     HLL merge — the users_few_services_approx pattern. The ts tie-break
     (event_id) makes the running count deterministic under equal
-    timestamps on both engines."""
+    timestamps on both engines. ``hll`` adds that HLL column over the
+    same window and its ``hll_in_envelope`` flag."""
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 30)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return ev.select(
+    seen = F.size(F.collect_set("event_type").over(w)).cast("int")
+    if not hll:
+        return ev.select("event_id", "user_id", seen.alias("n_types_seen"))
+    est = F.hll_sketch_estimate(
+        F.hll_sketch_agg("event_type", F.lit(14)).over(w)
+    )
+    df = ev.select(
+        "event_id", "user_id", seen.alias("n_types_seen"), est.alias("_est")
+    )
+    return df.select(
         "event_id",
         "user_id",
-        F.size(F.collect_set("event_type").over(w))
-        .cast("int")
-        .alias("n_types_seen"),
+        "n_types_seen",
+        hll_in_envelope("n_types_seen", floor=2.0, rel=0.02).alias(
+            "hll_in_envelope"
+        ),
     )
+
+
+@query(
+    "window_running_distinct_hll",
+    oracle="""
+    SELECT e.event_id, e.user_id,
+           CAST((SELECT count(DISTINCT e2.event_type) FROM events e2
+                 WHERE e2.user_id = e.user_id
+                   AND (e2.ts < e.ts OR (e2.ts = e.ts
+                        AND e2.event_id <= e.event_id))) AS INT)
+             AS n_types_seen,
+           TRUE AS hll_in_envelope
+    FROM events e
+    WHERE e.user_id < 30
+    """,
+)
+def window_running_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RUNNING COUNT-DISTINCT, HLL-SKETCH FORM — the unbounded-domain
+    swap ``window_running_distinct``'s docstring names (relational.py),
+    registered as a runnable query (VERDICT r11 item 2). The exact form
+    keeps the per-key distinct SET as window state — fine while the
+    domain is small, quadratic memory when it isn't (distinct URLs per
+    user). The swap keeps a Datasketches HLL as the running-frame state
+    instead: ``hll_sketch_agg(...).over(running frame)`` — constant
+    ~16 KB state per row at lgK=14 regardless of domain size, and the
+    expanding frame needs only the sketch's update() (no retract), which
+    is exactly what Spark's window AggregateProcessor supports.
+
+    Both the exact collect_set and the HLL sketch share ONE window spec,
+    so the plan has a single sort+Window node (verified: one Window
+    operator computes both _we0/_we1) — the swap adds zero shuffles.
+
+    Output = the exact twin's columns + ``hll_in_envelope``: every
+    per-row estimate within max(2, 2%) of the exact running count (the
+    lgK=14 envelope tests/test_round7_ops.py pins for the sketch
+    family); the oracle asserts the literal TRUE. At the events table's
+    type domain the sketch is in exact (coupon) mode, so the estimate is
+    exactly the count — the envelope is the regression tripwire."""
+    return window_running_distinct(spark, sf_dir, hll=True)
 
 
 @query(
@@ -5467,9 +5464,7 @@ def scan_nested_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("who"),
             F.struct(
                 "event_type",
-                F.round(F.col("value") * 100)
-                .cast("bigint")
-                .alias("cents"),
+                cents("value").alias("cents"),
             ).alias("what"),
         )
         build = f"{base}.build-{os.getpid()}"
@@ -5524,9 +5519,7 @@ def sink_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan_text_splittable's multi-line records); production keeps
     quoted-newline CSV in many small files or re-encodes to parquet at
     the edge, both noted here because this query is the proof of WHY."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="csv_quoted_")
+    out = appcache.tempdir(prefix="csv_quoted_")
     part = load_table(spark, sf_dir, "part")
     tricky = F.concat(
         F.col("p_name"), F.lit(',"'), F.lit("\n"), F.lit('x""y,')
@@ -5596,9 +5589,7 @@ def analytics_gini_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("spend")
+            F.sum(cents("o_totalprice")).cast("bigint").alias("spend")
         )
     )
     w = Window.orderBy("spend", "o_custkey")
@@ -5661,7 +5652,7 @@ def events_benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         ev.select(
             F.substring(
-                F.round(F.col("value") * 100).cast("bigint").cast("string"),
+                cents("value").cast("string"),
                 1,
                 1,
             )
@@ -5941,7 +5932,7 @@ def window_reset_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "event_id",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
         F.when(F.col("event_type") == "signup", 1)
         .otherwise(0)
         .alias("is_reset"),
@@ -6014,7 +6005,7 @@ def sql_union_by_name_missing_cols(
     a = orders.where(F.col("o_orderkey") % 3 == 0).select(
         "o_orderkey",
         "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     b = orders.where(F.col("o_orderkey") % 3 == 1).select(
         "o_orderkey", "o_orderpriority"
@@ -6065,7 +6056,7 @@ def agg_histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries converge as the sketch accuracy rises; this exact form
     is also the oracle for that swap."""
     c = load_table(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         "o_orderkey",
     )
     w = Window.orderBy("cents", "o_orderkey")
@@ -6120,20 +6111,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort is the cost — the sketch path is a weighted KLL/t-digest
     (each value inserted with multiplicity), the same exact-to-sketch
     ladder as the unweighted percentile family."""
-    x = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias(
-            "cents"
-        ),
-        F.col("l_quantity").cast("bigint").alias("w"),
-        "l_orderkey",
-        "l_linenumber",
-    )
-    wcum = (
-        Window.partitionBy("flag")
-        .orderBy("cents", "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    x, wcum = _weighted_lines(spark, sf_dir)
     wall = Window.partitionBy("flag")
     cum = x.select(
         "flag",
@@ -6148,4 +6126,204 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("cents").alias("weighted_median_cents"),
             F.max("total").cast("bigint").alias("total_weight"),
         )
+    )
+
+
+def _weighted_lines(spark: SparkSession, sf_dir: str):
+    """Lineitem as (flag, cents, w, l_orderkey, l_linenumber), and the
+    per-flag running window over its total (cents, key) order."""
+    x = load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_returnflag").alias("flag"),
+        cents("l_extendedprice").alias("cents"),
+        F.col("l_quantity").cast("bigint").alias("w"),
+        "l_orderkey",
+        "l_linenumber",
+    )
+    wcum = (
+        Window.partitionBy("flag")
+        .orderBy("cents", "l_orderkey", "l_linenumber")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return x, wcum
+
+
+@query(
+    "agg_weighted_median_sketch",
+    oracle="""
+    WITH x AS (
+      SELECT l_returnflag AS flag,
+             CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
+             CAST(l_quantity AS BIGINT) AS w,
+             l_orderkey, l_linenumber
+      FROM lineitem
+    ),
+    cum AS (
+      SELECT flag, cents, w,
+             sum(w) OVER (PARTITION BY flag
+                          ORDER BY cents, l_orderkey, l_linenumber
+                          ROWS UNBOUNDED PRECEDING) AS cw,
+             sum(w) OVER (PARTITION BY flag) AS total
+      FROM x
+    )
+    SELECT flag,
+           CAST(min(cents) AS BIGINT) AS weighted_median_cents,
+           CAST(max(total) AS BIGINT) AS total_weight,
+           TRUE AS sketch_in_envelope
+    FROM cum
+    WHERE 2 * cw >= total
+    GROUP BY flag
+    """,
+)
+def agg_weighted_median_sketch(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """WEIGHTED MEDIAN, SKETCH FORM — a natively WEIGHTED mergeable
+    quantile sketch: log-bucket (DDSketch-style) cells
+    ``floor(ln(cents) / ln(1.01))`` with ``sum(w)`` per cell, so the
+    quantity weight enters the sketch as an ADDEND, never as row
+    multiplicity. One whole-stage-codegen hash aggregate over the
+    scan; cell count is bounded by the VALUE RANGE (≤ ~1.4k cells per
+    flag for any cents domain under 10^6, independent of row count),
+    the per-cell sums are map-side combinable and the sketch merges by
+    cell-wise addition — the 100 TB shape. The r14 form of this id fed
+    an unweighted GK sketch via ``explode(sequence(1, w))``; the r15
+    profile (VERDICT r14 item 1) measured that 25x multiplicity
+    expansion at 5.5 s of the id's 6.5 s — and GK accuracy was NOT the
+    cost (accuracy 200 still 5.1 s; it is 15M rows through an
+    ObjectHashAggregate) — so the generic explode-multiplicity ladder
+    is documented here as the anti-pattern the weighted sketch exists
+    to avoid. The sketch's q=0.5 point is the upper bound of the first
+    cell where cumulative weight crosses half the total (cumulated
+    over the ≤1.4k collected cells driver-side — a bounded control
+    table, same discipline as the split-point collects). Twin
+    discipline: the reported median/total are EXACT (hash gate
+    re-verifies them), computed TWO-PHASE from the same cells: the
+    cell sums locate the crossing cell and its exact below-weight, so
+    the exact pass is a codegen filter to the ~2 relevant cells per
+    flag (~1/500 of the rows) plus a window over that narrow set with
+    the below-weight as a literal offset — replacing r14's per-flag
+    GLOBAL sort (a |flags|-partition window over every row: 2.5 s of
+    the old 6.5 s here, and the unscalable part of the plan — |flags|
+    tasks no matter the cluster). The sketch feeds
+    ``sketch_in_envelope`` — TRUE iff the sketch point's
+    cumulative-weight position lies in [45%, 55%] of the group's total
+    weight (20*cw_le >= 9*total and 20*cw_lt <= 11*total,
+    integer-exact; gamma=1.01 gives ≤1% value error, comfortably
+    inside the band); its rank-counts fuse into the narrow pass as
+    conditional sums (cells <= crossing carry cents < b by
+    construction, cells > crossing+1 carry cents > b, so only
+    crossing+1 rows are compared to b row-level). Zero full-data
+    shuffles or sorts remain: one mergeable cell aggregate + one
+    narrow refinement."""
+    import math
+
+    x, wcum = _weighted_lines(spark, sf_dir)
+    gamma = 1.01
+    lg = math.log(gamma)
+    xc = x.withColumn(
+        "cell",
+        F.floor(F.log(F.col("cents").cast("double")) / F.lit(lg)).cast(
+            "bigint"
+        ),
+    )
+    cells = (
+        xc.groupBy("flag", "cell").agg(F.sum("w").alias("cw")).collect()
+    )
+    by_flag: dict[str, list[tuple[int, int]]] = {}
+    for r in cells:
+        by_flag.setdefault(r["flag"], []).append((r["cell"], r["cw"]))
+    # Per-flag control scalars from the exact cell sums: the crossing
+    # cell (where cumulative weight first reaches half the total), the
+    # exact weight below it, the sketch point b (crossing cell's upper
+    # bound), and the exact weight at-or-below the crossing cell (the
+    # envelope base — every row in cells <= crossing has cents < b,
+    # every row in cells > crossing+1 has cents > b, so only the
+    # crossing+1 cell needs row-level inspection against b).
+    ctl: dict[str, tuple[int, int, int, int, int]] = {}
+    for fl, cs in by_flag.items():
+        cs.sort()
+        total = sum(cw for _, cw in cs)
+        acc = 0
+        for cell, cw in cs:
+            if 2 * (acc + cw) >= total:
+                b = int(math.ceil(gamma ** (cell + 1)))
+                ctl[fl] = (cell, acc, total, b, acc + cw)
+                break
+            acc += cw
+
+    def _case(idx: int, dtype: str = "bigint"):
+        c = F.lit(None).cast(dtype)
+        for fl, vals in ctl.items():
+            c = F.when(F.col("flag") == F.lit(fl), F.lit(vals[idx])).otherwise(
+                c
+            )
+        return c
+
+    cross_case, below_case, total_case, b_case, le_below_case = (
+        _case(0),
+        _case(1),
+        _case(2),
+        _case(3),
+        _case(4),
+    )
+    narrow = xc.where(
+        (F.col("cell") == cross_case) | (F.col("cell") == cross_case + 1)
+    )
+    cum = narrow.select(
+        "flag",
+        "cents",
+        "cell",
+        "w",
+        cross_case.alias("cross"),
+        total_case.alias("total"),
+        b_case.alias("b"),
+        le_below_case.alias("le_below"),
+        (
+            below_case
+            + F.sum(F.when(F.col("cell") == cross_case, F.col("w")).otherwise(0)).over(
+                wcum
+            )
+        ).alias("cw"),
+    )
+    return cum.groupBy("flag").agg(
+        F.min(
+            F.when(
+                (F.col("cell") == F.col("cross"))
+                & (2 * F.col("cw") >= F.col("total")),
+                F.col("cents"),
+            )
+        )
+        .cast("bigint")
+        .alias("weighted_median_cents"),
+        F.max("total").cast("bigint").alias("total_weight"),
+        (
+            (
+                20
+                * (
+                    F.max("le_below")
+                    + F.sum(
+                        F.when(
+                            (F.col("cell") == F.col("cross") + 1)
+                            & (F.col("cents") <= F.col("b")),
+                            F.col("w"),
+                        ).otherwise(0)
+                    )
+                )
+                >= 9 * F.max("total")
+            )
+            & (
+                20
+                * (
+                    F.max("le_below")
+                    + F.sum(
+                        F.when(
+                            (F.col("cell") == F.col("cross") + 1)
+                            & (F.col("cents") < F.col("b")),
+                            F.col("w"),
+                        ).otherwise(0)
+                    )
+                )
+                <= 11 * F.max("total")
+            )
+        ).alias("sketch_in_envelope"),
     )

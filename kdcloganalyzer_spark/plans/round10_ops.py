@@ -13,7 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.plans.registry import query
+from kdcloganalyzer_spark.sources.tables import cents
 from kdcloganalyzer_spark.plans.round9_ops import source_index
 
 # Shared oracle texts (identical rows => identical SQL twin).
@@ -120,7 +122,6 @@ def pipeline_interleave_sources_ranged(
     exchange for the writer (sampled split points, so shards stay
     balanced even though early mix positions are denser); shard count
     scales with the cluster, not the corpus."""
-    import tempfile
 
     from kdcloganalyzer_spark.sources.tables import load_table
     from pyspark.sql.window import Window
@@ -147,7 +148,7 @@ def pipeline_interleave_sources_ranged(
             .alias("mix_pos"),
         )
     )
-    out = tempfile.mkdtemp(prefix="interleave_shards_")
+    out = appcache.tempdir(prefix="interleave_shards_")
     (
         epoch.repartitionByRange(8, "mix_pos")
         .sortWithinPartitions("mix_pos")
@@ -729,9 +730,9 @@ def agg_histogram_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kdcloganalyzer_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").where(F.col("value") > 0)
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    value_c = cents("value")
     return (
-        ev.select("event_type", cents.alias("cents"))
+        ev.select("event_type", value_c.alias("cents"))
         .groupBy(
             "event_type",
             F.length(F.conv(F.col("cents"), 10, 2))
@@ -791,7 +792,6 @@ def pipeline_shard_manifest_checksums(
     uniform). At 100 TB this IS the release-validation job: producer
     and consumer each compute the manifest and diff — kilobytes of
     state certifying terabytes of shards."""
-    import tempfile
 
     from kdcloganalyzer_spark.sources.tables import load_table
 
@@ -806,7 +806,7 @@ def pipeline_shard_manifest_checksums(
         h60.alias("h60"),
         (h60 % _N_SHARDS).cast("int").alias("shard"),
     )
-    out = tempfile.mkdtemp(prefix="corpus_shards_")
+    out = appcache.tempdir(prefix="corpus_shards_")
     sharded.write.mode("overwrite").partitionBy("shard").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy("shard").agg(
@@ -862,7 +862,6 @@ def join_bloom_prescreen_explicit(
     is pure whole-stage-codegen integer arithmetic. Selectivity here:
     ~5% of customers pass the acctbal cut, so most fact rows drop
     scan-side before the exchange."""
-    from kdcloganalyzer_spark.plans.relational import _cents
     from kdcloganalyzer_spark.sources.tables import load_table
 
     m_bits, n_words, k = 16384, 256, 3
@@ -913,7 +912,7 @@ def join_bloom_prescreen_explicit(
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
-            F.sum(_cents("value")).cast("bigint").alias("sum_value_c"),
+            F.sum(cents("value")).cast("bigint").alias("sum_value_c"),
         )
     )
 
@@ -1278,7 +1277,6 @@ def events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB you run KS on the per-shard equi-depth histogram
     (agg_histogram_equi_depth) instead of raw points — same statistic
     to histogram resolution."""
-    from kdcloganalyzer_spark.plans.relational import _cents
     from kdcloganalyzer_spark.sources.tables import load_table
     from pyspark.sql.window import Window
 
@@ -1290,7 +1288,7 @@ def events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = (
         ev.where(F.col("event_type").isin(*all_types))
         .select(
-            _cents("value").alias("cents"),
+            cents("value").alias("cents"),
             "event_type",
             F.explode(
                 F.expr(
@@ -1518,7 +1516,6 @@ def events_did_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     the effect is arithmetic over the collected cells. This is the
     panel-data shape: at 100 TB the same plan with (cohort, week)
     cells feeds an event-study regression downstream."""
-    from kdcloganalyzer_spark.plans.relational import _cents
     from kdcloganalyzer_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
@@ -1530,7 +1527,7 @@ def events_did_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("post"),
         )
         .agg(
-            F.sum(_cents("value")).cast("bigint").alias("sum_c"),
+            F.sum(cents("value")).cast("bigint").alias("sum_c"),
             F.count("*").cast("bigint").alias("n"),
         )
         .withColumn(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.plans.registry import query
+from kdcloganalyzer_spark.sources.tables import cents
 
 # ---------------------------------------------------------------------------
 # Embedding clustering — per-cluster size / exact-integer inertia report
@@ -747,8 +748,7 @@ def analytics_hhi_concentration(
         )
         .agg(
             F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("bigint")
-                * (100 - F.round(F.col("l_discount") * 100).cast("bigint"))
+                cents("l_extendedprice") * (100 - cents("l_discount"))
             )
             .cast("bigint")
             .alias("rev_e4")
@@ -1261,9 +1261,7 @@ def analytics_revenue_bridge(
             F.sum(F.col("l_quantity").cast("bigint"))
             .cast("bigint")
             .alias("q"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("r"),
+            F.sum(cents("l_extendedprice")).cast("bigint").alias("r"),
         )
     )
     w = (
@@ -2586,7 +2584,7 @@ def analytics_duplicate_payments(
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         F.date_trunc("day", "o_orderdate").alias("day"),
         "o_orderkey",
     )
@@ -3021,7 +3019,7 @@ def fn_ignore_nulls_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.when(
             F.col("event_type") == "purchase",
-            F.round(F.col("value") * 100).cast("bigint"),
+            cents("value"),
         ).alias("p_cents"),
     )
     run = (

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans.registry import query
+from kdcloganalyzer_spark.sources.tables import cents
 
 # ---------------------------------------------------------------------------
 # Label propagation iterated to a fixed point
@@ -617,9 +618,7 @@ def quality_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         "o_orderpriority",
         "o_orderdate",
-        F.round(F.col("o_totalprice") * 100)
-        .cast("bigint")
-        .alias("o_totalprice_cents"),
+        cents("o_totalprice").alias("o_totalprice_cents"),
     )
     parts = []
     for c in src.columns:
@@ -780,9 +779,7 @@ def scan_hive_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "orders")
             .select(
                 "o_orderpriority",
-                F.round(F.col("o_totalprice") * 100)
-                .cast("bigint")
-                .alias("cents"),
+                cents("o_totalprice").alias("cents"),
                 "o_orderstatus",
             )
             .coalesce(1)
@@ -920,7 +917,7 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     d = dim.alias("d")
     p = pur.alias("p")

@@ -501,7 +501,7 @@ def stream_dedup_within_watermark(
     grows with the key universe. Same doubled feed and oracle as
     stream_dedup_exact: the two ids differ only in the state-eviction
     contract, which is exactly the 100 TB difference."""
-    df = SQ.stream_dedup_events_within_watermark(spark, sf_dir)
+    df = SQ.stream_dedup_events(spark, sf_dir, within_watermark=True)
     return df.localCheckpoint(eager=True)
 
 

@@ -130,6 +130,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_ts(df, *ts_cols, schema=schema)
 
 
+def cents(col):
+    """Exact integer cents of a 2-decimal money DOUBLE column.
+
+    All money/value columns in the driver tables carry exactly 2
+    decimals (verified against the parquet), so this is lossless and
+    makes every downstream sum order-free. SQL twin:
+    ``CAST(round(x * 100) AS BIGINT)``."""
+    if isinstance(col, str):
+        col = F.col(col)
+    return F.round(col * 100).cast("bigint")
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all driver tables as temp views for spark.sql() queries."""
     for name in DRIVER_TABLES:

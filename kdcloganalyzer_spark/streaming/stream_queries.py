@@ -35,6 +35,8 @@ from itertools import count
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kdcloganalyzer_spark.sources.tables import cents
+
 _MEM_SEQ = count()
 
 
@@ -156,7 +158,7 @@ def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts", "1 day").alias("win"), "event_type"
     ).agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("sum_value_c"),
+        F.sum(cents("value")).cast("bigint").alias("sum_value_c"),
     )
     res = _run_to_memory(out)
     return res.select(
@@ -170,7 +172,7 @@ def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     out = ev.groupBy(F.window("ts", "2 days", "1 day").alias("win")).agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("sum_value_c"),
+        F.sum(cents("value")).cast("bigint").alias("sum_value_c"),
     )
     res = _run_to_memory(out)
     return res.select(
@@ -371,7 +373,7 @@ def static_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = ev.join(F.broadcast(dim), "user_id", "left")
     out = joined.groupBy("c_mktsegment").agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("sum_value_c"),
+        F.sum(cents("value")).cast("bigint").alias("sum_value_c"),
     )
     return _run_to_memory(out)
 
@@ -661,7 +663,9 @@ def stream_sessionize_tail_kdc(
     )
 
 
-def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def stream_dedup_events(
+    spark: SparkSession, sf_dir: str, within_watermark: bool = False
+) -> DataFrame:
     """Streaming exact dedup: the events file is staged TWICE into the
     monitored directory (a replayed/at-least-once upstream), and
     ``withWatermark + dropDuplicates`` emits each event_id exactly once;
@@ -672,7 +676,14 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup key; the watermark bounds retention so an unbounded stream
     holds state only for the lateness horizon (under AvailableNow the
     watermark advances at the final commit, so the full bounded run
-    dedups globally — exactly what a backfill replay wants)."""
+    dedups globally — exactly what a backfill replay wants).
+
+    ``within_watermark`` swaps in ``dropDuplicatesWithinWatermark``, the
+    BOUNDED-STATE form: state for a key is evicted once the watermark
+    passes its event time plus the delay, so an unbounded replay holds
+    state for the lateness horizon, never the key universe. The staged
+    replay arrives well inside the 1-hour delay, so the bounded run
+    dedups exactly like the unbounded-state form."""
     import os
 
     key = f"{sf_dir}::dup2"
@@ -696,13 +707,17 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(_STAGE_CACHE[key]),
         "ts",
-    ).withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
+    ).withWatermark("ts", "1 hour")
+    if within_watermark:
+        sdf = sdf.dropDuplicatesWithinWatermark(["event_id"])
+    else:
+        sdf = sdf.dropDuplicates(["event_id"])
     # 8 partitions: 100k-key dedup state is commit-bound; more
     # partitions parallelize the per-partition store commits.
     deduped = _run_to_memory(sdf, "append", n_shuffle=8)
     return deduped.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("sum_value_c"),
+        F.sum(cents("value")).cast("bigint").alias("sum_value_c"),
     )
 
 
@@ -942,7 +957,7 @@ def union_two_sources_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts", "1 day").alias("win"), "feed"
     ).agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("sum_value_c"),
+        F.sum(cents("value")).cast("bigint").alias("sum_value_c"),
     )
     res = _run_to_memory(out)
     return res.select(
@@ -1273,55 +1288,6 @@ def session_timeout_closures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return acc
 
 
-def stream_dedup_events_within_watermark(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming dedup via ``dropDuplicatesWithinWatermark`` — the
-    BOUNDED-STATE variant of stream_dedup_events: state for a key is
-    evicted once the watermark passes its event time plus the delay,
-    so an unbounded at-least-once replay holds state proportional to
-    the lateness horizon, never the key universe (plain
-    dropDuplicates under a watermark keeps keys forever unless the
-    key itself embeds event time). The staged double-replay arrives
-    well inside the 1-hour delay, so the bounded run dedups exactly
-    like the unbounded-state form and shares its oracle."""
-    import os
-
-    key = f"{sf_dir}::dup2ww"
-    if key not in _STAGE_CACHE:
-        d = appcache.tempdir(prefix="events_dupww_")
-        src = os.path.abspath(f"{sf_dir}/events.parquet")
-        os.symlink(src, f"{d}/copy_a.parquet")
-        os.symlink(src, f"{d}/copy_b.parquet")
-        _STAGE_CACHE[key] = d
-    path = f"{sf_dir}/events.parquet"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    from kdcloganalyzer_spark.sources.tables import (
-        ensure_utc_session,
-        normalize_ts,
-    )
-
-    ensure_utc_session(spark)
-    sdf = (
-        normalize_ts(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_STAGE_CACHE[key]),
-            "ts",
-        )
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    deduped = _run_to_memory(sdf, "append", n_shuffle=8)
-    return deduped.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_value_c"),
-    )
-
-
 def stream_rate_limit_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming token-bucket keeper — the stateful twin of
     events_rate_limit_sim (plans/round11_ops.py): per-user
@@ -1405,33 +1371,11 @@ def windowed_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (state would need retractions across 7 closed windows).
     Shares events_bollinger_bands' oracle: integer cross-multiplied
     test, no float anywhere."""
-    from pyspark.sql.window import Window as W
+    from kdcloganalyzer_spark.plans.round12_ops import bollinger_breach
 
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     out = ev.groupBy(F.window("ts", "1 day").alias("win")).agg(
         F.count("*").cast("bigint").alias("x")
     )
-    res = _run_to_memory(out).select(
-        F.col("win.start").alias("day"), "x"
-    )
-    win = W.orderBy("day").rowsBetween(-6, W.currentRow)
-    w = res.select(
-        "day",
-        "x",
-        F.count("*").over(win).cast("bigint").alias("n"),
-        F.sum("x").over(win).cast("bigint").alias("s"),
-        F.sum(F.col("x") * F.col("x")).over(win).cast("bigint").alias("q"),
-    )
-    dev = F.col("x") * F.col("n") - F.col("s")
-    var4 = 4 * (F.col("n") * F.col("q") - F.col("s") * F.col("s"))
-    return w.select(
-        "day",
-        F.col("x").alias("n_events"),
-        F.col("n").alias("win_n"),
-        F.expr("CAST(s * 1000 div n AS BIGINT)").alias("mean_milli"),
-        (F.col("n") * F.col("q") - F.col("s") * F.col("s"))
-        .cast("bigint")
-        .alias("var_num"),
-        ((dev > 0) & (dev * dev > var4)).alias("breach_hi"),
-        ((dev < 0) & (dev * dev > var4)).alias("breach_lo"),
-    )
+    res = _run_to_memory(out).select(F.col("win.start").alias("day"), "x")
+    return bollinger_breach(res)

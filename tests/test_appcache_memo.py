@@ -166,8 +166,10 @@ def test_memos_without_readers_are_pinned():
 
 def test_app_scoped_caches_live_only_in_appcache():
     """Outside appcache, no module keys a cache on applicationId, calls
-    the stale-entry drop, or registers an evictor by hand — except
-    join_bucketed's catalog evictor, whose cache is not a dict."""
+    the stale-entry drop, makes a scratch dir other than through
+    ``appcache.tempdir`` (the only one removed at exit), or registers an
+    evictor by hand — except join_bucketed's catalog evictor, whose
+    cache is not a dict."""
     offenders = []
     registrations = []
     for path in sorted(PKG.rglob("*.py")):
@@ -175,7 +177,9 @@ def test_app_scoped_caches_live_only_in_appcache():
             continue
         rel = path.relative_to(PKG).as_posix()
         for n, line in enumerate(path.read_text().splitlines(), 1):
-            if re.search(r"\.applicationId\b|\bevict_stale\b", line):
+            if re.search(
+                r"\.applicationId\b|\bevict_stale\b|\bmkdtemp\b", line
+            ):
                 offenders.append(f"{rel}:{n}: {line.strip()}")
             if "register_evictor(" in line:
                 registrations.append(rel)

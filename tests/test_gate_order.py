@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import glob
 import json
+import logging
 import os
 import sys
 
@@ -157,3 +158,20 @@ def test_oldest_first_seen_ids_come_first_within_urgent():
     seen_round = getattr(_latest_rows, "seen_round", {})
     cert_rounds = [seen_round.get(q, -1) for q in changed]
     assert cert_rounds == sorted(cert_rounds), changed
+
+
+def test_corrupt_gate_state_is_logged_and_kept(tmp_path, monkeypatch, caplog):
+    """An unparsable GATE_ORACLE_FP.json is reported once and left
+    byte-identical: rewriting it would erase every id's oracle-change
+    history for good."""
+    bad = b'{"agg_min_max_count": {"fp": "0123'
+    (tmp_path / "GATE_ORACLE_FP.json").write_bytes(bad)
+    monkeypatch.setattr(entry, "_HERE", str(tmp_path))
+    with caplog.at_level(logging.WARNING, logger=entry.__name__):
+        order = entry._gate_order(list(registry.QUERIES))
+    assert sorted(order) == sorted(registry.QUERIES)
+    assert (tmp_path / "GATE_ORACLE_FP.json").read_bytes() == bad
+    warned = [
+        r for r in caplog.records if "GATE_ORACLE_FP.json" in r.getMessage()
+    ]
+    assert len(warned) == 1 and warned[0].exc_info

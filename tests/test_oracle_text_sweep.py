@@ -1,7 +1,7 @@
 """Blanket ORACLE-TEXT sweep: the r9 driver proved that
 ``round(sum(DOUBLE), n)`` flips value hashes on summation order when the
 true sum lands on a rounding boundary — the repo-wide fix is exact
-integer units per row BEFORE the sum (``_cents``/``_rev_e4`` ⇄
+integer units per row BEFORE the sum (``cents``/``_rev_e4`` ⇄
 ``CAST(round(x*100) AS BIGINT)``). This sweep makes the class
 structurally unable to re-enter via a NEW oracle: every float-aggregate-
 then-round textual shape must either match a known-safe form or carry an
