@@ -292,7 +292,7 @@ def _evict_amortized(qid: str) -> bool:
     is genuinely cold. r14: routed through the appcache eviction
     registry (each plan module registers its caches with the qids they
     serve — stream results, ANN indexes, PCA/HITS/coreset reports, the
-    kdc_records persist, bucketed tables, BPE merges, LP labels,
+    kdc_records checkpoint, bucketed tables, BPE merges, LP labels,
     staged CSV dirs), so min-of-N cold sampling applies uniformly
     instead of stream-only (VERDICT r13 item 2). Returns True if at
     least one cache was cleared."""

@@ -1,6 +1,6 @@
 """App-scoped memos for amortized builds, and staged temp dirs.
 
-The engine is parse-once, query-many: the KDC records persist, edge
+The engine is parse-once, query-many: the KDC records checkpoint, edge
 lists, ANN indexes, MinHash signatures, BPE merges, stream results and
 staged layouts are each built once per (session, sf) and then read by
 many queries. ``memo(readers)`` is the one implementation of that
@@ -20,7 +20,7 @@ contract. It decorates a builder ``build(spark, *args)`` and
 ``readers`` names the query ids that read through the memo:
 
 - a tuple of ids;
-- a module name: every id that module registers (the records persist);
+- a module name: every id that module registers (the records checkpoint);
 - a callable ``qid -> bool`` (the ``stream_`` prefix);
 - ``None``: no evictor, so those ids are never re-sampled cold. Say why
   on the line above the decorator.

@@ -2802,9 +2802,8 @@ def events_forecast_seasonal_naive(
     it is long single series that do not. ``keys`` are the series
     columns (none: one global series)."""
     ev = load_table(spark, sf_dir, "events")
-    # The keyed form truncates ts to its day and zero-guards the MASE
-    # divisor (a flat series); each form keeps the spelling its
-    # certified plan has.
+    # The keyed form truncates ts to its day; each form keeps the
+    # spelling its certified plan has.
     day = F.date_trunc("day", "ts").cast("date") if keys else F.to_date("ts")
     d = ev.groupBy(*keys, day.alias("day")).agg(
         F.sum(cents("value")).cast("bigint").alias("cents")
@@ -2816,9 +2815,6 @@ def events_forecast_seasonal_naive(
         F.lag("cents", 7).over(w).alias("forecast"),
         F.lag("cents", 1).over(w).alias("naive"),
     ).where(F.col("forecast").isNotNull() & F.col("naive").isNotNull())
-    naive_err = "CAST(sum(abs(cents - naive)) AS DECIMAL(38,0))"
-    if keys:
-        naive_err = f"nullif({naive_err}, 0)"
     return j.groupBy(*keys).agg(
         F.count("*").alias("n_days"),
         F.sum(F.abs(F.col("cents") - F.col("forecast")))
@@ -2828,10 +2824,11 @@ def events_forecast_seasonal_naive(
         .cast("bigint")
         .alias("naive_abs_err"),
         # DECIMAL(38,0) widening (r15): error-cent sums are unbounded in
-        # data volume; *1e6 passes BIGINT range past ~sf3 of this series
+        # data volume; *1e6 passes BIGINT range past ~sf3 of this series.
+        # A flat series has no naive error: NULL, as the oracle's `//`.
         F.expr(
             "CAST(sum(abs(cents - forecast)) AS DECIMAL(38,0)) * 1000000"
-            f" div {naive_err}"
+            " div nullif(CAST(sum(abs(cents - naive)) AS DECIMAL(38,0)), 0)"
         ).alias("mase_micro"),
     )
 

@@ -8,9 +8,11 @@ reference's README.md:4-13 workload — instead of the weaker rows-only
 check; record-LEVEL parse semantics stay pinned by the golden-fixture
 pytest suite (tests/test_kdc_parser.py, tests/test_kdc_queries.py).
 
-The parsed `kdc_records` DataFrame is persisted per (session, sf) — parse
-once, query many, exactly how a production deployment would materialize the
-records table before fanning out queries.
+The parsed `kdc_records` DataFrame is a lineage-cut checkpoint per
+(session, sf) — parse once, query many, exactly how a production
+deployment would materialize the records table before fanning out
+queries. Each report plans over the checkpointed rows, not over the
+sessionizer that built them.
 """
 
 from __future__ import annotations
@@ -105,14 +107,29 @@ def kdc_records_parquet(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
-# Every id in this module reads through the persist, so the bench's
-# min-of-N COLD protocol evicts it for any of them: a re-sample then
-# re-pays the sessionize. The on-disk records parquet is not touched: it
-# is a deployment artifact (the oracle twin), not in-process amortization.
+# Every id in this module reads through the lineage-cut checkpoint, so
+# the bench's min-of-N COLD protocol evicts it for any of them: a
+# re-sample then re-pays the sessionize. A persist() here would keep the
+# sessionizer as the cache's plan, and every report would re-plan and
+# re-render it (~24k characters of plan text per one-line aggregate);
+# the checkpoint's plan is a scan of its rows. Its blocks are freed when
+# the JVM collects the evicted RDD. The on-disk records parquet is not
+# touched: it is a deployment artifact (the oracle twin), not in-process
+# amortization.
 @appcache.memo(readers=__name__)
 def _persisted_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = synth_dir_for_sf(sf_dir)
-    return sessionize(read_log_lines_raw(spark, log_dir)).persist()
+    recs = sessionize(read_log_lines_raw(spark, log_dir)).localCheckpoint(
+        eager=True
+    )
+    # A checkpoint reports UnknownPartitioning. When AQE coalesced the
+    # sessionize output to one partition (small corpora), say so: a
+    # report's aggregate or window over a SinglePartition child needs no
+    # exchange, so it runs as one stage. Coalescing one partition moves
+    # no data; a wider checkpoint keeps its width.
+    if recs.rdd.getNumPartitions() == 1:
+        recs = recs.coalesce(1)
+    return recs
 
 
 def kdc_records(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -111,7 +111,12 @@ def _run_to_memory(
             # state checkpoints in tmpfs for the process lifetime
             # (ADVICE r13). atexit (appcache.tempdir) stays as backstop.
             shutil.rmtree(ckdir, ignore_errors=True)
-    return spark.table(name)
+    # The frame keeps the sink's MemoryPlan; dropping the view frees the
+    # catalog entry, so a re-run does not pin the last run's rows for
+    # the life of the session.
+    res = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return res
 
 
 _STAGE_CACHE: dict[str, str] = {}

@@ -58,3 +58,33 @@ def test_latest_by_key_is_unique_per_key(spark, sf_dir):
         .count()
     )
     assert dup == 0
+
+
+def test_forecast_flat_series_gives_null_mase(spark, tmp_path):
+    """A flat daily series has zero naive error: both forms return a
+    NULL MASE, as the oracle's integer division does, instead of a
+    divide-by-zero."""
+    from datetime import datetime, timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    days = [datetime(2024, 1, 1) + timedelta(days=i) for i in range(21)]
+    pq.write_table(
+        pa.table({
+            "event_id": list(range(len(days))),
+            "ts": pa.array(days, pa.timestamp("us")),
+            "user_id": [1] * len(days),
+            "event_type": ["view"] * len(days),
+            "value": [12.5] * len(days),
+        }),
+        tmp_path / "events.parquet",
+    )
+    for qid in (
+        "events_forecast_seasonal_naive",
+        "events_forecast_seasonal_naive_series",
+    ):
+        (row,) = registry.QUERIES[qid](spark, str(tmp_path)).collect()
+        assert row["n_days"] == len(days) - 7, qid
+        assert row["naive_abs_err"] == 0, qid
+        assert row["mase_micro"] is None, qid

@@ -7,6 +7,11 @@ negations of the classes before it, the optimized plan would grow to
 ~60k characters holding the header regex ~100 times, and every plan
 build would cost thousands of py4j round trips. These tests fail if that
 comes back.
+
+The reports read the records through a lineage-cut checkpoint, so their
+plans hold none of that classifier: a persisted records frame would keep
+the sessionizer as its cache plan, and every report would re-plan and
+re-render ~24k characters of it.
 """
 
 from __future__ import annotations
@@ -29,9 +34,22 @@ from kdcloganalyzer_spark.functions.kdc_parse import (
     header_fields,
 )
 from kdcloganalyzer_spark.operators.sessionize import sessionize
+from kdcloganalyzer_spark.plans import registry
+from kdcloganalyzer_spark.plans.kdc_queries import kdc_records
 from kdcloganalyzer_spark.sources.kdc_log import read_log_lines_raw
+from kdcloganalyzer_spark.sources.kdc_synth import synth_dir_for_sf
+
+registry.load_all()
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "fixtures", "kdc", "golden.log")
+
+#: the KDC report ids of the benchmark's read-side mix
+REPORT_IDS = (
+    "first_last_auth_per_user", "auth_count_per_user", "tgs_count_per_service",
+    "first_last_use_per_service", "most_common_errors", "users_few_services",
+    "top_n_kdc_entities", "counters_observe", "agg_tagged_union",
+    "kdc_failed_auth_burst", "kdc_password_spray", "kdc_account_lockout",
+)
 
 
 @pytest.fixture(scope="module")
@@ -112,3 +130,44 @@ def test_per_jvm_rebuilds_for_a_new_gateway(monkeypatch):
     monkeypatch.setattr(SparkContext, "_gateway", object())
     assert appcache.per_jvm("t", build) == 2
     assert appcache.per_jvm("t", build) == 2
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("qid", REPORT_IDS)
+def test_report_plan_excludes_the_sessionizer(spark, sf_dir, qid):
+    df = registry.QUERIES[qid](spark, sf_dir)
+    df.collect()
+    plan = _executed_plan(df)
+    assert len(plan) < 5_000, len(plan)
+    for pattern in (HEADER_RE, SENDING_RE, VERIFY_RE):
+        assert pattern not in plan, pattern
+    # the test corpus's records are one partition, declared as such
+    assert "Exchange" not in plan, plan
+
+
+def test_records_are_a_lineage_cut_fresh_parse(spark, sf_dir):
+    recs = kdc_records(spark, sf_dir)
+    fresh = sessionize(read_log_lines_raw(spark, synth_dir_for_sf(sf_dir)))
+    assert recs.columns == fresh.columns
+    assert recs.exceptAll(fresh).count() == 0
+    assert fresh.exceptAll(recs).count() == 0
+    # not a read-back of the parquet oracle twin, and not the sessionizer
+    # re-planned under a cache node
+    plan = _executed_plan(recs)
+    assert "FileScan" not in plan, plan
+
+
+def test_evicted_records_rebuild_from_the_logs(spark, sf_dir):
+    kdc_records(spark, sf_dir)
+    assert appcache.evict_for("first_last_auth_per_user")
+    sc = spark.sparkContext
+    sc.setJobGroup("records_rebuild", "kdc_records after eviction")
+    try:
+        kdc_records(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert sc.statusTracker().getJobIdsForGroup("records_rebuild")

@@ -175,3 +175,17 @@ def test_rate_limit_keeper_multichunk_groups(spark, sf_dir, tmp_path):
         "fixture must have a user spanning >1 Arrow chunk"
     )
     assert got == expect
+
+
+def test_stream_run_leaves_no_sink_view(spark, sf_dir):
+    """A bounded run's memory-sink view is dropped once its result frame
+    exists: re-runs must not pin every past run's rows in the catalog."""
+    from kdcloganalyzer_spark import appcache
+    from kdcloganalyzer_spark.plans import registry
+
+    registry.load_all()
+    appcache.evict_for("stream_window_tumbling")
+    res = registry.QUERIES["stream_window_tumbling"](spark, sf_dir)
+    assert res.count() > 0
+    names = [t.name for t in spark.catalog.listTables()]
+    assert not [n for n in names if n.startswith("stream_result_")], names

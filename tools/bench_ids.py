@@ -8,6 +8,11 @@ the full 405-id suite. Prints one JSON line per id.
 runs 2-3 flags generated code that changes from run to run (a literal
 that differs per build) or a codegen cache too small for the ids run.
 
+``plan_chars`` is the length of the last run's executed physical plan
+text. Planning and rendering that plan costs CPU on every run, so
+a memo that drags its build plan into its readers shows up here as a
+plan far longer than the id's own operators.
+
 An id that raises is recorded as ``{"error": ...}`` and the run goes on,
 so one scale rehearsal can time a whole id list above the broadcast
 gates (tools/build_sf1.py / build_sf3.py build the datasets).
@@ -57,7 +62,8 @@ def main() -> None:
             for _ in range(3):
                 c0 = codegen_compiles(spark)
                 t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                df = fn(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
                 compiles.append(codegen_compiles(spark) - c0)
             out[qid] = {
@@ -65,6 +71,9 @@ def main() -> None:
                 "median": round(sorted(runs)[1], 3),
                 "runs": [round(r, 3) for r in runs],
                 "compiles": compiles,
+                "plan_chars": len(
+                    df._jdf.queryExecution().executedPlan().toString()
+                ),
             }
         except Exception as ex:  # noqa: BLE001 — e.g. an OOM above a gate
             # one failing id must not end a scale rehearsal of the rest
