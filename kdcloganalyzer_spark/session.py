@@ -5,17 +5,36 @@ knob is chosen to also be the right call on a 1000-executor cluster:
 AQE on (runtime re-planning, skew-join splitting, partition coalescing),
 Arrow for any Python exchange, and a shuffle-partition count that AQE can
 coalesce downward rather than a hardcoded small one it can't raise.
+
+Every CLI run, bench run and test session starts one fresh gateway JVM,
+and starting it (loading and linking Spark's classes) was the largest
+fixed cost left. So a launch from ``get_spark`` starts from a dynamic
+AppCDS archive it builds itself (``_CdsLaunch``): it maps a checked
+archive, or on a miss asks that JVM to dump one at exit. The archive
+lives in ``${XDG_CACHE_HOME:-~/.cache}/kdcloganalyzer_spark/cds/<key>/``,
+keyed on the JDK, pyspark and the Spark jars. Delete that directory, or
+pass ``-Xshare:off`` in ``spark.driver.extraJavaOptions``, for a cold JVM.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import glob
+import hashlib
+import json
+import logging
 import os
+import secrets
+import shutil
+import subprocess
 
 from pyspark.sql import SparkSession
 
+log = logging.getLogger(__name__)
+
 #: local[N] task slots (and shuffle partitions) when SPARK_GRAFT_CPUS is unset
 DEFAULT_CPUS = "32"
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
 #: whole-stage codegen class cache (``spark.sql.codegen.cache.maxEntries``,
 #: an LRU, Spark default 100). Sized to the engine's generated-code working
 #: set, measured on 4 cores: one ingest op compiles 30 classes, one perfbench
@@ -30,6 +49,46 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS
 #: Spark's 100.
 CODEGEN_CACHE_ENTRIES = 8192
 
+#: how the last JVM launched by ``get_spark`` used the CDS archive:
+#: ``{"cds": "mapped" | "promoted" | "dumping" | "skipped", "detail": ...}``
+last_launch: dict[str, str] = {}
+
+
+def builder_conf(
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+    java_options: str = "",
+) -> dict[str, str]:
+    """The session conf ``get_spark`` builds with. ``SPARK_GRAFT_CPUS`` is
+    read here, once per call, for both the task slots and the shuffle
+    partitions. ``java_options`` is appended to the caller's
+    ``spark.driver.extraJavaOptions``, never put in its place."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
+    conf = {
+        "spark.master": master or f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
+        # Adaptive execution: coalesce post-shuffle partitions, split skewed
+        # joins, convert to broadcast at runtime. Essential at 100 TB.
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # Arrow batches for any pandas UDF / toPandas exchange.
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Timestamps: keep everything session-tz independent.
+        "spark.sql.session.timeZone": "UTC",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        **(extra_conf or {}),
+    }
+    opts = " ".join(
+        o for o in (conf.get("spark.driver.extraJavaOptions", ""), java_options) if o
+    )
+    if opts:
+        conf["spark.driver.extraJavaOptions"] = opts
+    return conf
+
 
 def get_spark(
     app_name: str = "kdcloganalyzer_spark",
@@ -38,30 +97,22 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's tuned defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
-        # Adaptive execution: coalesce post-shuffle partitions, split skewed
-        # joins, convert to broadcast at runtime. Essential at 100 TB.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow batches for any pandas UDF / toPandas exchange.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Timestamps: keep everything session-tz independent.
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-    )
-    for k, v in (extra_conf or {}).items():
+    from pyspark import SparkContext
+
+    conf = builder_conf(master, shuffle_partitions, extra_conf)
+    launch = None
+    if SparkContext._gateway is None:  # this call starts the JVM
+        launch = _CdsLaunch.plan(conf)
+        conf = builder_conf(master, shuffle_partitions, extra_conf, launch.options)
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    if launch is None:
+        spark = builder.getOrCreate()
+    else:
+        with launch.environment():
+            spark = builder.getOrCreate()
+        launch.started(spark)
     # Streaming checkpoint base on tmpfs when available: the bounded
     # bench/test streams are commit-latency-bound (measured −20-25% per
     # stateful query vs /tmp-on-disk), and a checkpoint that must
@@ -89,3 +140,212 @@ def codegen_compiles(spark: SparkSession) -> int:
     nothing, so the difference across a warm re-run is its cache misses."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+# -- AppCDS -----------------------------------------------------------------
+#
+# Measured on 4 vCPU (JDK 17, pyspark 4.1.2, perfbench): ``get_spark`` 7.0 →
+# 3.4 s of wall time, the first ingest op 9.6 → 6.7 s; warm ops do not
+# change. The dumping JVM starts slower (10.7 s) and writes its archive at
+# exit (~10 s for 137 MB; 137-216 MB, after one query to a whole test run).
+#
+# Rules the scheme follows, each learned from a JVM that misbehaved:
+# - JDK 17 will not dump when a non-empty directory is on the classpath,
+#   and Spark's launcher puts $SPARK_CONF_DIR first. The launch points it
+#   at an empty ``conf/`` beside the archive, but only when the real conf
+#   dir holds nothing but ``*.template`` files: a user's spark-defaults.conf
+#   or log4j2.properties is never dropped. The other classpath sources
+#   (extraClassPath, *_CONF_DIR, --driver-class-path) skip CDS.
+# - Mapping a truncated archive kills the JVM with SIGBUS, -Xshare:auto or
+#   not. The dumping JVM writes ``app.<pid>.<rand>.jsa.tmp``; a later launch
+#   renames it to ``app.jsa`` only once its writer is gone and a
+#   ``java -Xshare:on`` probe with the writer's exact classpath maps it.
+#   No JVM but the probe ever maps a ``.tmp``. While a writer is alive,
+#   launches start without CDS and start no second dump.
+# - HotSpot logs warnings to stdout, which the gateway JVM shares with
+#   Python (a rejected archive, a class the dump skips): ``_JVM_LOG``.
+#   (A dump that fails anyway prints its "Hint:" lines to stdout.)
+
+#: every JVM log line at warning or above goes to stderr, not stdout; the
+#: ``cds`` tag's warnings (~600 "Skipping <class>" lines from each dump)
+#: are dropped, its errors and ``cds,dynamic`` (a rejected archive) kept
+_JVM_LOG = "-Xlog:disable -Xlog:all=warning:stderr -Xlog:cds=error:stderr"
+#: caller options that already choose a CDS mode: then add nothing
+_CDS_OPTIONS = ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit")
+#: environment that puts more entries (possibly directories) on the
+#: driver classpath
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+
+
+def _cds_root() -> str:
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(cache, "kdcloganalyzer_spark", "cds")
+
+
+def _cds_key(spark_home: str) -> str:
+    """Digest of what an archive's classes come from: the JDK (its
+    ``release`` file), pyspark and every Spark jar's name, size and mtime."""
+    import pyspark
+
+    java_home = os.environ.get("JAVA_HOME") or os.path.dirname(
+        os.path.dirname(os.path.realpath(shutil.which("java") or "java"))
+    )
+    h = hashlib.sha256(f"{java_home}\0{pyspark.__version__}\0".encode())
+    with contextlib.suppress(OSError), open(os.path.join(java_home, "release"), "rb") as f:
+        h.update(f.read())
+    for jar in sorted(glob.glob(os.path.join(spark_home, "jars", "*.jar"))):
+        st = os.stat(jar)
+        h.update(f"{os.path.basename(jar)}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def cds_dir() -> str:
+    """This install's archive directory (it need not exist yet)."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    return os.path.join(_cds_root(), _cds_key(_find_spark_home()))
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # another user's process: alive
+        pass
+    return True
+
+
+def _maps(tmp: str, writer: dict) -> bool:
+    """Whether a JVM maps the finished dump ``tmp``. The probe needs the
+    writer's exact classpath: a different jar order is a mismatch. A cut
+    dump crashes the probe, which then leaves no crash report behind."""
+    try:
+        cmd = [writer["java"], "-Xshare:on", f"-XX:SharedArchiveFile={tmp}",
+               f"-XX:ErrorFile={os.devnull}", "-XX:-CreateCoredumpOnCrash",
+               "-cp", writer["classpath"], "-version"]
+        done = subprocess.run(cmd, stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+                              stderr=subprocess.DEVNULL, timeout=60)
+    except (KeyError, TypeError, OSError, subprocess.TimeoutExpired):
+        return False
+    return done.returncode == 0
+
+
+def _write_json(path: str, obj: dict) -> None:
+    with open(path + ".part", "w") as f:
+        json.dump(obj, f)
+    os.replace(path + ".part", path)
+
+
+class _CdsLaunch:
+    """How one JVM launch uses the archive: ``plan`` decides, under a lock
+    on the key dir, ``environment`` wraps the launch, ``started`` records a
+    dumping JVM for the launch that later promotes its dump."""
+
+    def __init__(self, path: str, detail: str, options: str = "",
+                 conf_dir: str | None = None, writer: str | None = None):
+        self.path, self.detail, self.options = path, detail, options
+        self.conf_dir, self.writer = conf_dir, writer
+
+    @classmethod
+    def plan(cls, conf: dict[str, str]) -> _CdsLaunch:
+        from pyspark.find_spark_home import _find_spark_home
+
+        opts = conf.get("spark.driver.extraJavaOptions", "")
+        spark_home = _find_spark_home()
+        conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        with contextlib.suppress(OSError):
+            kept = sorted(n for n in os.listdir(conf_dir) if not n.endswith(".template"))
+            if kept:
+                return cls("skipped", f"{conf_dir} holds {kept[0]}")
+        if any(o in opts for o in _CDS_OPTIONS):
+            return cls("skipped", "extraJavaOptions choose a CDS mode")
+        env = [v for v in _CLASSPATH_ENV if os.environ.get(v)]
+        if os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell") != "pyspark-shell":
+            env.append("PYSPARK_SUBMIT_ARGS")
+        if env or "spark.driver.extraClassPath" in conf:
+            return cls("skipped", f"classpath extended by {env or 'extraClassPath'}")
+        if "PYSPARK_GATEWAY_PORT" in os.environ:
+            return cls("skipped", "a JVM is already running")
+        d = cds_dir()
+        try:
+            os.makedirs(os.path.join(d, "conf"), exist_ok=True)
+            with open(os.path.join(d, "lock"), "a") as lock:
+                fcntl.flock(lock, fcntl.LOCK_EX)
+                return cls._decide(d)
+        except OSError as e:
+            return cls("skipped", f"archive dir unusable: {e}")
+
+    @classmethod
+    def _decide(cls, d: str) -> _CdsLaunch:
+        archive = os.path.join(d, "app.jsa")
+        writing = promoted = False
+        for side in glob.glob(os.path.join(d, "app.*.json")):
+            tmp = side[: -len(".json")] + ".jsa.tmp"
+            try:
+                with open(side) as f:
+                    writer = json.load(f)
+            except (OSError, ValueError):
+                writer = {}
+            if any(_alive(p) for p in writer.get("pids", [])):
+                writing = True
+                continue
+            if os.path.exists(tmp) and not os.path.exists(archive) and _maps(tmp, writer):
+                os.replace(tmp, archive)
+                promoted = True
+            for f in (tmp, side):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(f)
+        # a dump whose writer record is gone (its launcher died before
+        # recording the JVM) is never trusted
+        for tmp in glob.glob(os.path.join(d, "app.*.jsa.tmp")):
+            if not os.path.exists(tmp[: -len(".jsa.tmp")] + ".json"):
+                os.remove(tmp)
+        conf_dir = os.path.join(d, "conf")
+        if os.path.exists(archive):
+            return cls("promoted" if promoted else "mapped", archive,
+                       f"-XX:SharedArchiveFile={archive} -Xshare:auto {_JVM_LOG}", conf_dir)
+        if writing:
+            return cls("skipped", "another JVM is still writing the archive")
+        root, key = os.path.split(d)
+        for other in os.listdir(root):
+            if other != key:
+                shutil.rmtree(os.path.join(root, other), ignore_errors=True)
+        tag = os.path.join(d, f"app.{os.getpid()}.{secrets.token_hex(4)}")
+        # the launcher stands for the JVM until ``started`` records it
+        _write_json(tag + ".json", {"pids": [os.getpid()]})
+        return cls("dumping", tag + ".jsa.tmp",
+                   f"-XX:ArchiveClassesAtExit={tag}.jsa.tmp {_JVM_LOG}", conf_dir, tag + ".json")
+
+    @contextlib.contextmanager
+    def environment(self):
+        """``SPARK_CONF_DIR`` pointed at the empty conf dir for the launch
+        (pyspark copies ``os.environ`` when it starts the JVM)."""
+        saved = os.environ.get("SPARK_CONF_DIR")
+        if self.conf_dir:
+            os.environ["SPARK_CONF_DIR"] = self.conf_dir
+        try:
+            yield
+        except BaseException:
+            if self.writer:  # no JVM: nothing will be dumped
+                with contextlib.suppress(OSError):
+                    os.remove(self.writer)
+            raise
+        finally:
+            if saved is None:
+                os.environ.pop("SPARK_CONF_DIR", None)
+            else:
+                os.environ["SPARK_CONF_DIR"] = saved
+
+    def started(self, spark: SparkSession) -> None:
+        last_launch.clear()
+        last_launch.update(cds=self.path, detail=self.detail)
+        log.info("CDS %s: %s", self.path, self.detail)
+        if not self.writer:
+            return
+        jvm = spark.sparkContext._jvm
+        _write_json(self.writer, {
+            "pids": [int(jvm.java.lang.ProcessHandle.current().pid())],
+            "java": os.path.join(jvm.System.getProperty("java.home"), "bin", "java"),
+            "classpath": jvm.System.getProperty("java.class.path"),
+        })

@@ -110,17 +110,24 @@ def normalize_ts(df: DataFrame, *cols: str, schema=None) -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_utc_session(spark)
-    path = f"{sf_dir}/{name}.parquet"
+def parquet_schema(spark: SparkSession, path: str):
+    """``(read schema, nanos columns)`` of a parquet file, for readers that
+    pass the schema back to ``read``/``readStream``. The legacy nanos conf
+    is pinned (once per app) only when the footer holds nanos columns."""
     nano_cols = _nano_ts_columns(path)
     if nano_cols:
         # Runtime-settable; applied here so the loader works under any
-        # SparkSession (the driver builds its own). Pinned once per app.
+        # SparkSession (the driver builds its own).
         _pin_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _read_schema(spark, path), nano_cols
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    ensure_utc_session(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    schema, nano_cols = parquet_schema(spark, path)
     # A fresh DataFrame (fresh attribute ids) is built per call, so
     # self-joins of two load_table results stay unambiguous.
-    schema = _read_schema(spark, path)
     df = spark.read.schema(schema).parquet(path)
     ts_cols = [
         f.name

@@ -145,12 +145,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kdcloganalyzer_spark.sources.tables import (
         ensure_utc_session,
         normalize_ts,
+        parquet_schema,
     )
 
     ensure_utc_session(spark)
-    path = f"{sf_dir}/events.parquet"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema, _ = parquet_schema(spark, f"{sf_dir}/events.parquet")
     sdf = spark.readStream.schema(schema).parquet(_staged_events_dir(sf_dir))
     return normalize_ts(sdf, "ts")
 
@@ -698,15 +697,14 @@ def stream_dedup_events(
         os.symlink(src, f"{d}/copy_a.parquet")
         os.symlink(src, f"{d}/copy_b.parquet")
         _STAGE_CACHE[key] = d
-    path = f"{sf_dir}/events.parquet"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
     from kdcloganalyzer_spark.sources.tables import (
         ensure_utc_session,
         normalize_ts,
+        parquet_schema,
     )
 
     ensure_utc_session(spark)
+    schema, _ = parquet_schema(spark, f"{sf_dir}/events.parquet")
     sdf = normalize_ts(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -189,3 +189,17 @@ def test_stream_run_leaves_no_sink_view(spark, sf_dir):
     assert res.count() > 0
     names = [t.name for t in spark.catalog.listTables()]
     assert not [n for n in names if n.startswith("stream_result_")], names
+
+
+def test_events_stream_pins_no_nanos_conf(spark, sf_dir):
+    """The legacy nanos-as-long read is pinned only for a footer that
+    holds TIMESTAMP(NANOS) columns (sf0.001's events hold none), the way
+    ``load_table`` pins it, instead of on every stream read."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        SQ.read_events_stream(spark, sf_dir)
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, before)

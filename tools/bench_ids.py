@@ -13,6 +13,13 @@ text. Planning and rendering that plan costs CPU on every run, so
 a memo that drags its build plan into its readers shows up here as a
 plan far longer than the id's own operators.
 
+The first line, ``{"session": {...}}``, is the JVM start:
+``session_start_s`` (the ``get_spark`` call) and ``cds``, how that JVM
+used the engine's AppCDS archive (``mapped``/``promoted``: a warm start
+from the archive; ``dumping``: a cold start that writes it at exit;
+``skipped``: a cold start, ``detail`` says why). Compare timings only
+between runs that started the same way.
+
 An id that raises is recorded as ``{"error": ...}`` and the run goes on,
 so one scale rehearsal can time a whole id list above the broadcast
 gates (tools/build_sf1.py / build_sf3.py build the datasets).
@@ -36,7 +43,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kdcloganalyzer_spark.plans import registry  # noqa: E402
-from kdcloganalyzer_spark.session import codegen_compiles, get_spark  # noqa: E402
+from kdcloganalyzer_spark.session import codegen_compiles, get_spark, last_launch  # noqa: E402
 
 
 def main() -> None:
@@ -50,7 +57,10 @@ def main() -> None:
     if unknown:
         print(f"unknown ids: {unknown}", file=sys.stderr)
         sys.exit(2)
+    t0 = time.perf_counter()
     spark = get_spark(app_name="bench_ids")
+    start_s = round(time.perf_counter() - t0, 3)
+    print(json.dumps({"session": {"session_start_s": start_s, **last_launch}}), flush=True)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(100000).selectExpr("sum(id)").collect()
     out = {}
