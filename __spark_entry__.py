@@ -34,34 +34,32 @@ FLAGSHIP = "agg_min_max_count"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
-    Also pre-materializes the sf0.01 KDC records parquet (the DuckDB
-    side of the KDC oracles) while a live session is guaranteed, so the
-    correctness gate's oracle SQL works regardless of whether the driver
-    evaluates the Spark query or the oracle first. Idempotent and
-    non-fatal: a failure here must not break the smoke check."""
+    Also stages every sf0.01 input an oracle reads and only the Spark
+    side writes (the KDC records parquet, the schema-evolution,
+    multiline-JSON, commit-log, binary-file, nested, hive and corrupt
+    layouts) while a live session is guaranteed, so the correctness
+    gate's oracle SQL works regardless of whether the driver evaluates
+    the Spark query or the oracle first. Idempotent and non-fatal: a
+    failure here must not break the smoke check."""
     try:
+        from kdcloganalyzer_spark.plans import relational, round9_ops
         from kdcloganalyzer_spark.plans.kdc_queries import kdc_records_parquet
         from kdcloganalyzer_spark.plans.streaming_queries import (
             tail_twin_records_parquet,
         )
 
-        kdc_records_parquet(spark, "/root/testdata/sf0.01")
-        tail_twin_records_parquet(spark, "/root/testdata/sf0.01")
-        # scan_schema_evolution's and scan_json_multiline's oracles read
-        # /tmp files that only the Spark queries stage — constructing
-        # them here (writes are part of construction, idempotent) gives
-        # the same ordering guarantee.
-        registry.QUERIES["scan_schema_evolution"](spark, "/root/testdata/sf0.01")
-        registry.QUERIES["scan_json_multiline"](spark, "/root/testdata/sf0.01")
-        registry.QUERIES["scan_commit_log"](spark, "/root/testdata/sf0.01")
-        registry.QUERIES["scan_binaryfile_source"](spark, "/root/testdata/sf0.01")
-        registry.QUERIES["scan_nested_struct"](spark, "/root/testdata/sf0.01")
-        registry.QUERIES["scan_hive_partitioned"](
-            spark, "/root/testdata/sf0.01"
-        )
-        registry.QUERIES["scan_corrupt_tolerant"](
-            spark, "/root/testdata/sf0.01"
-        )
+        for stage in (
+            kdc_records_parquet,
+            tail_twin_records_parquet,
+            relational.stage_evolution,
+            relational.stage_json_multiline,
+            relational.stage_commit_log,
+            relational.stage_binfiles,
+            relational.stage_nested,
+            round9_ops.stage_hive_part,
+            round9_ops.stage_corrupt_scan,
+        ):
+            stage(spark, "/root/testdata/sf0.01")
     except Exception:  # noqa: BLE001 — hedge only; smoke check must pass
         log.warning("oracle-input prestage failed", exc_info=True)
     return registry.QUERIES[FLAGSHIP](spark, SMOKE_SF_DIR)

@@ -15,7 +15,6 @@ import json
 import logging
 import os
 import random
-import re
 import sys
 import time
 
@@ -23,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kdcloganalyzer_spark.plans import registry
 from kdcloganalyzer_spark.session import DEFAULT_CPUS, get_spark
+from kdcloganalyzer_spark.sources.kdc_synth import sf_label
 
 log = logging.getLogger(__name__)
 
@@ -150,13 +150,13 @@ def _warm_streaming_engine(spark) -> None:
     amortized id's FIRST run, the same fairness needs the engine (not
     the queries' data) pre-warmed. Best-effort: a warm-up failure must
     never kill the bench."""
-    import tempfile
-
     try:
         from pyspark.sql import functions as F
         from pyspark.sql.streaming.state import GroupStateTimeout
 
-        d = tempfile.mkdtemp(prefix="bench_warm_")
+        from kdcloganalyzer_spark import appcache
+
+        d = appcache.tempdir("bench_warm_")
         spark.range(100).selectExpr(
             "id", "timestamp'2024-01-01' + make_interval(0,0,0,0,0,0,id) AS ts"
         ).coalesce(1).write.mode("overwrite").parquet(f"{d}/in")
@@ -349,8 +349,7 @@ def _local_table_path(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+    sf = float(sf_label(sf_dir, "-1"))
     idle_wait = _wait_for_idle()
 
     registry.load_all()

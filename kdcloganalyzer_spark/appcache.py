@@ -31,6 +31,10 @@ stored only after ``build`` returns, so that recursion never ends.
 ``register_evictor`` remains for the one cache that is not a dict (the
 Spark catalog's bucketed tables). ``per_jvm`` holds Column trees per JVM;
 ``tempdir`` is ``tempfile.mkdtemp`` plus an atexit ``shutil.rmtree``.
+
+``stage(path, build)`` publishes a staged input dir that outlives the
+process (the oracle inputs and stream feeds under /tmp); every such dir
+in the package goes through it, ``persistent_stage`` included.
 """
 
 from __future__ import annotations
@@ -38,6 +42,7 @@ from __future__ import annotations
 import atexit
 import functools
 import logging
+import os
 import shutil
 import tempfile
 from collections.abc import Callable
@@ -190,28 +195,64 @@ def per_jvm(name: str, build: Callable[[], object]):
     return hit[1]
 
 
+def stage(path: str, build: Callable[[str], None]) -> str:
+    """Publish the dir ``build(d)`` fills at ``path``, once across
+    processes, and return ``path``.
+
+    A dir is complete when it holds ``_SUCCESS``, so a hit is one stat.
+    On a miss ``build`` fills a cleared ``path.build.<pid>``; ``_SUCCESS``
+    is written last and the dir is renamed into place, so a reader (the
+    entry() prestage racing pytest or a bench) sees it whole or not at
+    all. If the rename fails, a marked dir at ``path`` is a racing
+    winner's identical copy and is kept; an unmarked one is a leftover
+    (a crashed writer, an older layout) and is cleared, and the rename
+    is tried once more. If ``build`` raises, its dir is removed.
+
+    ``build`` may use Spark or DuckDB. Store file paths inside the dir
+    relative to it: the build dir's own name dies at the rename. File
+    mtimes survive it (tail-chunk staging depends on its utime ticks)."""
+    marker = os.path.join(path, "_SUCCESS")
+    if os.path.exists(marker):
+        return path
+    bld = f"{path}.build.{os.getpid()}"
+    shutil.rmtree(bld, ignore_errors=True)
+    os.makedirs(bld)
+    try:
+        build(bld)
+        open(os.path.join(bld, "_SUCCESS"), "w").close()
+    except BaseException:
+        shutil.rmtree(bld, ignore_errors=True)
+        raise
+    try:
+        os.rename(bld, path)
+    except OSError:
+        if not os.path.exists(marker):  # an unmarked leftover
+            shutil.rmtree(path, ignore_errors=True)
+            try:
+                os.rename(bld, path)
+                return path
+            except OSError:
+                if not os.path.exists(marker):
+                    shutil.rmtree(bld, ignore_errors=True)
+                    raise
+        shutil.rmtree(bld, ignore_errors=True)
+    return path
+
+
 def persistent_stage(tag: str, srcs: list[str], build) -> str:
-    """Cross-process idempotent staged-INPUT dir under /tmp.
+    """``stage`` at a /tmp path that embeds a CONTENT fingerprint of
+    ``srcs`` (path, mtime_ns, size).
 
     The streaming queries simulate a producer by splitting/replaying the
     driver's parquet into a monitored feed directory. That feed is a
     pure function of the source table, and in a real deployment it
     simply EXISTS — rebuilding it per process charged every cold bench
     run ~1 s per feed of fixture construction that is not streaming
-    cost. Same persistence contract as the records/binfiles parquet
-    (kdc_queries.records_path_for_sf): stable /tmp path, `_SUCCESS`
-    marker, and — per ADVICE r12's staleness warning on basename-only
-    keys — the path embeds a CONTENT fingerprint of the sources
-    (path, mtime_ns, size), so a regenerated fixture can never reuse a
-    stale export. Built in a pid-unique dir and os.rename()d into place
-    (check-then-act markers race with the entry() prestage — SKILL.md).
-
-    ``build(dir)`` must populate ``dir`` and may use Spark/DuckDB; file
-    mtimes inside are preserved by the rename (tail-chunk staging
-    depends on its utime ticks)."""
+    cost. Per ADVICE r12's staleness warning on basename-only keys, the
+    fingerprint means a regenerated fixture can never reuse a stale
+    export."""
     import hashlib
     import json
-    import os
 
     sig_parts = []
     for p in srcs:
@@ -220,18 +261,7 @@ def persistent_stage(tag: str, srcs: list[str], build) -> str:
     sig = hashlib.md5(
         json.dumps(sig_parts, sort_keys=True).encode()
     ).hexdigest()[:12]
-    final = f"/tmp/kdcspark_stage_{tag}_{sig}"
-    if not os.path.exists(os.path.join(final, "_SUCCESS")):
-        bld = f"{final}.build.{os.getpid()}"
-        os.makedirs(bld, exist_ok=True)
-        build(bld)
-        open(os.path.join(bld, "_SUCCESS"), "w").close()
-        try:
-            os.rename(bld, final)
-        except OSError:
-            # lost the rename race — the winner's dir is complete
-            shutil.rmtree(bld, ignore_errors=True)
-    return final
+    return stage(f"/tmp/kdcspark_stage_{tag}_{sig}", build)
 
 
 def tempdir(prefix: str, fast: bool = False) -> str:
@@ -241,8 +271,6 @@ def tempdir(prefix: str, fast: bool = False) -> str:
     commit-latency-bound scratch like streaming checkpoints of BOUNDED
     runs, where durability across a machine crash buys nothing (a real
     deployment points checkpoints at object storage instead)."""
-    import os
-
     base = None
     if fast and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         base = "/dev/shm"

@@ -85,11 +85,11 @@ _LINES_GZ = _lines_sql(f"'{DRIVER_SYNTH_DIR}/*.log.gz'")
 
 
 def kdc_records_parquet(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the parsed records once per sf (idempotent via the
-    _SUCCESS marker); ts is written as TIMESTAMP_NTZ so DuckDB reads the
-    same naive-UTC wall values Spark's UTC session collects."""
-    out = records_path_for_sf(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    """Materialize the parsed records once per sf (``appcache.stage``);
+    ts is written as TIMESTAMP_NTZ so DuckDB reads the same naive-UTC
+    wall values Spark's UTC session collects."""
+
+    def build(out: str) -> None:
         # Output file sizing (r16, guide §6): the sessionizer's natural
         # write produced 18 ~200 KB files at sf0.1 and EVERY records
         # consumer (≈80 kdc ids) paid 18 scan tasks per pass — measured
@@ -104,7 +104,8 @@ def kdc_records_parquet(spark: SparkSession, sf_dir: str) -> str:
         ).repartition(max(1, n_rec // 2_000_000)).write.mode(
             "overwrite"
         ).parquet(out)
-    return out
+
+    return appcache.stage(records_path_for_sf(sf_dir), build)
 
 
 # Every id in this module reads through the lineage-cut checkpoint, so

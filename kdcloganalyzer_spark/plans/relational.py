@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans.analytics import hll_in_envelope
 from kdcloganalyzer_spark.plans.registry import query
+from kdcloganalyzer_spark.sources.kdc_synth import sf_label
 from kdcloganalyzer_spark.sources.tables import cents, load_table
 
 log = logging.getLogger(__name__)
@@ -1518,15 +1519,28 @@ def sql_interface(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def evolution_path_for_sf(sf_dir: str) -> str:
     """Deterministic staged dir for the two-generation orders parquet
-    (v1: 2 columns; v2: +o_totalprice). Path only — writing happens in
-    the query (idempotent via _SUCCESS markers)."""
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return f"/tmp/schema_evo_v1_{(m.group(1) if m else '0.001')}"
+    (v1: 2 columns; v2: +o_totalprice). Path only — ``stage_evolution``
+    writes it."""
+    return f"/tmp/schema_evo_v1_{sf_label(sf_dir, '0.001')}"
 
 
 DRIVER_EVO_GLOB = evolution_path_for_sf("/root/testdata/sf0.01") + "/*/*.parquet"
+
+
+def stage_evolution(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the orders feed as two parquet generations, ``gen1``
+    without o_totalprice and ``gen2`` with it."""
+
+    def build(d: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        orders.filter(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderkey", "o_orderstatus"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{d}/gen1")
+        orders.filter(F.col("o_orderkey") % 2 == 1).select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{d}/gen2")
+
+    return appcache.stage(evolution_path_for_sf(sf_dir), build)
 
 
 @query(
@@ -1551,22 +1565,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned. The alternative — rewriting history whenever a column lands
     — is the thing a 100 TB lake cannot afford; additive evolution +
     merge-on-read is the standard contract."""
-    import os
-
-    base = evolution_path_for_sf(sf_dir)
-    orders = load_table(spark, sf_dir, "orders")
-    gens = {
-        "gen1": orders.filter(F.col("o_orderkey") % 2 == 0).select(
-            "o_orderkey", "o_orderstatus"
-        ),
-        "gen2": orders.filter(F.col("o_orderkey") % 2 == 1).select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        ),
-    }
-    for name, df in gens.items():
-        out = f"{base}/{name}"
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            df.coalesce(1).write.mode("overwrite").parquet(out)
+    base = stage_evolution(spark, sf_dir)
     merged = spark.read.option("mergeSchema", "true").parquet(
         f"{base}/gen1", f"{base}/gen2"
     )
@@ -2302,13 +2301,47 @@ def fn_try_error_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multiline_json_path_for_sf(sf_dir: str) -> str:
     """Deterministic staged path for the multiline-JSON orders document
     (ONE pretty-printed JSON array per file — the API-dump shape)."""
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return f"/tmp/json_multiline_v2_{(m.group(1) if m else '0.001')}"
+    return f"/tmp/json_multiline_v2_{sf_label(sf_dir, '0.001')}"
 
 
 DRIVER_MLJSON = multiline_json_path_for_sf("/root/testdata/sf0.01")
+
+
+def stage_json_multiline(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the orders as two multiline JSON array documents.
+
+    Executors serialize the rows (an ordinary JSONL write, 2 parts); the
+    driver then wraps each part file into an array document as an
+    opaque line-level text transform, so no row ever materializes
+    driver-side."""
+
+    def build(d: str) -> None:
+        import glob as _glob
+        import os
+        import shutil
+
+        tmp = f"{d}/_jsonl"
+        load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        ).repartition(2).write.mode("overwrite").json(tmp)
+        for i, part in enumerate(sorted(_glob.glob(f"{tmp}/part-*.json"))):
+            with open(part) as src, open(
+                os.path.join(d, f"doc{i}.json"), "w"
+            ) as dst:
+                dst.write("[\n")
+                first = True
+                for line in src:
+                    line = line.strip()
+                    if not line:
+                        continue
+                    if not first:
+                        dst.write(",\n")
+                    dst.write(line)
+                    first = False
+                dst.write("\n]")
+        shutil.rmtree(tmp)
+
+    return appcache.stage(multiline_json_path_for_sf(sf_dir), build)
 
 
 @query(
@@ -2335,52 +2368,7 @@ def scan_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     must ingest them (per-file parallelism, converted to
     parquet/JSONL at the ingest boundary). Aggregation after the scan
     is one partial-agg'd shuffle on the 3-value status key."""
-    import os
-
-    base = multiline_json_path_for_sf(sf_dir)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    if not os.path.isdir(base):
-        # Stage ONCE, atomically: executors serialize the rows (ordinary
-        # JSONL write, 2 parts); the driver then wraps each part file
-        # into an array document as an opaque line-level text transform —
-        # no row ever materializes driver-side. Everything is built in a
-        # PROCESS-UNIQUE temp dir and os.rename()d into place, so two
-        # concurrent processes (entry() prestage + bench/pytest) can race
-        # here and a reader still never sees a truncated document: the
-        # published dir appears whole or not at all, and the loser of the
-        # rename race just discards its copy.
-        import glob as _glob
-        import shutil
-
-        build = f"{base}.build.{os.getpid()}"
-        shutil.rmtree(build, ignore_errors=True)
-        os.makedirs(build)
-        tmp = f"{build}/_jsonl"
-        orders.repartition(2).write.mode("overwrite").json(tmp)
-        for i, part in enumerate(sorted(_glob.glob(f"{tmp}/part-*.json"))):
-            with open(part) as src, open(
-                os.path.join(build, f"doc{i}.json"), "w"
-            ) as dst:
-                dst.write("[\n")
-                first = True
-                for line in src:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    if not first:
-                        dst.write(",\n")
-                    dst.write(line)
-                    first = False
-                dst.write("\n]")
-        shutil.rmtree(tmp)
-        try:
-            os.rename(build, base)
-        except OSError:
-            # Another process published first — its copy is identical
-            # (deterministic content); keep theirs, drop ours.
-            shutil.rmtree(build, ignore_errors=True)
+    base = stage_json_multiline(spark, sf_dir)
     df = (
         spark.read.option("multiLine", "true")
         .json(f"{base}/*.json")
@@ -2667,46 +2655,32 @@ def fn_map_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def manifest_dir_for_sf(sf_dir: str) -> str:
     """Deterministic staged path for the range-clustered orders copy +
     its min/max file manifest."""
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return f"/tmp/orders_manifest_v1_{(m.group(1) if m else '0.001')}"
+    return f"/tmp/orders_manifest_v1_{sf_label(sf_dir, '0.001')}"
 
 
-def _manifest_staged(spark: SparkSession, sf_dir: str) -> str:
-    """Stage once, atomically (process-unique build dir + rename): the
-    orders table range-clustered into 8 parquet files by o_orderdate,
-    plus a `manifest` parquet of per-file (file, min_dt, max_dt, n) —
-    exactly the file-statistics tables Delta/Iceberg maintain in their
-    transaction logs."""
-    import os
-    import shutil
+def stage_manifest(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the orders table range-clustered into 8 parquet files by
+    o_orderdate, plus a `manifest` parquet of per-file (file, min_dt,
+    max_dt, n) — exactly the file-statistics tables Delta/Iceberg
+    maintain in their transaction logs."""
 
-    base = manifest_dir_for_sf(sf_dir)
-    if os.path.isdir(base):
-        return base
-    build = f"{base}.build.{os.getpid()}"
-    shutil.rmtree(build, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders")
-    orders.repartitionByRange(8, "o_orderdate").write.mode(
-        "overwrite"
-    ).parquet(f"{build}/data")
-    back = spark.read.parquet(f"{build}/data")
-    # Manifest stores RELATIVE file names (the staged dir is renamed
-    # into place after the build, and a real table's manifest must
-    # survive relocation anyway).
-    back.groupBy(
-        F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1).alias("file")
-    ).agg(
-        F.min("o_orderdate").alias("min_dt"),
-        F.max("o_orderdate").alias("max_dt"),
-        F.count("*").alias("n_rows"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{build}/manifest")
-    try:
-        os.rename(build, base)
-    except OSError:
-        shutil.rmtree(build, ignore_errors=True)
-    return base
+    def build(d: str) -> None:
+        load_table(spark, sf_dir, "orders").repartitionByRange(
+            8, "o_orderdate"
+        ).write.mode("overwrite").parquet(f"{d}/data")
+        back = spark.read.parquet(f"{d}/data")
+        # Manifest stores RELATIVE file names (the staged dir is renamed
+        # into place after the build, and a real table's manifest must
+        # survive relocation anyway).
+        back.groupBy(
+            F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1).alias("file")
+        ).agg(
+            F.min("o_orderdate").alias("min_dt"),
+            F.max("o_orderdate").alias("max_dt"),
+            F.count("*").alias("n_rows"),
+        ).coalesce(1).write.mode("overwrite").parquet(f"{d}/manifest")
+
+    return appcache.stage(manifest_dir_for_sf(sf_dir), build)
 
 
 def manifest_pruned_files(
@@ -2715,7 +2689,7 @@ def manifest_pruned_files(
     """(qualifying data files, total file count) for an o_orderdate
     interval predicate, decided from the manifest ALONE — O(#files)
     metadata rows, no data scan."""
-    base = _manifest_staged(spark, sf_dir)
+    base = stage_manifest(spark, sf_dir)
     man = spark.read.parquet(f"{base}/manifest")
     cond = F.lit(True)
     if lo is not None:
@@ -3928,10 +3902,24 @@ def sql_cached_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def fixed_width_dir_for_sf(sf_dir: str) -> str:
-    import re
+    return f"/tmp/orders_fixedwidth_v1_{sf_label(sf_dir, '0.001')}"
 
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return f"/tmp/orders_fixedwidth_v1_{(m.group(1) if m else '0.001')}"
+
+def stage_fixed_width(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the orders as 12-char orderkey | 1-char status | 14-char
+    price text records (``format_string``, executor-side)."""
+
+    def build(d: str) -> None:
+        load_table(spark, sf_dir, "orders").select(
+            F.format_string(
+                "%012d%1s%014.2f",
+                F.col("o_orderkey"),
+                F.col("o_orderstatus"),
+                F.col("o_totalprice"),
+            ).alias("value")
+        ).coalesce(2).write.mode("overwrite").text(d)
+
+    return appcache.stage(fixed_width_dir_for_sf(sf_dir), build)
 
 
 @query(
@@ -3949,8 +3937,8 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no delimiters; fields live at byte offsets): orders are staged
     once as 12-char orderkey | 1-char status | 14-char price records,
     then parsed back with substring slices + casts. Staging uses
-    ``format_string`` (executor-side, atomic publish via build-dir
-    rename); the formats are width-exact, so parse(format(x)) == x and
+    ``format_string`` (executor-side, published by ``appcache.stage``);
+    the formats are width-exact, so parse(format(x)) == x and
     the oracle runs on the ORIGINAL table — the round-trip is provably
     lossless.
 
@@ -3961,26 +3949,7 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     even for a 2-field projection, which is exactly why this format is
     converted to parquet at the ingest boundary (the query demonstrates
     the ingest, then aggregates)."""
-    import os
-    import shutil
-
-    base = fixed_width_dir_for_sf(sf_dir)
-    if not os.path.isdir(base):
-        build = f"{base}.build.{os.getpid()}"
-        shutil.rmtree(build, ignore_errors=True)
-        load_table(spark, sf_dir, "orders").select(
-            F.format_string(
-                "%012d%1s%014.2f",
-                F.col("o_orderkey"),
-                F.col("o_orderstatus"),
-                F.col("o_totalprice"),
-            ).alias("value")
-        ).coalesce(2).write.mode("overwrite").text(build)
-        try:
-            os.rename(build, base)
-        except OSError:
-            shutil.rmtree(build, ignore_errors=True)
-    raw = spark.read.text(base)
+    raw = spark.read.text(stage_fixed_width(spark, sf_dir))
     rec = raw.select(
         F.substring("value", 1, 12).cast("bigint").alias("o_orderkey"),
         F.substring("value", 13, 1).alias("o_orderstatus"),
@@ -4301,13 +4270,47 @@ def commit_log_path_for_sf(sf_dir: str) -> str:
     """Deterministic staged path for the commit-log table (a minimal
     Delta/Iceberg-shaped layout: data files + an ordered JSON log of
     add/remove actions)."""
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return f"/tmp/commit_log_v1_{(m.group(1) if m else '0.001')}"
+    return f"/tmp/commit_log_v1_{sf_label(sf_dir, '0.001')}"
 
 
 DRIVER_COMMITLOG = commit_log_path_for_sf("/root/testdata/sf0.01")
+
+
+def stage_commit_log(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the commit-log table: three versions over data slices
+    s0/s1/s2, v2 compacting s0 into s2, and one JSON file of actions per
+    version under ``_log``."""
+
+    def build(d: str) -> None:
+        import json as _json
+        import os
+
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        )
+        for i in (0, 1):
+            orders.where(F.col("o_orderkey") % 3 == i).write.mode(
+                "overwrite"
+            ).parquet(f"{d}/data/s{i}")
+        # v2 compaction: s0's rows rewritten into s2 (1 output file).
+        spark.read.parquet(f"{d}/data/s0").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{d}/data/s2")
+        os.makedirs(f"{d}/_log")
+        log = [
+            [{"op": "add", "path": "data/s0"}],
+            [{"op": "add", "path": "data/s1"}],
+            [
+                {"op": "remove", "path": "data/s0"},
+                {"op": "add", "path": "data/s2"},
+            ],
+        ]
+        for v, actions in enumerate(log):
+            with open(f"{d}/_log/{v:05d}.json", "w") as f:
+                for a in actions:
+                    f.write(_json.dumps({"version": v, **a}) + "\n")
+
+    return appcache.stage(commit_log_path_for_sf(sf_dir), build)
 
 
 @query(
@@ -4342,41 +4345,8 @@ def scan_commit_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle reads the same live files directly."""
     import glob as _glob
     import json as _json
-    import os
 
-    base = commit_log_path_for_sf(sf_dir)
-    if not os.path.isdir(base):
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        build = f"{base}.build-{os.getpid()}"
-        for i, pred in enumerate(("0", "1")):
-            orders.where(F.col("o_orderkey") % 3 == int(pred)).write.mode(
-                "overwrite"
-            ).parquet(f"{build}/data/s{i}")
-        # v2 compaction: s0's rows rewritten into s2 (1 output file).
-        spark.read.parquet(f"{build}/data/s0").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{build}/data/s2")
-        os.makedirs(f"{build}/_log", exist_ok=True)
-        log = [
-            [{"op": "add", "path": "data/s0"}],
-            [{"op": "add", "path": "data/s1"}],
-            [
-                {"op": "remove", "path": "data/s0"},
-                {"op": "add", "path": "data/s2"},
-            ],
-        ]
-        for v, actions in enumerate(log):
-            with open(f"{build}/_log/{v:05d}.json", "w") as f:
-                for a in actions:
-                    f.write(_json.dumps({"version": v, **a}) + "\n")
-        try:
-            os.rename(build, base)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)  # lost the race
+    base = stage_commit_log(spark, sf_dir)
     # Snapshot read: replay the ordered log (driver-side metadata).
     live: set[str] = set()
     for p in sorted(_glob.glob(f"{base}/_log/*.json")):
@@ -4821,9 +4791,7 @@ def scan_commit_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
 
-    base = commit_log_path_for_sf(sf_dir)
-    if not os.path.isdir(base):
-        scan_commit_log(spark, sf_dir)  # stage via the snapshot query
+    base = stage_commit_log(spark, sf_dir)
     as_of = 1
     live: set[str] = set()
     for p in sorted(_glob.glob(f"{base}/_log/*.json")):
@@ -5051,13 +5019,26 @@ def agg_string_agg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 def binfiles_path_for_sf(sf_dir: str) -> str:
     """Deterministic staged directory of small raw files for the
     binaryFile-source scan (one .txt per low-id document)."""
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return f"/tmp/binfiles_v1_{(m.group(1) if m else '0.001')}"
+    return f"/tmp/binfiles_v1_{sf_label(sf_dir, '0.001')}"
 
 
 DRIVER_BINFILES = binfiles_path_for_sf("/root/testdata/sf0.01")
+
+
+def stage_binfiles(spark: SparkSession, sf_dir: str) -> str:
+    """Stage one ``doc_<id>.txt`` per document with doc_id < 24."""
+
+    def build(d: str) -> None:
+        for r in (
+            load_table(spark, sf_dir, "documents")
+            .where(F.col("doc_id") < 24)
+            .select("doc_id", "text")
+            .collect()
+        ):
+            with open(f"{d}/doc_{r['doc_id']:04d}.txt", "w") as f:
+                f.write(r["text"])
+
+    return appcache.stage(binfiles_path_for_sf(sf_dir), build)
 
 
 @query(
@@ -5086,27 +5067,7 @@ def scan_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (multimodal_dedup_binary's layout) or list via a manifest
     (scan_manifest_pruned). Column pruning is real: selecting only
     path/length skips content reads entirely."""
-    import os
-
-    base = binfiles_path_for_sf(sf_dir)
-    if not os.path.isdir(base):
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .where(F.col("doc_id") < 24)
-            .select("doc_id", "text")
-            .collect()
-        )
-        build = f"{base}.build-{os.getpid()}"
-        os.makedirs(build, exist_ok=True)
-        for r in docs:
-            with open(f"{build}/doc_{r['doc_id']:04d}.txt", "w") as f:
-                f.write(r["text"])
-        try:
-            os.rename(build, base)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)  # lost the race
+    base = stage_binfiles(spark, sf_dir)
     bf = spark.read.format("binaryFile").load(f"{base}/*.txt")
     return bf.select(
         F.regexp_extract(F.col("path"), r"([^/]+)$", 1).alias("fname"),
@@ -5410,13 +5371,33 @@ def set_ops_multiset(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def nested_path_for_sf(sf_dir: str) -> str:
     """Deterministic staged path for the nested-struct events table."""
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return f"/tmp/nested_events_v1_{(m.group(1) if m else '0.001')}"
+    return f"/tmp/nested_events_v1_{sf_label(sf_dir, '0.001')}"
 
 
 DRIVER_NESTED = nested_path_for_sf("/root/testdata/sf0.01")
+
+
+def stage_nested(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the events as who.{user_id, segment} / what.{event_type,
+    cents} structs."""
+
+    def build(d: str) -> None:
+        load_table(spark, sf_dir, "events").select(
+            "event_id",
+            "ts",
+            F.struct(
+                "user_id",
+                F.when((F.col("user_id") % 2) == 0, "even")
+                .otherwise("odd")
+                .alias("segment"),
+            ).alias("who"),
+            F.struct(
+                "event_type",
+                cents("value").alias("cents"),
+            ).alias("what"),
+        ).write.mode("overwrite").parquet(d)
+
+    return appcache.stage(nested_path_for_sf(sf_dir), build)
 
 
 @query(
@@ -5436,7 +5417,7 @@ def scan_nested_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     what.{{event_type, cents}}) read with SUBFIELD pruning and a
     nested-field predicate: the shape every telemetry/protobuf-derived
     lake table has. The staged table is written nested by this query
-    (atomic build-dir + rename, the commit-log idiom); the aggregation
+    (published by ``appcache.stage``); the aggregation
     touches three leaves and filters on a fourth — the scan's
     ReadSchema must carry only those leaves and PushedFilters the
     segment predicate (Spark's nestedSchemaPruning +
@@ -5448,34 +5429,7 @@ def scan_nested_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested predicate pushdown prunes row groups by leaf statistics
     exactly as flat columns do. Both engines address leaves by the
     same dotted paths over the same files."""
-    import os
-
-    base = nested_path_for_sf(sf_dir)
-    if not os.path.isdir(base):
-        ev = load_table(spark, sf_dir, "events")
-        nested = ev.select(
-            "event_id",
-            "ts",
-            F.struct(
-                "user_id",
-                F.when((F.col("user_id") % 2) == 0, "even")
-                .otherwise("odd")
-                .alias("segment"),
-            ).alias("who"),
-            F.struct(
-                "event_type",
-                cents("value").alias("cents"),
-            ).alias("what"),
-        )
-        build = f"{base}.build-{os.getpid()}"
-        nested.write.mode("overwrite").parquet(build)
-        try:
-            os.rename(build, base)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)  # lost the race
-    df = spark.read.parquet(base)
+    df = spark.read.parquet(stage_nested(spark, sf_dir))
     return (
         df.where(F.col("who.segment") == "even")
         .groupBy(F.col("what.event_type").alias("event_type"))

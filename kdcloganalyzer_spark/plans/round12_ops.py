@@ -3164,6 +3164,30 @@ def _multisep_dir_for_sf(sf_dir: str) -> str:
     )
 
 
+def stage_multisep(spark: SparkSession, sf_dir: str) -> str:
+    """Stage document metadata as ``doc_id||lang||source||n_chars``
+    lines (concat_ws, executor-side)."""
+
+    def build(d: str) -> None:
+        # concat_ws SKIPS a NULL argument entirely, which would shift
+        # every later column one slot left on read-back (ADVICE r12);
+        # coalescing each field to '' keeps the column count fixed, so
+        # an unexpected NULL surfaces as a clean per-value mismatch
+        # instead of a shifted row.
+        cols = ["doc_id", "lang", "source", "n_chars"]
+        load_table(spark, sf_dir, "documents").select(
+            F.concat_ws(
+                "||",
+                *[
+                    F.coalesce(F.col(c).cast("string"), F.lit(""))
+                    for c in cols
+                ],
+            ).alias("value")
+        ).coalesce(2).write.mode("overwrite").text(d)
+
+    return appcache.stage(_multisep_dir_for_sf(sf_dir), build)
+
+
 @query(
     "scan_csv_multichar_sep",
     oracle="""
@@ -3179,7 +3203,7 @@ def scan_csv_multichar_sep(spark: SparkSession, sf_dir: str) -> DataFrame:
     format half the enterprise ETL world still emits (chosen exactly
     because single chars collide with free text): document metadata is
     staged once as ``a||b||c||d`` lines (format via concat_ws,
-    executor-side, atomic publish via build-dir rename), then re-read
+    executor-side, published by ``appcache.stage``), then re-read
     through Spark's multi-char ``sep`` CSV reader with an explicit
     schema. The aggregate must equal the same rollup computed straight
     from the parquet (the oracle) — the round-trip is provably
@@ -3189,32 +3213,7 @@ def scan_csv_multichar_sep(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelizes by byte ranges like any CSV; multi-char separator
     matching stays in uniVocity's JVM tokenizer (no regex fallback,
     no Python)."""
-    import os
-    import shutil
-
-    base = _multisep_dir_for_sf(sf_dir)
-    if not os.path.isdir(base):
-        build = f"{base}.build.{os.getpid()}"
-        shutil.rmtree(build, ignore_errors=True)
-        # concat_ws SKIPS a NULL argument entirely, which would shift
-        # every later column one slot left on read-back (ADVICE r12);
-        # coalescing each field to '' keeps the column count fixed, so
-        # an unexpected NULL surfaces as a clean per-value mismatch
-        # instead of a shifted row.
-        cols = ["doc_id", "lang", "source", "n_chars"]
-        load_table(spark, sf_dir, "documents").select(
-            F.concat_ws(
-                "||",
-                *[
-                    F.coalesce(F.col(c).cast("string"), F.lit(""))
-                    for c in cols
-                ],
-            ).alias("value")
-        ).coalesce(2).write.mode("overwrite").text(build)
-        try:
-            os.rename(build, base)
-        except OSError:
-            shutil.rmtree(build, ignore_errors=True)
+    base = stage_multisep(spark, sf_dir)
     rec = spark.read.csv(
         base,
         sep="||",

@@ -12,7 +12,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.plans.registry import query
+from kdcloganalyzer_spark.sources.kdc_synth import sf_label
 from kdcloganalyzer_spark.sources.tables import cents
 
 # ---------------------------------------------------------------------------
@@ -726,15 +728,34 @@ def analytics_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def hive_part_path_for_sf(sf_dir: str) -> str:
     """Deterministic staged dir for the hive-partitioned orders layout
-    (one o_orderstatus=<v> subdirectory per status). Path only — the
-    query stages it idempotently (build dir + atomic rename)."""
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return f"/tmp/hive_part_orders_v1_{(m.group(1) if m else '0.001')}"
+    (one o_orderstatus=<v> subdirectory per status). Path only —
+    ``stage_hive_part`` writes it."""
+    return f"/tmp/hive_part_orders_v1_{sf_label(sf_dir, '0.001')}"
 
 
 DRIVER_HIVEPART = hive_part_path_for_sf("/root/testdata/sf0.01")
+
+
+def stage_hive_part(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the orders as o_orderstatus=<v>/ subdirectories, money as
+    integer cents."""
+    from kdcloganalyzer_spark.sources.tables import load_table
+
+    def build(d: str) -> None:
+        (
+            load_table(spark, sf_dir, "orders")
+            .select(
+                "o_orderpriority",
+                cents("o_totalprice").alias("cents"),
+                "o_orderstatus",
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .partitionBy("o_orderstatus")
+            .parquet(d)
+        )
+
+    return appcache.stage(hive_part_path_for_sf(sf_dir), build)
 
 
 @query(
@@ -767,39 +788,7 @@ def scan_hive_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pruning is O(partitions) metadata work at planning; the
     scan cost is proportional to the SELECTED partition only. Money is
     staged as integer cents (engine-neutral)."""
-    import os
-    import shutil
-
-    from kdcloganalyzer_spark.sources.tables import load_table
-
-    base = hive_part_path_for_sf(sf_dir)
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        build = f"{base}.build-{os.getpid()}"
-        (
-            load_table(spark, sf_dir, "orders")
-            .select(
-                "o_orderpriority",
-                cents("o_totalprice").alias("cents"),
-                "o_orderstatus",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
-            .parquet(build)
-        )
-        try:
-            os.rename(build, base)
-        except OSError:
-            # Either another writer won the race (base is complete) or
-            # a STALE/partial base blocks the rename (crashed writer,
-            # /tmp sweep mid-dir). Only discard this build if the
-            # winner's marker exists; otherwise clear the husk and
-            # retry so the layout never wedges broken forever.
-            if os.path.exists(os.path.join(base, "_SUCCESS")):
-                shutil.rmtree(build, ignore_errors=True)
-            else:
-                shutil.rmtree(base, ignore_errors=True)
-                os.rename(build, base)
+    base = stage_hive_part(spark, sf_dir)
     df = spark.read.parquet(base).where(F.col("o_orderstatus") == "F")
     return df.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count("*").cast("long").alias("n"),
@@ -946,13 +935,41 @@ def corrupt_scan_path_for_sf(sf_dir: str) -> str:
     """Deterministic staged dir holding two good parquet files and one
     corrupt (non-parquet bytes behind a .parquet name) — the layout a
     100 TB lake ingest inevitably produces."""
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return f"/tmp/corrupt_scan_v1_{(m.group(1) if m else '0.001')}"
+    return f"/tmp/corrupt_scan_v1_{sf_label(sf_dir, '0.001')}"
 
 
 DRIVER_CORRUPT = corrupt_scan_path_for_sf("/root/testdata/sf0.01")
+
+
+def stage_corrupt_scan(spark: SparkSession, sf_dir: str) -> str:
+    """Stage nation ⋈ region as ``good-0.parquet`` and ``good-1.parquet``
+    (n_nationkey parity) beside ``broken.parquet``, garbage bytes."""
+    import os
+    import shutil
+
+    from kdcloganalyzer_spark.sources.tables import load_table
+
+    def build(d: str) -> None:
+        nation = load_table(spark, sf_dir, "nation").select(
+            "n_nationkey", "n_name", "n_regionkey"
+        )
+        region = load_table(spark, sf_dir, "region").select(
+            "r_regionkey", "r_name"
+        )
+        joined = nation.join(
+            region, nation["n_regionkey"] == region["r_regionkey"]
+        ).select("n_nationkey", "n_name", "r_regionkey")
+        for i in (0, 1):
+            tmp = f"{d}/part{i}"
+            half = joined.where(F.col("n_nationkey") % 2 == i)
+            half.coalesce(1).write.mode("overwrite").parquet(tmp)
+            src = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
+            shutil.move(f"{tmp}/{src}", f"{d}/good-{i}.parquet")
+            shutil.rmtree(tmp, ignore_errors=True)
+        with open(f"{d}/broken.parquet", "wb") as f:
+            f.write(b"PAR1 this is not a parquet footer" * 40)
+
+    return appcache.stage(corrupt_scan_path_for_sf(sf_dir), build)
 
 
 @query(
@@ -987,53 +1004,7 @@ def scan_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     10k-file load surviving one bad object and re-running; the paired
     practice is a dead-letter sweep that lists files the scan skipped
     (here: the staged dir minus the scan's input files)."""
-    import os
-    import shutil
-
-    from kdcloganalyzer_spark.sources.tables import load_table
-
-    base = corrupt_scan_path_for_sf(sf_dir)
-    if not os.path.exists(os.path.join(base, "_STAGED")):
-        build = f"{base}.build-{os.getpid()}"
-        os.makedirs(build, exist_ok=True)
-        nation = load_table(spark, sf_dir, "nation").select(
-            "n_nationkey", "n_name", "n_regionkey"
-        )
-        region = load_table(spark, sf_dir, "region").select(
-            "r_regionkey", "r_name"
-        )
-        joined = nation.join(
-            region, nation["n_regionkey"] == region["r_regionkey"]
-        ).select("n_nationkey", "n_name", "r_regionkey")
-        for i, half in enumerate(
-            (
-                joined.where(F.col("n_nationkey") % 2 == 0),
-                joined.where(F.col("n_nationkey") % 2 == 1),
-            )
-        ):
-            tmp = f"{build}/part{i}"
-            half.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = [
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            ][0]
-            os.replace(f"{tmp}/{src}", f"{build}/good-{i}.parquet")
-            shutil.rmtree(tmp, ignore_errors=True)
-        with open(f"{build}/broken.parquet", "wb") as f:
-            f.write(b"PAR1 this is not a parquet footer" * 40)
-        with open(f"{build}/_STAGED", "w") as f:
-            f.write("v1")
-        try:
-            os.rename(build, base)
-        except OSError:
-            # Discard the build only if the racing winner's marker is
-            # really there; a stale markerless base gets cleared and
-            # the rename retried (same stale-husk guard as
-            # scan_hive_partitioned).
-            if os.path.exists(os.path.join(base, "_STAGED")):
-                shutil.rmtree(build, ignore_errors=True)
-            else:
-                shutil.rmtree(base, ignore_errors=True)
-                os.rename(build, base)
+    base = stage_corrupt_scan(spark, sf_dir)
     df = (
         spark.read.schema(
             "n_nationkey int, n_name string, r_regionkey int"

@@ -73,14 +73,14 @@ DRIVER_TAIL_RECORDS_GLOB = (
 def tail_twin_records_parquet(spark: SparkSession, sf_dir: str) -> str:
     """Batch-sessionize the tail harness's followed file (the FIRST
     .log, the same selection rule as _staged_tail_chunks) and
-    materialize it for DuckDB — idempotent via the _SUCCESS marker.
+    materialize it for DuckDB (``appcache.stage``).
     Non-circular for the streaming-tail oracle: this runs the
     window-function batch sessionizer over whole files; the streaming
     path re-assembles the same records from mid-record chunk splits via
     applyInPandasWithState — only the line featurization and the final
     `_assemble` projection are shared code."""
-    out = tail_records_path_for_sf(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+
+    def build(out: str) -> None:
         from kdcloganalyzer_spark.operators.sessionize import sessionize
         from kdcloganalyzer_spark.sources.kdc_log import read_log_lines_raw
 
@@ -94,7 +94,8 @@ def tail_twin_records_parquet(spark: SparkSession, sf_dir: str) -> str:
         recs.withColumn(
             "ts", F.col("ts").cast("timestamp_ntz")
         ).write.mode("overwrite").parquet(out)
-    return out
+
+    return appcache.stage(tail_records_path_for_sf(sf_dir), build)
 
 
 @query(

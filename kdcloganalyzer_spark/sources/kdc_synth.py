@@ -129,17 +129,29 @@ def generate_logs(
     return out_dir
 
 
+def sf_label(sf_dir: str, default: str | None = None) -> str:
+    """The scale factor as written in the first ``sf<number>`` of a
+    path ("0.01" for ``/data/sf0.01``), for staged-path names and
+    corpus sizing.
+
+    Returns ``default`` when the path names no scale factor, or raises
+    ValueError when there is no default."""
+    import re
+
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    if m is not None:
+        return m.group(1)
+    if default is None:
+        raise ValueError(f"no scale factor (sf<number>) in {sf_dir!r}")
+    return default
+
+
 def n_records_for_sf(sf_dir: str) -> int:
     """KDC corpus size for an sf dir: 1M records per sf unit, at least
     200, with sf read from the first ``sf<number>`` in the path.
 
     Raises ValueError when the path names no scale factor."""
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    if m is None:
-        raise ValueError(f"no scale factor (sf<number>) in {sf_dir!r}")
-    return max(200, int(1_000_000 * float(m.group(1))))
+    return max(200, int(1_000_000 * float(sf_label(sf_dir))))
 
 
 def synth_path_for_sf(sf_dir: str) -> str:

@@ -120,7 +120,6 @@ def _run_to_memory(
 
 
 _STAGE_CACHE: dict[str, str] = {}
-_LATE_SPLIT_CACHE: dict[str, str] = {}
 
 
 def _staged_events_dir(sf_dir: str) -> str:
@@ -200,6 +199,43 @@ def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stage_late_split(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the events as ``00_recent.parquet`` and ``01_late.parquet``,
+    split at the median ts (one coalesced parquet file per half), for
+    ``watermark_late_drop`` to symlink into its fresh source dir."""
+    import glob
+    import shutil
+
+    def build(half_dir: str) -> None:
+        from kdcloganalyzer_spark.sources.tables import load_table
+
+        ev_batch = load_table(spark, sf_dir, "events")
+        split_ts = ev_batch.selectExpr(
+            "percentile_approx(ts, 0.5, 10000) AS m"
+        ).collect()[0]["m"]
+        for name, half in (
+            (
+                "00_recent.parquet",
+                ev_batch.filter(F.col("ts") >= F.lit(split_ts)),
+            ),
+            (
+                "01_late.parquet",
+                ev_batch.filter(F.col("ts") < F.lit(split_ts)),
+            ),
+        ):
+            tmp = f"{half_dir}/_tmp"
+            half.coalesce(1).write.mode("overwrite").parquet(tmp)
+            shutil.move(
+                glob.glob(f"{tmp}/part-*.parquet")[0],
+                f"{half_dir}/{name}",
+            )
+        shutil.rmtree(f"{half_dir}/_tmp", ignore_errors=True)
+
+    return appcache.persistent_stage(
+        "latedrop", [f"{sf_dir}/events.parquet"], build
+    )
+
+
 def watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-data drop under a watermark, made deterministic via stream
     RESTART: the events table is split into a recent half and an only-old
@@ -215,47 +251,11 @@ def watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT dropped — restart-with-checkpoint is how the semantics actually
     bind, and doubles as a state-recovery demonstration.)
     """
-    import glob
     import os
-    import shutil
 
-    # The recent/old input split is a pure function of the events table —
-    # stage it once per sf_dir (median split, one coalesced parquet file
-    # per half) and let every invocation symlink the halves into its own
-    # fresh source dir. The two streaming runs (watermark commit, then
-    # checkpointed restart over the late file) execute every time; only
-    # the input prep is memoized.
-    if sf_dir not in _LATE_SPLIT_CACHE:
-
-        def build(half_dir: str) -> None:
-            from kdcloganalyzer_spark.sources.tables import load_table
-
-            ev_batch = load_table(spark, sf_dir, "events")
-            split_ts = ev_batch.selectExpr(
-                "percentile_approx(ts, 0.5, 10000) AS m"
-            ).collect()[0]["m"]
-            for name, half in (
-                (
-                    "00_recent.parquet",
-                    ev_batch.filter(F.col("ts") >= F.lit(split_ts)),
-                ),
-                (
-                    "01_late.parquet",
-                    ev_batch.filter(F.col("ts") < F.lit(split_ts)),
-                ),
-            ):
-                tmp = f"{half_dir}/_tmp"
-                half.coalesce(1).write.mode("overwrite").parquet(tmp)
-                shutil.move(
-                    glob.glob(f"{tmp}/part-*.parquet")[0],
-                    f"{half_dir}/{name}",
-                )
-            shutil.rmtree(f"{half_dir}/_tmp", ignore_errors=True)
-
-        _LATE_SPLIT_CACHE[sf_dir] = appcache.persistent_stage(
-            "latedrop", [f"{sf_dir}/events.parquet"], build
-        )
-    half_dir = _LATE_SPLIT_CACHE[sf_dir]
+    # The two streaming runs (watermark commit, then checkpointed restart
+    # over the late file) execute every time; only the input is staged.
+    half_dir = _stage_late_split(spark, sf_dir)
 
     stage = appcache.tempdir(prefix="late_drop_", fast=True)
     data_dir = f"{stage}/data"
@@ -507,43 +507,34 @@ def _staged_tail_chunks(
     import json
     import os
 
-    key = f"{log_dir}::tail{n_chunks}x{n_files}"
-    if key not in _STAGE_CACHE:
-        srcs = sorted(
-            f for f in os.listdir(log_dir) if f.endswith(".log")
-        )[:n_files]
+    logs = sorted(f for f in os.listdir(log_dir) if f.endswith(".log"))
+    srcs = logs[:n_files]
 
-        def build(d: str) -> None:
-            now = int(os.path.getmtime(os.path.join(log_dir, srcs[0])))
-            for src in srcs:
-                with open(os.path.join(log_dir, src)) as f:
-                    lines = f.read().splitlines()
-                per = max(1, (len(lines) + n_chunks - 1) // n_chunks)
-                for c in range(n_chunks):
-                    chunk = lines[c * per : (c + 1) * per]
-                    p = os.path.join(d, f"chunk{c:02d}_{src}.json")
-                    with open(p, "w") as out:
-                        for i, line in enumerate(chunk):
-                            out.write(
-                                json.dumps(
-                                    {
-                                        "file": src,
-                                        "seq": c * per + i,
-                                        "line": line,
-                                    }
-                                )
-                                + "\n"
+    def build(d: str) -> None:
+        now = int(os.path.getmtime(os.path.join(log_dir, srcs[0])))
+        for src in srcs:
+            with open(os.path.join(log_dir, src)) as f:
+                lines = f.read().splitlines()
+            per = max(1, (len(lines) + n_chunks - 1) // n_chunks)
+            for c in range(n_chunks):
+                chunk = lines[c * per : (c + 1) * per]
+                p = os.path.join(d, f"chunk{c:02d}_{src}.json")
+                with open(p, "w") as out:
+                    for i, line in enumerate(chunk):
+                        out.write(
+                            json.dumps(
+                                {"file": src, "seq": c * per + i, "line": line}
                             )
-                    os.utime(p, (now + c, now + c))
+                            + "\n"
+                        )
+                os.utime(p, (now + c, now + c))
 
-        d = appcache.persistent_stage(
-            f"tail{n_chunks}x{n_files}",
-            [os.path.join(log_dir, s) for s in srcs],
-            build,
-        )
-        _STAGE_CACHE[key] = f"{d}\t" + "\t".join(srcs)
-    parts = _STAGE_CACHE[key].split("\t")
-    return parts[0], parts[1:]
+    d = appcache.persistent_stage(
+        f"tail{n_chunks}x{n_files}",
+        [os.path.join(log_dir, s) for s in srcs],
+        build,
+    )
+    return d, srcs
 
 
 def stream_sessionize_tail_kdc(
@@ -732,28 +723,23 @@ def _staged_event_halves(sf_dir: str) -> str:
     not need a SparkSession; the streaming reader re-derives the schema
     from the staged files (DuckDB rewrites nanos → micros, which
     ``normalize_ts`` dispatches on anyway)."""
-    key = f"{sf_dir}::halves"
-    if key not in _STAGE_CACHE:
-        import os
+    import os
 
-        src = os.path.abspath(f"{sf_dir}/events.parquet")
+    src = os.path.abspath(f"{sf_dir}/events.parquet")
 
-        def build(d: str) -> None:
-            import duckdb
+    def build(d: str) -> None:
+        import duckdb
 
-            con = duckdb.connect()
-            for name, pred in (("half_a", "= 0"), ("half_b", "<> 0")):
-                con.execute(
-                    f"COPY (SELECT * FROM read_parquet('{src}') "
-                    f"WHERE event_id % 2 {pred}) "
-                    f"TO '{d}/{name}.parquet' (FORMAT PARQUET)"
-                )
-            con.close()
+        con = duckdb.connect()
+        for name, pred in (("half_a", "= 0"), ("half_b", "<> 0")):
+            con.execute(
+                f"COPY (SELECT * FROM read_parquet('{src}') "
+                f"WHERE event_id % 2 {pred}) "
+                f"TO '{d}/{name}.parquet' (FORMAT PARQUET)"
+            )
+        con.close()
 
-        _STAGE_CACHE[key] = appcache.persistent_stage(
-            "evhalves", [src], build
-        )
-    return _STAGE_CACHE[key]
+    return appcache.persistent_stage("evhalves", [src], build)
 
 
 def foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -909,7 +895,23 @@ def state_store_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UNION_SPLIT_CACHE: dict[str, str] = {}
+def _stage_union_split(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the events as two parquet dirs, ``even`` and ``odd`` by
+    user-id parity."""
+
+    def build(d: str) -> None:
+        from kdcloganalyzer_spark.sources.tables import load_table
+
+        ev_batch = load_table(spark, sf_dir, "events")
+        for name, half in (
+            ("even", ev_batch.filter(F.col("user_id") % 2 == 0)),
+            ("odd", ev_batch.filter(F.col("user_id") % 2 == 1)),
+        ):
+            half.write.mode("overwrite").parquet(f"{d}/{name}")
+
+    return appcache.persistent_stage(
+        "union2", [f"{sf_dir}/events.parquet"], build
+    )
 
 
 def union_two_sources_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -930,22 +932,7 @@ def union_two_sources_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale (one empty source never blocks AvailableNow)."""
     import os
 
-    if sf_dir not in _UNION_SPLIT_CACHE:
-
-        def build(d: str) -> None:
-            from kdcloganalyzer_spark.sources.tables import load_table
-
-            ev_batch = load_table(spark, sf_dir, "events")
-            for name, half in (
-                ("even", ev_batch.filter(F.col("user_id") % 2 == 0)),
-                ("odd", ev_batch.filter(F.col("user_id") % 2 == 1)),
-            ):
-                half.write.mode("overwrite").parquet(f"{d}/{name}")
-
-        _UNION_SPLIT_CACHE[sf_dir] = appcache.persistent_stage(
-            "union2", [f"{sf_dir}/events.parquet"], build
-        )
-    d = _UNION_SPLIT_CACHE[sf_dir]
+    d = _stage_union_split(spark, sf_dir)
     schema = spark.read.parquet(f"{d}/even").schema
 
     def side(name: str) -> DataFrame:
@@ -980,16 +967,9 @@ def binaryfile_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest costs directory listings, not data bytes. The
     schema-spelled-out requirement is a readStream quirk pinned here:
     binaryFile streams do NOT infer."""
-    from kdcloganalyzer_spark.plans.relational import (
-        binfiles_path_for_sf,
-        scan_binaryfile_source,
-    )
+    from kdcloganalyzer_spark.plans.relational import stage_binfiles
 
-    base = binfiles_path_for_sf(sf_dir)
-    import os
-
-    if not os.path.isdir(base):
-        scan_binaryfile_source(spark, sf_dir)  # stage once
+    base = stage_binfiles(spark, sf_dir)
     sdf = (
         spark.readStream.format("binaryFile")
         .schema(
@@ -1123,7 +1103,47 @@ def windowed_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TIMEOUT_SPLIT_CACHE: dict[str, str] = {}
+def _stage_timeout_feed(spark: SparkSession, sf_dir: str) -> str:
+    """Stage (user_id, ts) of the events as ``00_events.parquet`` plus a
+    one-row ``01_advance.parquet``: a sentinel user at 2024-03-01 whose
+    id is max(user_id) + 10^7."""
+    import glob
+    import shutil
+
+    def build(half_dir: str) -> None:
+        from kdcloganalyzer_spark.sources.tables import load_table
+
+        ev_batch = load_table(spark, sf_dir, "events").select(
+            "user_id", "ts"
+        )
+        # 1-row control scalar: the sentinel id must be provably absent
+        # from the table (max + offset), never a magic literal.
+        max_uid = ev_batch.agg(F.max("user_id")).collect()[0][0] or 0
+        # JVM-side 1-row build: createDataFrame over a Python list
+        # parallelizes to defaultParallelism slices and spawns one
+        # Python worker per slice (~5.5 s measured for this one row
+        # at local[32]); range(1) stays entirely in the JVM.
+        advance = spark.range(1).select(
+            F.lit(int(max_uid) + 10_000_000)
+            .cast("bigint")
+            .alias("user_id"),
+            F.lit("2024-03-01").cast("timestamp").alias("ts"),
+        )
+        for name, part in (
+            ("00_events.parquet", ev_batch),
+            ("01_advance.parquet", advance),
+        ):
+            tmp = f"{half_dir}/_tmp"
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            shutil.move(
+                glob.glob(f"{tmp}/part-*.parquet")[0],
+                f"{half_dir}/{name}",
+            )
+        shutil.rmtree(f"{half_dir}/_tmp", ignore_errors=True)
+
+    return appcache.persistent_stage(
+        "timeout", [f"{sf_dir}/events.parquet"], build
+    )
 
 
 def session_timeout_closures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1156,52 +1176,11 @@ def session_timeout_closures(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is O(active users); the timeout sweep is the state
     store's own expiry scan, not a data scan — the construction that
     keeps an unbounded keyspace's state finite at 100 TB."""
-    import glob
     import os
-    import shutil
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kdcloganalyzer_spark import appcache
-
-    if sf_dir not in _TIMEOUT_SPLIT_CACHE:
-
-        def build(half_dir: str) -> None:
-            from kdcloganalyzer_spark.sources.tables import load_table
-
-            ev_batch = load_table(spark, sf_dir, "events").select(
-                "user_id", "ts"
-            )
-            # 1-row control scalar: the sentinel id must be provably
-            # absent from the table (max + offset), never a magic
-            # literal.
-            max_uid = ev_batch.agg(F.max("user_id")).collect()[0][0] or 0
-            # JVM-side 1-row build: createDataFrame over a Python list
-            # parallelizes to defaultParallelism slices and spawns one
-            # Python worker per slice (~5.5 s measured for this one row
-            # at local[32]); range(1) stays entirely in the JVM.
-            advance = spark.range(1).select(
-                F.lit(int(max_uid) + 10_000_000)
-                .cast("bigint")
-                .alias("user_id"),
-                F.lit("2024-03-01").cast("timestamp").alias("ts"),
-            )
-            for name, part in (
-                ("00_events.parquet", ev_batch),
-                ("01_advance.parquet", advance),
-            ):
-                tmp = f"{half_dir}/_tmp"
-                part.coalesce(1).write.mode("overwrite").parquet(tmp)
-                shutil.move(
-                    glob.glob(f"{tmp}/part-*.parquet")[0],
-                    f"{half_dir}/{name}",
-                )
-            shutil.rmtree(f"{half_dir}/_tmp", ignore_errors=True)
-
-        _TIMEOUT_SPLIT_CACHE[sf_dir] = appcache.persistent_stage(
-            "timeout", [f"{sf_dir}/events.parquet"], build
-        )
-    half_dir = _TIMEOUT_SPLIT_CACHE[sf_dir]
+    half_dir = _stage_timeout_feed(spark, sf_dir)
 
     stage = appcache.tempdir(prefix="session_timeout_", fast=True)
     data_dir = f"{stage}/data"
