@@ -240,8 +240,9 @@ def stage(path: str, build: Callable[[str], None]) -> str:
 
 
 def persistent_stage(tag: str, srcs: list[str], build) -> str:
-    """``stage`` at a /tmp path that embeds a CONTENT fingerprint of
-    ``srcs`` (path, mtime_ns, size).
+    """``stage`` at a path under ``tempfile.gettempdir()`` (so a
+    redirected ``tempfile.tempdir`` moves it) that embeds a CONTENT
+    fingerprint of ``srcs`` (path, mtime_ns, size).
 
     The streaming queries simulate a producer by splitting/replaying the
     driver's parquet into a monitored feed directory. That feed is a
@@ -261,7 +262,10 @@ def persistent_stage(tag: str, srcs: list[str], build) -> str:
     sig = hashlib.md5(
         json.dumps(sig_parts, sort_keys=True).encode()
     ).hexdigest()[:12]
-    return stage(f"/tmp/kdcspark_stage_{tag}_{sig}", build)
+    return stage(
+        os.path.join(tempfile.gettempdir(), f"kdcspark_stage_{tag}_{sig}"),
+        build,
+    )
 
 
 def tempdir(prefix: str, fast: bool = False) -> str:

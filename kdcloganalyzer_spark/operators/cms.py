@@ -1,6 +1,6 @@
 """Count-min sketch primitives shared by the batch query
 (plans/analytics.py:agg_count_min_sketch) and its streaming twin
-(streaming/stream_queries.py:cms_stream_cells).
+(plans/streaming_queries.py:stream_count_min_sketch).
 
 The sketch is d×w counters; hashes are md5-derived and engine-neutral so
 DuckDB can replay the whole construction (unlike the opaque-binary

@@ -1,8 +1,8 @@
 """Round-4 training-data-pipeline extensions: cross-document duplicated
 substring coverage (the exact-substring-dedup signal), RAG-style
 overlapping document chunking, int8 embedding quantization, character
-entropy, and the streaming keyed-upsert sink registered in
-streaming_queries.py.
+entropy; the streaming keyed-upsert sink is registered in
+streaming_queries.py (stream_foreach_batch_upsert).
 
 Like plans/curation.py these extend the reference's declared surface
 (README.md:4-13 stops at log analytics) with operations a 100 TB

@@ -2652,7 +2652,7 @@ def fn_map_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # File-level data skipping (min/max manifest, the lakehouse pattern)
 # ---------------------------------------------------------------------------
-def manifest_dir_for_sf(sf_dir: str) -> str:
+def manifest_path_for_sf(sf_dir: str) -> str:
     """Deterministic staged path for the range-clustered orders copy +
     its min/max file manifest."""
     return f"/tmp/orders_manifest_v1_{sf_label(sf_dir, '0.001')}"
@@ -2680,7 +2680,7 @@ def stage_manifest(spark: SparkSession, sf_dir: str) -> str:
             F.count("*").alias("n_rows"),
         ).coalesce(1).write.mode("overwrite").parquet(f"{d}/manifest")
 
-    return appcache.stage(manifest_dir_for_sf(sf_dir), build)
+    return appcache.stage(manifest_path_for_sf(sf_dir), build)
 
 
 def manifest_pruned_files(
@@ -3901,7 +3901,7 @@ def sql_cached_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def fixed_width_dir_for_sf(sf_dir: str) -> str:
+def fixed_width_path_for_sf(sf_dir: str) -> str:
     return f"/tmp/orders_fixedwidth_v1_{sf_label(sf_dir, '0.001')}"
 
 
@@ -3919,7 +3919,7 @@ def stage_fixed_width(spark: SparkSession, sf_dir: str) -> str:
             ).alias("value")
         ).coalesce(2).write.mode("overwrite").text(d)
 
-    return appcache.stage(fixed_width_dir_for_sf(sf_dir), build)
+    return appcache.stage(fixed_width_path_for_sf(sf_dir), build)
 
 
 @query(

@@ -3149,7 +3149,7 @@ def analytics_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _multisep_dir_for_sf(sf_dir: str) -> str:
+def _multisep_path_for_sf(sf_dir: str) -> str:
     """Staged '||' export path, keyed on the SOURCE parquet's content
     token (mtime_ns + size), not just the sf basename — a regenerated
     documents fixture (or a different tree sharing the sf tag) can
@@ -3185,7 +3185,7 @@ def stage_multisep(spark: SparkSession, sf_dir: str) -> str:
             ).alias("value")
         ).coalesce(2).write.mode("overwrite").text(d)
 
-    return appcache.stage(_multisep_dir_for_sf(sf_dir), build)
+    return appcache.stage(_multisep_path_for_sf(sf_dir), build)
 
 
 @query(

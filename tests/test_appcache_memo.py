@@ -141,7 +141,6 @@ EVICTION_GAP = {
     "kdcloganalyzer_spark.plans.curation._novelty_grams",
     "kdcloganalyzer_spark.plans.relational._daypart_events",
     "kdcloganalyzer_spark.plans.relational._zorder_docs",
-    "kdcloganalyzer_spark.streaming.stream_queries._state_checkpoint",
 }
 #: Memos of metadata or session state, never of data or results.
 NOT_DATA = {

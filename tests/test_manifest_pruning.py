@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans import registry
 from kdcloganalyzer_spark.plans.relational import (
-    manifest_dir_for_sf,
+    manifest_path_for_sf,
     manifest_pruned_files,
 )
 
@@ -26,7 +26,7 @@ def test_manifest_prunes_files(spark, sf_dir):
 
 
 def test_pruned_result_equals_full_scan(spark, sf_dir):
-    base = manifest_dir_for_sf(sf_dir)
+    base = manifest_path_for_sf(sf_dir)
     files, _ = manifest_pruned_files(
         spark, sf_dir, lo=None, hi="1996-01-01"
     )

@@ -28,11 +28,11 @@ def test_cached_table_reads_memory(spark, sf_dir):
 
 def test_fixed_width_roundtrip_lossless(spark, sf_dir):
     from kdcloganalyzer_spark.plans.relational import (
-        fixed_width_dir_for_sf,
+        fixed_width_path_for_sf,
     )
 
     registry.QUERIES["scan_fixed_width"](spark, sf_dir).collect()
-    raw = spark.read.text(fixed_width_dir_for_sf(sf_dir))
+    raw = spark.read.text(fixed_width_path_for_sf(sf_dir))
     rec = raw.select(
         F.substring("value", 1, 12).cast("bigint").alias("k"),
         F.substring("value", 14, 14).cast("double").alias("p"),

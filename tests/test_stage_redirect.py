@@ -5,15 +5,18 @@ input into its work dir by rebinding each module attribute whose name
 ends in ``_path_for_sf``. That holds only while the helpers keep their
 names and modules, and while every publisher looks its helper up when it
 runs: a publisher that captured the helper at import would stage into
-the real /tmp, and the ``query_mix`` oracle check would read that."""
+the real /tmp, and the ``query_mix`` oracle check would read that.
+``appcache.persistent_stage`` (the stream feeds) is rooted at the
+tempfile root instead, which redirect_engine sets too."""
 
 from __future__ import annotations
 
+import os
 import sys
+import tempfile
 
+from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.plans import registry
-
-SF_DIR = "/data/sf0.01"
 
 PATH_HELPERS = {
     "kdcloganalyzer_spark.plans.kdc_queries.records_path_for_sf":
@@ -28,6 +31,12 @@ PATH_HELPERS = {
         "/tmp/binfiles_v1_0.01",
     "kdcloganalyzer_spark.plans.relational.nested_path_for_sf":
         "/tmp/nested_events_v1_0.01",
+    "kdcloganalyzer_spark.plans.relational.manifest_path_for_sf":
+        "/tmp/orders_manifest_v1_0.01",
+    "kdcloganalyzer_spark.plans.relational.fixed_width_path_for_sf":
+        "/tmp/orders_fixedwidth_v1_0.01",
+    "kdcloganalyzer_spark.plans.round12_ops._multisep_path_for_sf":
+        "/tmp/kdcspark_multisep_sf0.01_123456789_3",
     "kdcloganalyzer_spark.plans.round9_ops.hive_part_path_for_sf":
         "/tmp/hive_part_orders_v1_0.01",
     "kdcloganalyzer_spark.plans.round9_ops.corrupt_scan_path_for_sf":
@@ -39,10 +48,16 @@ PATH_HELPERS = {
 }
 
 
-def test_path_helpers_keep_name_module_and_value():
+def test_path_helpers_keep_name_module_and_value(tmp_path):
     """The set redirect_engine finds (same selection rule), and what
-    each returns for an sf0.01 dir."""
+    each returns for an sf0.01 dir (whose documents file, which the
+    multisep path fingerprints, has a fixed size and mtime)."""
     registry.load_all()
+    sf_dir = tmp_path / "sf0.01"
+    sf_dir.mkdir()
+    docs = sf_dir / "documents.parquet"
+    docs.write_bytes(b"doc")
+    os.utime(docs, ns=(1_700_000_000_123_456_789,) * 2)
     found = {}
     for name, mod in list(sys.modules.items()):
         if not name.startswith("kdcloganalyzer_spark") or mod is None:
@@ -53,7 +68,7 @@ def test_path_helpers_keep_name_module_and_value():
                 and callable(val)
                 and getattr(val, "__module__", "") == name
             ):
-                found[f"{name}.{attr}"] = val(SF_DIR)
+                found[f"{name}.{attr}"] = val(str(sf_dir))
     assert found == PATH_HELPERS
 
 
@@ -75,3 +90,18 @@ def test_publishers_stage_where_the_rebound_helper_points(
     assert (binfiles / "_SUCCESS").exists()
     staged = sorted(p.name for p in binfiles.glob("doc_*.txt"))
     assert staged and sorted(r["fname"] for r in rows) == staged
+
+
+def test_persistent_stage_publishes_under_the_tempdir(tmp_path, monkeypatch):
+    """A content-fingerprinted stream feed is rooted at the tempfile
+    root, which redirect_engine points at its work dir."""
+    src = tmp_path / "events.parquet"
+    src.write_bytes(b"rows")
+    root = tmp_path / "tmp"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+
+    out = appcache.persistent_stage("probe", [str(src)], lambda d: None)
+    assert os.path.dirname(out) == str(root)
+    assert os.path.basename(out).startswith("kdcspark_stage_probe_")
+    assert os.path.exists(os.path.join(out, "_SUCCESS"))

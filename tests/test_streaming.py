@@ -1,5 +1,6 @@
 """Structured Streaming semantics tests (SURVEY.md §5.2 item 4 adjacent):
-batch-equivalence of the streaming sessionizer and watermark late-drop.
+batch-equivalence of the streaming sessionizer and watermark late-drop,
+and the bounded-stream runner's cleanup contract.
 
 The window-aggregation queries (tumbling/sliding/session) are covered by
 the parametrized DuckDB oracle suite; here we pin the two rows-only
@@ -8,10 +9,21 @@ streaming behaviors.
 
 from __future__ import annotations
 
+import os
+import tokenize
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
+from kdcloganalyzer_spark import appcache
+from kdcloganalyzer_spark.plans import registry
+from kdcloganalyzer_spark.plans import streaming_queries as SQ
 from kdcloganalyzer_spark.sources.kdc_synth import synth_dir_for_sf
-from kdcloganalyzer_spark.streaming import stream_queries as SQ
+
+PKG = Path(SQ.__file__).resolve().parents[1]
+SHUFFLE = "spark.sql.shuffle.partitions"
+NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
 def test_stream_sessionize_equals_batch(spark, sf_dir):
@@ -31,14 +43,13 @@ def test_stream_sessionize_equals_batch(spark, sf_dir):
     assert batch.exceptAll(stream).count() == 0
 
 
-def test_stateful_counts_carry_state_across_batches(spark, sf_dir):
+def test_stateful_counts_carry_state_across_batches(spark, sf_dir, tmp_path):
     """applyInPandasWithState must ACCUMULATE per-key state across
     micro-batches of one run: stream the events split into two files with
     maxFilesPerTrigger=1, then the LAST update-mode emission per user must
     equal the whole-table batch aggregate (not the second file's alone)."""
     import glob
     import shutil
-    import tempfile
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -46,10 +57,8 @@ def test_stateful_counts_carry_state_across_batches(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     mid = ev.selectExpr("percentile_approx(ts, 0.5, 10000) AS m").collect()[0]["m"]
-    stage = tempfile.mkdtemp(prefix="stateful_2batch_")
+    stage = str(tmp_path)
     data_dir = f"{stage}/data"
-    import os
-
     os.makedirs(data_dir)
     for name, part in (
         ("00_first.parquet", ev.filter(F.col("ts") < F.lit(mid))),
@@ -102,7 +111,7 @@ def test_watermark_drops_late_batch(spark, sf_dir):
     ]["m"]
     n_recent = ev.filter(F.col("ts") >= F.lit(split_ts)).count()
 
-    out = SQ.watermark_late_drop(spark, sf_dir)
+    out = SQ.stream_watermark_late_drop(spark, sf_dir)
     rows = out.collect()
     assert rows, "append mode emitted no finalized windows"
     assert sum(r["n"] for r in rows) <= n_recent
@@ -144,7 +153,7 @@ def test_rate_limit_keeper_multichunk_groups(spark, sf_dir, tmp_path):
             r["user_id"]: (
                 r["n_events"], r["n_throttled"], r["max_deficit_micro"]
             )
-            for r in SQ.stream_rate_limit_keeper(spark, mini).collect()
+            for r in SQ.stream_rate_limit_alert(spark, mini).collect()
         }
     finally:
         spark.conf.set(key, prev)
@@ -180,9 +189,6 @@ def test_rate_limit_keeper_multichunk_groups(spark, sf_dir, tmp_path):
 def test_stream_run_leaves_no_sink_view(spark, sf_dir):
     """A bounded run's memory-sink view is dropped once its result frame
     exists: re-runs must not pin every past run's rows in the catalog."""
-    from kdcloganalyzer_spark import appcache
-    from kdcloganalyzer_spark.plans import registry
-
     registry.load_all()
     appcache.evict_for("stream_window_tumbling")
     res = registry.QUERIES["stream_window_tumbling"](spark, sf_dir)
@@ -203,3 +209,89 @@ def test_events_stream_pins_no_nanos_conf(spark, sf_dir):
         assert spark.conf.get(key) == "false"
     finally:
         spark.conf.set(key, before)
+
+
+def _tempdirs_made(monkeypatch) -> list[str]:
+    """Record every dir ``appcache.tempdir`` makes from here on (the one
+    way package code makes scratch dirs, tmpfs or the tempdir)."""
+    made = []
+    tempdir = appcache.tempdir
+
+    def recording(prefix, fast=False):
+        made.append(tempdir(prefix, fast=fast))
+        return made[-1]
+
+    monkeypatch.setattr(appcache, "tempdir", recording)
+    return made
+
+
+@pytest.mark.parametrize(
+    "qid",
+    # a memory sink, a foreachBatch collector, a two-run restart whose
+    # result reads its parquet sink
+    ["stream_window_tumbling", "stream_sessionize", "stream_watermark_late_drop"],
+)
+def test_stream_run_leaves_no_scratch(spark, sf_dir, qid, monkeypatch):
+    """Once a stream id returns, no checkpoint or scratch dir of its run
+    is left in tmpfs or the tempdir (its staged inputs, built by a first
+    run, are kept by design)."""
+    registry.load_all()
+    run = registry.QUERIES[qid]
+    run(spark, sf_dir)
+    appcache.evict_for(qid)
+    made = _tempdirs_made(monkeypatch)
+    assert run(spark, sf_dir).count() > 0
+    assert made
+    assert [d for d in made if os.path.exists(d)] == []
+
+
+def test_runner_restores_confs_and_drops_its_checkpoint(
+    spark, sf_dir, monkeypatch
+):
+    """The runner scopes the shuffle width and the no-data batch to the
+    run and restores both, and drops its checkpoint, also when a
+    foreachBatch function raises."""
+    before_confs = (spark.conf.get(SHUFFLE), spark.conf.get(NO_DATA))
+    ev = SQ.read_events_stream(spark, sf_dir)
+    made = _tempdirs_made(monkeypatch)
+    n = ev.groupBy("event_type").count()
+    assert SQ._run_to_memory(n, "complete", n_shuffle=7).count() > 0
+    assert (spark.conf.get(SHUFFLE), spark.conf.get(NO_DATA)) == before_confs
+
+    seen = []
+
+    def boom(batch):
+        seen.append((spark.conf.get(SHUFFLE), spark.conf.get(NO_DATA)))
+        raise RuntimeError("batch failed")
+
+    with pytest.raises(Exception, match="batch failed"):
+        SQ._collect_batches(ev, boom, n_shuffle=7, no_data=False)
+    assert seen == [("7", "false")]
+    assert (spark.conf.get(SHUFFLE), spark.conf.get(NO_DATA)) == before_confs
+    assert len(made) == 2
+    assert [d for d in made if os.path.exists(d)] == []
+
+
+def test_every_bounded_run_goes_through_the_runner():
+    """No code in the package outside ``_run_bounded`` starts a bounded
+    stream or waits for one (docstrings and comments may name them),
+    and the old operator layer is gone."""
+    import inspect
+
+    assert not (PKG / "streaming").exists()
+    lines, start = inspect.getsourcelines(SQ._run_bounded)
+    runner = {
+        (Path(SQ.__file__).resolve(), n)
+        for n in range(start, start + len(lines))
+    }
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        with open(path, "rb") as f:
+            for tok in tokenize.tokenize(f.readline):
+                if (
+                    tok.type == tokenize.NAME
+                    and tok.string in ("availableNow", "awaitTermination")
+                    and (path, tok.start[0]) not in runner
+                ):
+                    hits.append(f"{path.relative_to(PKG)}:{tok.start[0]}")
+    assert hits == []

@@ -12,9 +12,9 @@ import os
 
 from kdcloganalyzer_spark.operators.sessionize import sessionize
 from kdcloganalyzer_spark.plans import registry
+from kdcloganalyzer_spark.plans import streaming_queries as SQ
 from kdcloganalyzer_spark.sources.kdc_log import read_log_lines
 from kdcloganalyzer_spark.sources.kdc_synth import synth_dir_for_sf
-from kdcloganalyzer_spark.streaming import stream_queries as SQ
 
 registry.load_all()
 
