@@ -1263,19 +1263,6 @@ def stream_count_min_sketch(spark: SparkSession, sf_dir: str):
     yield cms_estimate_vs_exact(cells, batch)
 
 
-# Checkpoint of the bounded state-inspection run, built once per
-# (session, sf) — the state DATA is input-determined, so rebuilding it
-# per invocation would only re-pay the availableNow run; the amortized
-# contract matches the ANN/edge caches.
-@appcache.memo(readers=("stream_state_reader",))
-def _state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
-    ckpt = f"{appcache.tempdir(prefix='state_inspect_')}/ckpt"
-    ev = read_events_stream(spark, sf_dir).select("event_type")
-    agg = ev.groupBy("event_type").agg(F.count("*").alias("n"))
-    _run_bounded(agg, lambda w: w.format("noop"), mode="complete", ckpt=ckpt)
-    return ckpt
-
-
 @_stream_query(
     "stream_state_reader",
     oracle="""
@@ -1300,13 +1287,18 @@ def stream_state_reader(spark: SparkSession, sf_dir: str):
 
     Scale: the state source reads one store per shuffle partition in
     parallel with no driver materialization; state size here is
-    |event_type| rows per partition. The checkpoint is built once per
-    (session, sf) and re-read thereafter."""
-    st = spark.read.format("statestore").load(_state_checkpoint(spark, sf_dir))
-    yield st.select(
-        F.col("key.event_type").alias("event_type"),
-        F.col("value.count").alias("n"),
-    )
+    |event_type| rows per partition. The checkpoint lives in a scratch
+    dir removed once the result is checkpointed."""
+    with _scratch("state_inspect_") as d:
+        ckpt = f"{d}/ckpt"
+        ev = read_events_stream(spark, sf_dir).select("event_type")
+        agg = ev.groupBy("event_type").agg(F.count("*").alias("n"))
+        _run_bounded(agg, lambda w: w.format("noop"), mode="complete", ckpt=ckpt)
+        st = spark.read.format("statestore").load(ckpt)
+        yield st.select(
+            F.col("key.event_type").alias("event_type"),
+            F.col("value.count").alias("n"),
+        )
 
 
 def _stage_union_split(spark: SparkSession, sf_dir: str) -> str:

@@ -14,6 +14,16 @@ archive, or on a miss asks that JVM to dump one at exit. The archive
 lives in ``${XDG_CACHE_HOME:-~/.cache}/kdcloganalyzer_spark/cds/<key>/``,
 keyed on the JDK, pyspark and the Spark jars. Delete that directory, or
 pass ``-Xshare:off`` in ``spark.driver.extraJavaOptions``, for a cold JVM.
+
+Those JVMs are also short-lived (one CLI run, test session or bench run),
+and most of their CPU went to JIT compiles of driver code (Catalyst rules,
+the scheduler, py4j, serialization) that each run calls only a few hundred
+times. So a launch from ``get_spark`` also raises HotSpot's tier-4 (C2)
+thresholds (``JIT_OPTIONS``): lukewarm driver code stays in C1, per-row
+loops still reach C2. They go before the caller's
+``spark.driver.extraJavaOptions``, so a caller's own ``-XX:Tier4...`` wins;
+they reach only the driver JVM (in ``local[N]`` also the executor).
+``jvm_counters`` reads the JVM's compile and GC time.
 """
 
 from __future__ import annotations
@@ -48,6 +58,26 @@ DEFAULT_CPUS = "32"
 #: ``SparkSession.builder`` session (how ``__spark_entry__`` is called) keeps
 #: Spark's 100.
 CODEGEN_CACHE_ENTRIES = 8192
+#: HotSpot's four tier-4 (C2) thresholds, 4x their JDK 17 defaults (5000,
+#: 600, 15000, 40000); the tier-3 (C1) thresholds and the compiler-thread
+#: count are the JDK's. Measured on 4 vCPU with perfbench: C1/C2 compiling
+#: was 0.5-0.75 s of each 0.78-0.98 s query_mix op and 2.4-3.0 s of each
+#: 3.6-4.3 s ingest op, ~80% of it C2 compiling driver code that each op
+#: runs a few hundred times. With these (medians of 6 seeds, then of 10
+#: pairs): query_mix ``cpu_s_per_op`` 0.885 -> 0.653 s and 0.882 -> 0.670 s,
+#: ingest 4.031 -> 3.571 s and 3.853 -> 3.496 s; ``setup_s`` flat to +4%.
+#: The price is wall time: lukewarm driver code runs longer as profiled
+#: tier-3 code (query_mix op p50 +8%). At 100k records an ingest op went
+#: 11.3 -> 9.6 s CPU and 4.2 -> 3.7 s wall. C1 only
+#: (``-XX:TieredStopAtLevel=1``) raised that op to 17.4 s CPU; 8x raised
+#: query_mix ``setup_s``. Only a JVM that ``get_spark`` launches gets them.
+#: Spark adds ``-XX:+IgnoreUnrecognizedVMOptions``, so a misspelt flag here
+#: is dropped without a word (``tests/test_session_cds.py`` reads each one
+#: back).
+JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400 "
+    "-XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000"
+)
 
 #: how the last JVM launched by ``get_spark`` used the CDS archive:
 #: ``{"cds": "mapped" | "promoted" | "dumping" | "skipped", "detail": ...}``
@@ -59,11 +89,13 @@ def builder_conf(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
     java_options: str = "",
+    engine_options: str = "",
 ) -> dict[str, str]:
     """The session conf ``get_spark`` builds with. ``SPARK_GRAFT_CPUS`` is
     read here, once per call, for both the task slots and the shuffle
-    partitions. ``java_options`` is appended to the caller's
-    ``spark.driver.extraJavaOptions``, never put in its place."""
+    partitions. The caller's ``spark.driver.extraJavaOptions`` is kept,
+    with ``engine_options`` before it (HotSpot keeps a flag's last
+    occurrence, so the caller's win) and ``java_options`` after it."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
     conf = {
         "spark.master": master or f"local[{cpus}]",
@@ -83,7 +115,8 @@ def builder_conf(
         **(extra_conf or {}),
     }
     opts = " ".join(
-        o for o in (conf.get("spark.driver.extraJavaOptions", ""), java_options) if o
+        o for o in (engine_options, conf.get("spark.driver.extraJavaOptions", ""), java_options)
+        if o
     )
     if opts:
         conf["spark.driver.extraJavaOptions"] = opts
@@ -103,7 +136,8 @@ def get_spark(
     launch = None
     if SparkContext._gateway is None:  # this call starts the JVM
         launch = _CdsLaunch.plan(conf)
-        conf = builder_conf(master, shuffle_partitions, extra_conf, launch.options)
+        conf = builder_conf(master, shuffle_partitions, extra_conf,
+                            java_options=launch.options, engine_options=JIT_OPTIONS)
     builder = SparkSession.builder.appName(app_name)
     for k, v in conf.items():
         builder = builder.config(k, v)
@@ -140,6 +174,19 @@ def codegen_compiles(spark: SparkSession) -> int:
     nothing, so the difference across a warm re-run is its cache misses."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def jvm_counters(spark: SparkSession) -> dict[str, int]:
+    """The driver JVM's ``jit_ms`` (JIT compile time,
+    ``CompilationMXBean.getTotalCompilationTime``) and ``gc_ms`` (collection
+    time summed over the GC MXBeans) so far; differences across a run are
+    its compile and GC cost. Both count threads that have exited (C2
+    compiler threads come and go), which ``/proc`` task times do not."""
+    mgmt = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return {
+        "jit_ms": int(mgmt.getCompilationMXBean().getTotalCompilationTime()),
+        "gc_ms": sum(int(gc.getCollectionTime()) for gc in mgmt.getGarbageCollectorMXBeans()),
+    }
 
 
 # -- AppCDS -----------------------------------------------------------------

@@ -4,7 +4,9 @@ Each JVM case starts ``get_spark`` in a child process whose
 ``XDG_CACHE_HOME`` is a temp dir, so the archive under test is never the
 user's. The child stops its JVM and waits for it, so a dump is complete
 (or was never made) when the child returns. Five JVMs in all, two of
-which dump an archive at exit (~10 s each on 4 cores).
+which dump an archive at exit (~10 s each on 4 cores). Each child also
+reads back the JVM's tier-4 JIT thresholds (``session.JIT_OPTIONS``),
+whatever the launch did with CDS.
 """
 
 from __future__ import annotations
@@ -24,13 +26,20 @@ from kdcloganalyzer_spark import session
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHILD = r"""
-import json, sys
+import json, os, re, sys
 from pyspark import SparkContext
 from kdcloganalyzer_spark import session
 
-spark = session.get_spark(app_name="cds_test")
+extra = json.loads(os.environ.get("KDC_TEST_EXTRA_CONF", "{}"))
+spark = session.get_spark(app_name="cds_test", extra_conf=extra)
 spark.sparkContext.setLogLevel("ERROR")
 jvm = spark.sparkContext._jvm
+# what the JVM runs with: Spark adds -XX:+IgnoreUnrecognizedVMOptions, so
+# a misspelt flag would be dropped without a word
+hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+tier4 = {n: int(hotspot.getVMOption(n).getValue())
+         for n in re.findall(r"-XX:(\w+)=", session.JIT_OPTIONS)}
 pid = int(jvm.java.lang.ProcessHandle.current().pid())
 with open(f"/proc/{pid}/maps") as f:
     maps = sorted({line.split()[-1] for line in f if ".jsa" in line})
@@ -40,6 +49,7 @@ print(json.dumps({
     "maps": maps,
     "jvm_args": [a for a in args if "share" in a.lower() or "Archive" in a],
     "classpath": jvm.System.getProperty("java.class.path"),
+    "tier4": tier4,
     "marker": spark.conf.get("spark.kdc.test.marker", None),
     "sum": spark.range(1000).selectExpr("sum(id) AS s").collect()[0].s,
 }))
@@ -50,6 +60,15 @@ gw.shutdown()
 proc.stdin.close()
 proc.wait(timeout=120)
 """
+
+
+#: the four tier-4 thresholds ``get_spark`` launches its JVM with
+TIER4 = {
+    "Tier4InvocationThreshold": 20000,
+    "Tier4MinInvocationThreshold": 2400,
+    "Tier4CompileThreshold": 60000,
+    "Tier4BackEdgeThreshold": 160000,
+}
 
 
 def _env(cache: str, **extra: str) -> dict[str, str]:
@@ -116,6 +135,7 @@ def test_miss_dumps_to_tmp_and_prunes_stale_key(miss_then_hit):
     r = miss_then_hit
     assert r["first"]["launch"]["cds"] == "dumping"
     assert r["first"]["sum"] == 499500
+    assert r["first"]["tier4"] == TIER4
     assert not any(r["dir"] in m for m in r["first"]["maps"])
     assert any(a.startswith("-XX:ArchiveClassesAtExit=") for a in r["first"]["jvm_args"])
     assert "app.jsa" not in r["left"]
@@ -130,6 +150,7 @@ def test_next_start_promotes_and_maps_archive(miss_then_hit):
     assert r["second"]["launch"] == {"cds": "promoted", "detail": archive}
     assert archive in r["second"]["maps"]
     assert r["second"]["sum"] == 499500
+    assert r["second"]["tier4"] == TIER4
     assert not [f for f in r["after"] if f.endswith((".jsa.tmp", ".json"))], r["after"]
     assert len(r["stdout"][1].splitlines()) == 1, r["stdout"][1]
 
@@ -150,7 +171,10 @@ def test_truncated_dump_of_dead_writer_is_deleted(miss_then_hit, scratch):
     with open(tag + ".json", "w") as f:
         json.dump({"pids": [_dead_pid()], "java": java,
                    "classpath": r["second"]["classpath"]}, f)
-    out, _, _ = _start(cache)
+    # a caller's own tier-4 threshold comes after the engine's, so it wins
+    caller = {"spark.driver.extraJavaOptions": "-XX:Tier4InvocationThreshold=5000"}
+    out, _, _ = _start(cache, KDC_TEST_EXTRA_CONF=json.dumps(caller))
+    assert out["tier4"] == {**TIER4, "Tier4InvocationThreshold": 5000}
     assert not os.path.exists(tag + ".jsa.tmp")
     assert not glob.glob(os.path.join(cache, "hs_err*")), "the probe's crash left a report"
     assert not any(".jsa.tmp" in m or d in m for m in out["maps"]), out["maps"]
@@ -166,6 +190,7 @@ def test_user_conf_dir_gets_no_cds_flags(tmp_path):
     assert out["launch"]["cds"] == "skipped"
     assert "spark-defaults.conf" in out["launch"]["detail"]
     assert out["jvm_args"] == []
+    assert out["tier4"] == TIER4
     assert out["marker"] == "kept"
     assert not os.path.exists(tmp_path / "kdcloganalyzer_spark")
 
@@ -181,6 +206,7 @@ def test_rejected_archive_keeps_stdout_clean(miss_then_hit, scratch):
     out, stdout, stderr = _start(cache)
     assert out["launch"]["cds"] == "mapped"
     assert out["sum"] == 499500
+    assert out["tier4"] == TIER4
     assert not any(d in m for m in out["maps"])
     assert len(stdout.splitlines()) == 1, stdout
     assert "Unable to use shared archive" in stderr
@@ -202,6 +228,14 @@ def test_caller_java_options_survive(monkeypatch, tmp_path):
     extra = {"spark.driver.extraJavaOptions": "-Dkdc.test=1"}
     conf = session.builder_conf(extra_conf=extra, java_options="-Xshare:auto")
     assert conf["spark.driver.extraJavaOptions"] == "-Dkdc.test=1 -Xshare:auto"
+    # engine options, then the caller's (HotSpot keeps a flag's last
+    # occurrence), then CDS
+    conf = session.builder_conf(extra_conf=extra, java_options="-Xshare:auto",
+                                engine_options=session.JIT_OPTIONS)
+    assert conf["spark.driver.extraJavaOptions"] == (
+        f"{session.JIT_OPTIONS} -Dkdc.test=1 -Xshare:auto")
+    # what get_spark builds with once its JVM runs: no options
+    assert "spark.driver.extraJavaOptions" not in session.builder_conf()
     # a caller that already chooses a CDS mode gets nothing added
     monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))

@@ -245,6 +245,26 @@ def test_stream_run_leaves_no_scratch(spark, sf_dir, qid, monkeypatch):
     assert [d for d in made if os.path.exists(d)] == []
 
 
+def test_state_reader_cold_reruns_leave_no_checkpoint(spark, sf_dir, monkeypatch):
+    """Each cold re-run of the state reader re-runs its bounded count to
+    a checkpoint and reads the state store back from it; the checkpoint
+    dir goes once the result is pinned, so re-runs do not pile up
+    ``state_inspect_*`` dirs, and the state still equals the oracle."""
+    from kdcloganalyzer_spark.oracle import compare, duckdb_con, oracle_sql_for
+
+    registry.load_all()
+    run = registry.QUERIES["stream_state_reader"]
+    made = _tempdirs_made(monkeypatch)
+    con = duckdb_con(sf_dir)
+    for _ in range(3):
+        appcache.evict_for("stream_state_reader")
+        ok, msg = compare(run(spark, sf_dir), con, oracle_sql_for("stream_state_reader", sf_dir))
+        assert ok, msg
+    inspect = [d for d in made if os.path.basename(d).startswith("state_inspect_")]
+    assert len(inspect) == 3, made
+    assert [d for d in inspect if os.path.exists(d)] == []
+
+
 def test_runner_restores_confs_and_drops_its_checkpoint(
     spark, sf_dir, monkeypatch
 ):

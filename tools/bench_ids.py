@@ -8,6 +8,17 @@ the full 405-id suite. Prints one JSON line per id.
 runs 2-3 flags generated code that changes from run to run (a literal
 that differs per build) or a codegen cache too small for the ids run.
 
+``jit_ms`` and ``gc_ms`` are each run's driver-JVM JIT compile time
+(``CompilationMXBean.getTotalCompilationTime``: C1 and C2 compiler
+threads, including those that exited during the run) and GC time (summed
+over the GC MXBeans), from ``session.jvm_counters``. In ``local[N]`` the
+driver JVM is also the executor, so both cover the whole engine. A first
+run's ``jit_ms`` is mostly the JIT warming up the id's code paths; warm
+runs show what still gets hot enough to compile (``get_spark`` raises
+the C2 thresholds, ``session.JIT_OPTIONS``). Compare JIT cost between two
+trees here, not from ``/proc`` thread times, which lose the compiler
+threads that exit.
+
 ``plan_chars`` is the length of the last run's executed physical plan
 text. Planning and rendering that plan costs CPU on every run, so
 a memo that drags its build plan into its readers shows up here as a
@@ -43,7 +54,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kdcloganalyzer_spark.plans import registry  # noqa: E402
-from kdcloganalyzer_spark.session import codegen_compiles, get_spark, last_launch  # noqa: E402
+from kdcloganalyzer_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+    jvm_counters,
+    last_launch,
+)
 
 
 def main() -> None:
@@ -67,20 +83,24 @@ def main() -> None:
     for qid in ids:
         fn = registry.QUERIES[qid]
         spark.sparkContext.setJobDescription(f"bench_ids: {qid}")
-        runs, compiles = [], []
+        runs, compiles, jvm = [], [], {"jit_ms": [], "gc_ms": []}
         try:
             for _ in range(3):
-                c0 = codegen_compiles(spark)
+                c0, j0 = codegen_compiles(spark), jvm_counters(spark)
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
                 compiles.append(codegen_compiles(spark) - c0)
+                j1 = jvm_counters(spark)
+                for k in jvm:
+                    jvm[k].append(j1[k] - j0[k])
             out[qid] = {
                 "min": round(min(runs), 3),
                 "median": round(sorted(runs)[1], 3),
                 "runs": [round(r, 3) for r in runs],
                 "compiles": compiles,
+                **jvm,
                 "plan_chars": len(
                     df._jdf.queryExecution().executedPlan().toString()
                 ),
