@@ -264,10 +264,12 @@ def _prefix_candidates(
         # a hash repartition identical to the aggregate's existing
         # hashpartitioning(id_a,id_b,N) is elided by the optimizer and
         # the surviving ENSURE_REQUIREMENTS exchange re-coalesces to 1
-        # (verified in plans/r16). Retry-determinism is covered by
-        # sortBeforeRepartition (on 16-byte id pairs, negligible). At
-        # cluster scale the verify joins re-exchange anyway (SMJ on
-        # id_a/id_b), so this never caps a genuinely wide plan.
+        # (PLAN_SHAPES.json pins this exchange as `exchange.roundrobin`
+        # of dedup_ngram_jaccard and its prefix-join siblings).
+        # Retry-determinism is covered by sortBeforeRepartition (on
+        # 16-byte id pairs, negligible). At cluster scale the verify
+        # joins re-exchange anyway (SMJ on id_a/id_b), so this never
+        # caps a genuinely wide plan.
         .repartition(sc.defaultParallelism)
     )
 

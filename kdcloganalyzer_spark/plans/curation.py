@@ -689,7 +689,11 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     max). At 100 TB the stream key becomes (lang, hash-shard) so no
     single partition holds a language's whole corpus; chunk ids then
     offset by a per-shard cumsum exactly like the split-parallel
-    sessionizer's record ids (PLANS.md finding 11)."""
+    sessionizer's record ids: ``sessionize_split_parallel`` windows over
+    (file, byte-range split) and turns per-split terminator counts into
+    global record ids with a cumsum over the #splits rows, so a record
+    straddling a split boundary gets the same (file, rec_id) on both
+    sides and the groupBy merges it with no stitching code."""
     B = 512
     docs = load_table(spark, sf_dir, "documents")
     w = (
@@ -1102,7 +1106,8 @@ def pipeline_corpus_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     one chunk-keyed aggregate — curation THROUGH packing without
     re-scanning the corpus per stage. At 100 TB the stream key becomes
     (lang, hash-shard) with per-shard chunk-id offsets, exactly the
-    split-parallel sessionizer's id discipline (PLANS.md finding 11)."""
+    split-parallel sessionizer's id discipline (see
+    ``pipeline_pack_sequences``)."""
     B = 512
     m = _funnel_flags(spark, sf_dir)
     surv = m.filter(

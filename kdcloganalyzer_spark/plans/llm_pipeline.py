@@ -215,8 +215,11 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # md5-signature table for the VERIFICATION twins
 # (dedup_minhash_pairs_md5 + dedup_minhash_incremental_md5 share the same
 # %3-slice k=16 signature table — one scan serves both): the "write the
-# signature table before the join stage" design PLANS.md finding 7
-# prescribes at real scale. Readers not declared: those ids re-sample
+# signature table before the join stage" design, which real scale needs
+# because a self-join under a broadcast join does not reuse its shared
+# subtree (the two sides plan differently, and ReusedExchange only fires
+# for identical shuffles), so the signature scan ran once per side until
+# the table was checkpointed. Readers not declared: those ids re-sample
 # warm (a known eviction gap; declaring them moves a gated bench metric).
 @appcache.memo(readers=None)
 def _minhash_md5_sig(spark: SparkSession, sf_dir: str) -> DataFrame:

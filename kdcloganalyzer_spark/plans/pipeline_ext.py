@@ -38,8 +38,11 @@ _SPAN_K = 5
 
 # All K-gram occurrences WITH multiplicity (positions), unlike
 # curation._NGRAM_EXPR which is per-doc distinct: coverage is a property
-# of positions. Same arrays_zip-of-shifted-slices construction (PLANS.md
-# finding 6: 3x faster than per-position slice lambdas).
+# of positions. Same arrays_zip-of-shifted-slices construction: n-grams
+# as a per-position ``slice`` inside a transform lambda took 3.9 s at
+# sf0.1, zipping k pre-shifted slices 1.2 s. Higher-order functions never
+# enter whole-stage codegen, so per-element allocation inside them is
+# what costs.
 _SPAN_GRAMS = f"""
 CASE WHEN size(__W__) < {_SPAN_K} THEN array()
      ELSE transform(
@@ -293,7 +296,8 @@ def pipeline_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     each token appears in ≤ 2 chunks) — zero shuffles, pipelined with the
     scan; chunk ids are per-doc so no global coordination. The per-chunk
     ``slice`` cost is fine here (chunks don't overlap much, unlike
-    n-grams — see PLANS.md finding 6 for why n-grams must not do this)."""
+    n-grams, which slice at every position — see ``_SPAN_GRAMS`` for why
+    they zip shifted slices instead)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     n = F.size("ws")
     n_chunks = 1 + F.expr(

@@ -189,6 +189,11 @@ def _scratch(prefix: str):
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
 _NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def _run_bounded(
@@ -224,12 +229,24 @@ def _run_bounded(
     offset/commit-log fsyncs per micro-batch, ~0.1 s per bounded run,
     and durability buys nothing for a bounded run (a real
     deployment points this at object storage). The confs it sets are
-    restored and the scratch removed however the run ends."""
+    restored and the scratch removed however the run ends.
+
+    The checkpoint goes through Hadoop's ``FileSystem`` API
+    (``FileSystemBasedCheckpointFileManager``), not Spark's default
+    ``FileContext`` one. Without libhadoop, Hadoop's local FS forks a
+    ``chmod`` for every file it creates, and ``FileContext.rename`` forks
+    a ``readlink`` too (``FileUtil.readLink``, which fails on a ``file:``
+    URI). Measured with JFR ``jdk.ProcessStart`` on
+    ``stream_window_tumbling`` at sf0.01 (4 vCPU, 15 warm runs per JVM):
+    153 child processes per run before (112 ``readlink``, 40 ``chmod``),
+    41 after, and a median run of 0.81-0.97 → 0.60-0.66 s wall, 1.65-1.68
+    → 1.42-1.54 s JVM CPU. The rename becomes ``File.renameTo``, atomic
+    on a local FS. Spark's checkpoint checksums stay on."""
     spark = sdf.sparkSession
-    confs = {_SHUFFLE: str(n_shuffle)}
+    confs = {_SHUFFLE: str(n_shuffle), _CKPT_MANAGER: _FS_CKPT_MANAGER}
     if not no_data:
         confs[_NO_DATA] = "false"
-    old = {k: spark.conf.get(k) for k in confs}
+    old = {k: spark.conf.get(k, None) for k in confs}
     with _scratch("stream_ckpt_") if ckpt is None else nullcontext(ckpt) as ck:
         try:
             for k, v in confs.items():
@@ -239,7 +256,10 @@ def _run_bounded(
             ).trigger(availableNow=True).start().awaitTermination()
         finally:
             for k, v in old.items():
-                spark.conf.set(k, v)
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def _collect_batches(sdf: DataFrame, per_batch, **run) -> DataFrame:

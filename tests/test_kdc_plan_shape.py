@@ -20,8 +20,9 @@ import os
 import re
 
 import pytest
-from py4j import protocol as proto
+import pyspark.errors.utils
 from pyspark import SparkContext
+from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark import appcache
@@ -34,6 +35,7 @@ from kdcloganalyzer_spark.functions.kdc_parse import (
     header_fields,
 )
 from kdcloganalyzer_spark.operators.sessionize import sessionize
+from kdcloganalyzer_spark.plan_shape import py4j_calls
 from kdcloganalyzer_spark.plans import registry
 from kdcloganalyzer_spark.plans.kdc_queries import kdc_records
 from kdcloganalyzer_spark.sources.kdc_log import read_log_lines_raw
@@ -93,28 +95,35 @@ def test_classification_case_not_duplicated(plan):
     assert plan.count("THEN VERIFY") == 1
 
 
-def test_rebuild_is_cheap_in_py4j_calls(spark, monkeypatch):
+def test_rebuild_is_cheap_in_py4j_calls(spark):
     """A second sessionize build in the same JVM reuses the Column trees:
     it must stay under 400 py4j round trips (the per-feature trees cost
-    ~2,700). Deletes of JVM objects that earlier work dropped go through
-    the same client whenever Python collects them, so they are left out
-    of the count."""
+    ~2,700). Deletes of JVM objects that earlier work dropped are left
+    out of the count (``py4j_calls``)."""
     first = sessionize(read_log_lines_raw(spark, GOLDEN))
-    client = SparkContext._gateway._gateway_client
-    send = client.send_command
-    delete = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
-    calls = []
-
-    def counting(command, *args, **kwargs):
-        if not command.startswith(delete):
-            calls.append(command)
-        return send(command, *args, **kwargs)
-
-    monkeypatch.setattr(client, "send_command", counting)
-    second = sessionize(read_log_lines_raw(spark, GOLDEN))
-    monkeypatch.undo()
+    with py4j_calls() as calls:
+        second = sessionize(read_log_lines_raw(spark, GOLDEN))
     assert second.columns == first.columns
     assert len(calls) <= 400, len(calls)
+
+
+def test_functions_calls_skip_call_site_capture(spark, monkeypatch):
+    """``get_spark`` turns PySpark's DataFrame debugging off, so a
+    ``pyspark.sql.functions`` call does not record its Python call site
+    in the JVM: one ``F.col`` is 3 round trips, not 13. PySpark reads
+    the conf on the first wrapped call, so the cached answer is reset."""
+    monkeypatch.setattr(pyspark.errors.utils, "_enable_debugging_cache", None)
+    F.col("warm_up")
+    with py4j_calls() as calls:
+        F.col("x")
+    assert len(calls) <= 6, calls
+
+
+def test_errors_keep_their_class_without_debugging(spark):
+    """With debugging off an error loses only its Python call site."""
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.lit(1) / F.col("id")).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
 
 
 def test_per_jvm_rebuilds_for_a_new_gateway(monkeypatch):

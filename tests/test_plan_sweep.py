@@ -2,12 +2,17 @@
 only if NO registered batch query silently regresses into a cartesian
 product or row-at-a-time Python evaluation. Complements the targeted
 shape tests in test_plans.py with a blanket net over every query.
+
+The rules read each id's plan-shape row (``plan_shape``), which
+test_plan_shapes.py builds once per session and checks against
+PLAN_SHAPES.json, so no id is built twice for the two checks.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from kdcloganalyzer_spark import plan_shape
 from kdcloganalyzer_spark.plans import registry
 
 registry.load_all()
@@ -39,16 +44,14 @@ BNLJ_OK = {
 # Arrow-batched.
 PYEVAL_OK = {"udtf_surface", "udtf_table_arg"}
 
-BATCH_IDS = sorted(
-    q for q in registry.QUERIES if not q.startswith("stream")
-)
+BATCH_IDS = plan_shape.batch_ids()
 
 STREAM_IDS = sorted(
     q for q in registry.QUERIES if q.startswith("stream")
 )
 
 
-def _assert_flat_schema(qid, df):
+def _assert_flat_schema(qid, schema):
     """Driver contract: the correctness harness canonicalizes EVERY
     registered output (hash-verified AND rows-only) through pandas
     sort_values, which throws ``unhashable type`` on array/map cells
@@ -57,22 +60,21 @@ def _assert_flat_schema(qid, df):
     a nested type."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    for field in df.schema.fields:
+    for field in schema.fields:
         assert not isinstance(
             field.dataType, (ArrayType, MapType, StructType)
         ), f"{qid}: non-atomic column {field.name} ({field.dataType})"
 
 
 @pytest.mark.parametrize("qid", BATCH_IDS)
-def test_no_plan_antipatterns(qid, spark, sf_dir):
-    df = registry.QUERIES[qid](spark, sf_dir)
-    _assert_flat_schema(qid, df)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, qid
+def test_no_plan_antipatterns(qid, plan_rows):
+    row, schema = plan_rows(qid)
+    _assert_flat_schema(qid, schema)
+    assert "join.cartesian" not in row, qid
     if qid not in BNLJ_OK:
-        assert "BroadcastNestedLoopJoin" not in plan, qid
-    if qid not in PYEVAL_OK:
-        assert "BatchEvalPython" not in plan, qid
+        assert "join.bnlj" not in row, qid
+    if qid not in PYEVAL_OK:  # BatchEvalPython and BatchEvalPythonUDTF
+        assert not [k for k in row if k.startswith("python.BatchEvalPython")], qid
 
 
 @pytest.mark.parametrize("qid", STREAM_IDS)
@@ -80,4 +82,4 @@ def test_stream_flat_schema(qid, spark, sf_dir):
     # Streaming ids materialize on call (foreachBatch -> batch read),
     # so this executes the stream once; the schema check is the point.
     df = registry.QUERIES[qid](spark, sf_dir)
-    _assert_flat_schema(qid, df)
+    _assert_flat_schema(qid, df.schema)

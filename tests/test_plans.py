@@ -95,7 +95,10 @@ def test_q3_headline_shape(spark, sf_dir):
 def test_fanout_operators_spread_before_pair_work(spark, sf_dir):
     """Single-file inputs must be repartitioned (RoundRobin exchange)
     before signature folds / pair joins — otherwise the whole operator
-    runs on one core (PLANS.md finding 1).
+    runs on one core. A table held in one parquet file (one row group)
+    scans as ONE partition, and no ``maxPartitionBytes`` can split a row
+    group; ``dedup.spread()`` cut dedup_{ngram,simhash,embedding_cosine}
+    from ~4.3 s to ~1 s each at sf0.1.
 
     `dedup_ngram_jaccard` is covered by the spread() unit test below:
     its prefix-join frontend localCheckpoints the spread input, which

@@ -24,6 +24,7 @@ from kdcloganalyzer_spark.sources.kdc_synth import synth_dir_for_sf
 PKG = Path(SQ.__file__).resolve().parents[1]
 SHUFFLE = "spark.sql.shuffle.partitions"
 NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 
 
 def test_stream_sessionize_equals_batch(spark, sf_dir):
@@ -268,27 +269,40 @@ def test_state_reader_cold_reruns_leave_no_checkpoint(spark, sf_dir, monkeypatch
 def test_runner_restores_confs_and_drops_its_checkpoint(
     spark, sf_dir, monkeypatch
 ):
-    """The runner scopes the shuffle width and the no-data batch to the
-    run and restores both, and drops its checkpoint, also when a
-    foreachBatch function raises."""
-    before_confs = (spark.conf.get(SHUFFLE), spark.conf.get(NO_DATA))
+    """The runner scopes the shuffle width, the no-data batch and the
+    checkpoint file manager to the run and restores all three, and drops
+    its checkpoint, also when a foreachBatch function raises."""
+
+    def confs(s):
+        return (s.conf.get(SHUFFLE), s.conf.get(NO_DATA), s.conf.get(CKPT_MANAGER, None))
+
+    before_confs = confs(spark)
     ev = SQ.read_events_stream(spark, sf_dir)
     made = _tempdirs_made(monkeypatch)
     n = ev.groupBy("event_type").count()
     assert SQ._run_to_memory(n, "complete", n_shuffle=7).count() > 0
-    assert (spark.conf.get(SHUFFLE), spark.conf.get(NO_DATA)) == before_confs
+    assert confs(spark) == before_confs
 
     seen = []
 
+    def spy(batch):
+        seen.append(confs(batch.sparkSession))
+        return batch
+
+    assert SQ._collect_batches(ev, spy, n_shuffle=7).count() > 0
+    assert set(seen) == {("7", "true", SQ._FS_CKPT_MANAGER)}
+    assert confs(spark) == before_confs
+
     def boom(batch):
-        seen.append((spark.conf.get(SHUFFLE), spark.conf.get(NO_DATA)))
+        seen.append(confs(spark))
         raise RuntimeError("batch failed")
 
+    seen.clear()
     with pytest.raises(Exception, match="batch failed"):
         SQ._collect_batches(ev, boom, n_shuffle=7, no_data=False)
-    assert seen == [("7", "false")]
-    assert (spark.conf.get(SHUFFLE), spark.conf.get(NO_DATA)) == before_confs
-    assert len(made) == 2
+    assert seen == [("7", "false", SQ._FS_CKPT_MANAGER)]
+    assert confs(spark) == before_confs
+    assert len(made) == 3
     assert [d for d in made if os.path.exists(d)] == []
 
 

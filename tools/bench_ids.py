@@ -19,6 +19,15 @@ the C2 thresholds, ``session.JIT_OPTIONS``). Compare JIT cost between two
 trees here, not from ``/proc`` thread times, which lose the compiler
 threads that exit.
 
+``py4j_calls`` and ``build_jobs`` are the construction layer of each
+run: the py4j round trips made while ``fn(spark, sf_dir)`` builds the
+DataFrame (every ``pyspark.sql.functions`` call and Column operator is
+at least one; deletes of dropped JVM objects are not counted), and the
+Spark jobs launched in that call (eager ``localCheckpoint``s, collected
+control scalars) before the timed write starts, not counting the build
+of a staged /tmp input (``appcache.stage``). A cold first run pays the
+jobs of the memos it fills; warm runs show what each build repeats.
+
 ``plan_chars`` is the length of the last run's executed physical plan
 text. Planning and rendering that plan costs CPU on every run, so
 a memo that drags its build plan into its readers shows up here as a
@@ -53,6 +62,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kdcloganalyzer_spark.plan_shape import BuildCounter, py4j_calls  # noqa: E402
 from kdcloganalyzer_spark.plans import registry  # noqa: E402
 from kdcloganalyzer_spark.session import (  # noqa: E402
     codegen_compiles,
@@ -80,15 +90,20 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(100000).selectExpr("sum(id)").collect()
     out = {}
+    counter = BuildCounter(spark)
     for qid in ids:
         fn = registry.QUERIES[qid]
         spark.sparkContext.setJobDescription(f"bench_ids: {qid}")
         runs, compiles, jvm = [], [], {"jit_ms": [], "gc_ms": []}
+        build = {"py4j_calls": [], "build_jobs": []}
         try:
             for _ in range(3):
                 c0, j0 = codegen_compiles(spark), jvm_counters(spark)
                 t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
+                with py4j_calls() as calls, counter.count(qid) as n:
+                    df = fn(spark, sf_dir)
+                build["py4j_calls"].append(len(calls))
+                build["build_jobs"].append(n["jobs"])
                 df.write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
                 compiles.append(codegen_compiles(spark) - c0)
@@ -100,6 +115,7 @@ def main() -> None:
                 "median": round(sorted(runs)[1], 3),
                 "runs": [round(r, 3) for r in runs],
                 "compiles": compiles,
+                **build,
                 **jvm,
                 "plan_chars": len(
                     df._jdf.queryExecution().executedPlan().toString()
