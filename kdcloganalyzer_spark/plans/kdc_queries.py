@@ -13,6 +13,27 @@ The parsed `kdc_records` DataFrame is a lineage-cut checkpoint per
 deployment would materialize the records table before fanning out
 queries. Each report plans over the checkpointed rows, not over the
 sessionizer that built them.
+
+The README report family reads one tagged pass over those records,
+``_report_bundle``, as the reference computes its per-user and
+per-service stats in one pass (``u:``/``s:``-tagged keys,
+kdcmapper.pl:38-52, merged as ``UserTimeRec`` min/min, max/max and
+sum, UserTimeRec.java:120-126, UserTimeCombiner.java:23-31). Each
+record emits one ``(tag, a, b)`` entry per tag whose filter it passes,
+and the bundle holds ``min/max(ts)``, ``min/max(ts_raw)`` and the count
+per entry. Which records count toward which report is decided here only:
+
+- ``u``: valid ∧ success ∧ AUTH; a = client, b = 'referral' or NULL
+  (NULL: the mapper's accept path, UserTimeMapper.java:27-49);
+- ``s``: valid ∧ success ∧ TGS; a = service;
+- ``p``: valid ∧ success ∧ TGS; a = client, b = service;
+- ``e``: ¬success; a = error_class, 'Missing Pre-authentication' if NULL;
+- ``c``: every record; a = its counter reason (UserTimeMapper.java:28-48);
+- ``user`` / ``service`` / ``host``: valid; a = client / service / client_ip.
+
+The partials are mergeable, so the ids that re-key them
+(``agg_tagged_union``, ``users_few_services``) merge with the same
+algebra.
 """
 
 from __future__ import annotations
@@ -152,6 +173,68 @@ def _accepted(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("req_type") == "AUTH")
         & ~F.col("referral")
     )
+
+
+# One aggregate serves the README report family (module docstring). It
+# has the records' readers, so the bench's cold protocol evicts both
+# memos for any KDC id, and it is lineage-cut like the records: each
+# report plans over the bundle's rows.
+@appcache.memo(readers=__name__)
+def _report_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ok = F.col("valid") & F.col("success")
+    auth, tgs = ok & (F.col("req_type") == "AUTH"), ok & (F.col("req_type") == "TGS")
+    error = F.coalesce(F.col("error_class"), F.lit("Missing Pre-authentication"))
+    reason = (
+        F.when(~F.col("valid"), F.lit("Invalid"))
+        .when(~F.col("success"), F.concat(F.lit("Failed:"), error))
+        .when(F.col("req_type") != "AUTH", F.lit("Request Type"))
+        .when(F.col("referral"), F.lit("Referral"))
+        .otherwise(F.lit("Accepted"))
+    )
+    none = F.lit(None).cast("string")
+    entries = (  # tag, filter, a, b (referral is never NULL: sessionize)
+        ("u", auth, F.col("client"), F.when(F.col("referral"), F.lit("referral"))),
+        ("s", tgs, F.col("service"), none),
+        ("p", tgs, F.col("client"), F.col("service")),
+        ("e", ~F.col("success"), error, none),
+        ("c", F.lit(True), reason, none),
+        ("user", F.col("valid"), F.col("client"), none),
+        ("service", F.col("valid"), F.col("service"), none),
+        ("host", F.col("valid"), F.col("client_ip"), none),
+    )
+    tagged = F.array(*[
+        F.when(cond, F.struct(F.lit(t).alias("tag"), a.alias("a"), b.alias("b")))
+        for t, cond, a, b in entries
+    ])
+    r = kdc_records(spark, sf_dir)
+    bundle = (
+        r.select(F.explode(tagged).alias("k"), "ts", "ts_raw")
+        .where(F.col("k").isNotNull())
+        .groupBy("k.tag", "k.a", "k.b")
+        .agg(
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
+            F.min("ts_raw").alias("first_raw"),
+            F.max("ts_raw").alias("last_raw"),
+            F.count("*").alias("n"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    if bundle.rdd.getNumPartitions() == 1:  # as _persisted_records
+        bundle = bundle.coalesce(1)
+    return bundle
+
+
+def _tagged(spark: SparkSession, sf_dir: str, where, key: str, *cols) -> DataFrame:
+    """The bundle rows ``where`` selects, ``a`` named ``key``, then ``cols``."""
+    rows = _report_bundle(spark, sf_dir).where(where)
+    return rows.select(F.col("a").alias(key), *cols)
+
+
+def _accepted_users(spark: SparkSession, sf_dir: str, *cols) -> DataFrame:
+    """Per client over ``_accepted``: the ``u`` rows without a referral."""
+    where = (F.col("tag") == "u") & F.col("b").isNull()
+    return _tagged(spark, sf_dir, where, "client", *cols)
 
 
 # --- Tier 1: the pipeline stages as inspectable queries ---------------------
@@ -358,18 +441,6 @@ def q_project_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _user_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _accepted(spark, sf_dir)
-        .groupBy("client")
-        .agg(
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-            F.count("*").alias("n"),
-        )
-    )
-
-
 _USER_TIME_SQL = f"""
     SELECT client, min(ts) AS first_ts, max(ts) AS last_ts, count(*) AS n
     FROM {_R}
@@ -382,33 +453,23 @@ _USER_TIME_SQL = f"""
 def q_user_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship user_time aggregate (UserTimeReducer.java:23-31,
     README.md:6-7) with intended min/max semantics (quirk B1)."""
-    return _user_time(spark, sf_dir)
+    return _accepted_users(spark, sf_dir, "first_ts", "last_ts", "n")
 
 
 @query("agg_partial_combiner", oracle=_USER_TIME_SQL)
 def q_partial_combiner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map-side partial aggregation (UserTimeCombiner.java:23-31): Spark
-    plans partial HashAggregate → Exchange → final HashAggregate
-    automatically for the same pipeline; returned result is identical."""
-    return _user_time(spark, sf_dir)
+    """Map-side partial aggregation (UserTimeCombiner.java:23-31): the
+    bundle's per-key (min, max, count) partials are the combiner's
+    output, merged once in ``_report_bundle``'s aggregate."""
+    return _accepted_users(spark, sf_dir, "first_ts", "last_ts", "n")
 
 
 @query("agg_sorted_stream", oracle=_USER_TIME_SQL)
 def q_sorted_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sort-based group aggregation (perl kdcreduce.pl:19-40): expressed as
-    sort_within_partitions + the same agg; Spark's sort-agg path produces
-    identical groups (perl output column order — quirk B7 — standardized)."""
-    return (
-        _accepted(spark, sf_dir)
-        .repartition("client")
-        .sortWithinPartitions("client", "ts_raw")
-        .groupBy("client")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
+    """Sort-based group aggregation (perl kdcreduce.pl:19-40): the same
+    groups as the hash path, in the perl reducer's column order
+    (quirk B7: count first)."""
+    return _accepted_users(spark, sf_dir, "n", "first_ts", "last_ts")
 
 
 @query(
@@ -427,31 +488,14 @@ def q_sorted_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tagged_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two keyspaces in one pass, 'u:'/'s:'-tagged (perl kdcmapper.pl:38-52):
-    successful-preauth users ∪ completed-TGS services, off one cached parse."""
-    r = kdc_records(spark, sf_dir)
-    # r15: the two branches are DISJOINT on req_type, so the union of
-    # two filtered passes is one filtered pass with a CASE key — the
-    # records parquet is scanned once instead of once per keyspace.
-    tagged = r.filter(
-        F.col("valid")
-        & F.col("success")
-        & F.col("req_type").isin("AUTH", "TGS")
-    ).select(
-        F.when(
-            F.col("req_type") == "AUTH",
-            F.concat(F.lit("u:"), F.col("client")),
-        )
-        .otherwise(F.concat(F.lit("s:"), F.col("service")))
-        .alias("key"),
-        "ts_raw",
-    )
-    return (
-        tagged.groupBy("key")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("ts_raw").alias("first_ts"),
-            F.max("ts_raw").alias("last_ts"),
-        )
+    successful-preauth users ∪ completed-TGS services: the bundle's ``u``
+    rows (referral or not) and ``s`` rows, merged per key. A NULL client
+    and a NULL service share the NULL key, as in the oracle's union."""
+    b = _report_bundle(spark, sf_dir).where(F.col("tag").isin("u", "s"))
+    return b.groupBy(F.concat("tag", F.lit(":"), "a").alias("key")).agg(
+        F.sum("n").alias("n"),
+        F.min("first_raw").alias("first_ts"),
+        F.max("last_raw").alias("last_ts"),
     )
 
 
@@ -540,22 +584,9 @@ def q_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's side-channel counters (UserTimeMapper.java:27-49),
     expressed as an oracle-checkable companion query (SURVEY.md §5.2):
     reject_reason × count, including the 'Missing Pre-authentication'
-    relabeling of errorless failures (UserTimeMapper.java:35-39)."""
-    r = kdc_records(spark, sf_dir)
-    reason = (
-        F.when(~F.col("valid"), F.lit("Invalid"))
-        .when(
-            ~F.col("success"),
-            F.concat(
-                F.lit("Failed:"),
-                F.coalesce(F.col("error_class"), F.lit("Missing Pre-authentication")),
-            ),
-        )
-        .when(F.col("req_type") != "AUTH", F.lit("Request Type"))
-        .when(F.col("referral"), F.lit("Referral"))
-        .otherwise(F.lit("Accepted"))
-    )
-    return r.groupBy(reason.alias("reason")).agg(F.count("*").alias("n"))
+    relabeling of errorless failures (UserTimeMapper.java:35-39): the
+    bundle's ``c`` rows."""
+    return _tagged(spark, sf_dir, F.col("tag") == "c", "reason", "n")
 
 
 @query(
@@ -576,11 +607,9 @@ def q_sink_tsv(spark: SparkSession, sf_dir: str) -> DataFrame:
     match verifies the full write→parse round trip (timestamps rendered
     as 'YYYY-MM-DD HH:MM:SS' strings by both engines' casts)."""
     out = appcache.tempdir(prefix="user_time_tsv_")
-    ut = _user_time(spark, sf_dir).select(
-        "client",
-        F.col("first_ts").cast("string"),
-        F.col("last_ts").cast("string"),
-        "n",
+    ut = _accepted_users(
+        spark, sf_dir, F.col("first_ts").cast("string"),
+        F.col("last_ts").cast("string"), "n",
     )
     ut.write.mode("overwrite").option("sep", "\t").csv(out)
     return (
@@ -603,7 +632,7 @@ def q_sink_tsv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_auth_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'number of authentications per user' (README.md:6)."""
-    return _accepted(spark, sf_dir).groupBy("client").agg(F.count("*").alias("n"))
+    return _accepted_users(spark, sf_dir, "n")
 
 
 @query(
@@ -615,12 +644,7 @@ def q_auth_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tgs_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'number of tgs requests for a service' (README.md:8; perl s: path)."""
-    r = kdc_records(spark, sf_dir)
-    return (
-        r.filter(F.col("valid") & F.col("success") & (F.col("req_type") == "TGS"))
-        .groupBy("service")
-        .agg(F.count("*").alias("n"))
-    )
+    return _tagged(spark, sf_dir, F.col("tag") == "s", "service", "n")
 
 
 @query(
@@ -633,16 +657,8 @@ def q_tgs_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_service_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'first and last use of a service' (README.md:9)."""
-    r = kdc_records(spark, sf_dir)
-    return (
-        r.filter(F.col("valid") & F.col("success") & (F.col("req_type") == "TGS"))
-        .groupBy("service")
-        .agg(
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-            F.count("*").alias("n"),
-        )
-    )
+    where = F.col("tag") == "s"
+    return _tagged(spark, sf_dir, where, "service", "first_ts", "last_ts", "n")
 
 
 @query(
@@ -655,16 +671,7 @@ def q_service_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_common_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'most common errors' (README.md:11), deterministic under ties."""
-    r = kdc_records(spark, sf_dir)
-    counts = (
-        r.filter(~F.col("success"))
-        .groupBy(
-            F.coalesce(
-                F.col("error_class"), F.lit("Missing Pre-authentication")
-            ).alias("error_class")
-        )
-        .agg(F.count("*").alias("n"))
-    )
+    counts = _tagged(spark, sf_dir, F.col("tag") == "e", "error_class", "n")
     return counts.orderBy(F.desc("n"), F.asc("error_class"))
 
 
@@ -679,14 +686,16 @@ def q_common_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_users_few_services(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'identify users who only use a small number of services'
     (README.md:12): distinct TGS services per user ≤ 3. At 100 TB use the
-    approx variant (approx_count_distinct) — exact kept here for checking."""
-    r = kdc_records(spark, sf_dir)
-    return (
-        r.filter(F.col("valid") & F.col("success") & (F.col("req_type") == "TGS"))
-        .groupBy("client")
-        .agg(F.countDistinct("service").alias("n_svc"))
-        .filter(F.col("n_svc") <= 3)
-    )
+    approx variant (approx_count_distinct) — exact kept here for checking.
+    The bundle's ``p`` rows are the distinct (client, service) pairs, so
+    the distinct count is a count of them; ``count(b)`` skips a NULL
+    service as ``countDistinct`` does."""
+    return _few_services(spark, sf_dir, F.count("b"))
+
+
+def _few_services(spark: SparkSession, sf_dir: str, n_svc) -> DataFrame:
+    p = _tagged(spark, sf_dir, F.col("tag") == "p", "client", "b")
+    return p.groupBy("client").agg(n_svc.alias("n_svc")).filter(F.col("n_svc") <= 3)
 
 
 @query("users_few_services_approx")
@@ -695,16 +704,10 @@ def q_users_few_services_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``approx_count_distinct`` (HLL++, rsd 0.05) replaces the exact
     distinct — one partial-aggregable pass, no per-user distinct-set
     shuffle expansion. Rows-only (sketch estimates are engine-internal);
-    agreement vs the exact variant is pinned by pytest."""
-    r = kdc_records(spark, sf_dir)
-    return (
-        r.filter(
-            F.col("valid") & F.col("success") & (F.col("req_type") == "TGS")
-        )
-        .groupBy("client")
-        .agg(F.approx_count_distinct("service", 0.05).alias("n_svc"))
-        .filter(F.col("n_svc") <= 3)
-    )
+    agreement vs the exact variant is pinned by pytest. An HLL sketch
+    ignores repeats, so the distinct ``p`` pairs give the estimate the
+    records give."""
+    return _few_services(spark, sf_dir, F.approx_count_distinct("b", 0.05))
 
 
 @query(
@@ -728,34 +731,11 @@ def q_users_few_services_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_top_n_kdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'Top N hosts, users, services' (README.md:10) over the KDC records:
-    one pass, three entity kinds stacked. r15: the three per-kind
-    groupBy branches each re-scanned the records parquet and ran a
-    separate single-partition top-10 sort; a 3-struct explode stacks
-    the kinds BEFORE the partial-agg'd (kind, entity) rollup — one
-    scan, one count shuffle, one kind-partitioned rank window (the
-    explode is a generator over 3 literal structs, not the
-    count-distinct EXPAND the quality_profile_columns lesson warns
-    about — partial aggregation collapses it map-side)."""
-    r = kdc_records(spark, sf_dir).filter(F.col("valid"))
-    stacked = r.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("user").alias("kind"),
-                    F.col("client").alias("entity"),
-                ),
-                F.struct(
-                    F.lit("service").alias("kind"),
-                    F.col("service").alias("entity"),
-                ),
-                F.struct(
-                    F.lit("host").alias("kind"),
-                    F.col("client_ip").alias("entity"),
-                ),
-            )
-        ).alias("ke")
-    ).select("ke.kind", "ke.entity")
-    counts = stacked.groupBy("kind", "entity").agg(F.count("*").alias("n"))
+    the three entity kinds are stacked in the bundle (its ``user``,
+    ``service`` and ``host`` rows, one count per entity), ranked by one
+    kind-partitioned window."""
+    kinds = F.col("tag").isin("user", "service", "host")
+    counts = _tagged(spark, sf_dir, kinds, "entity", F.col("tag").alias("kind"), "n")
     w = Window.partitionBy("kind").orderBy(F.desc("n"), F.asc("entity"))
     return (
         counts.withColumn("rn", F.row_number().over(w))

@@ -690,11 +690,14 @@ def _pivot_index(spark: SparkSession, sf_dir: str):
     return dedup.build_pivot_index(load_table(spark, sf_dir, "embeddings"))
 
 
-# embed_cluster_kmeans_int reads the same quantizer (round11_ops
-# docstring): its bench cold signature was single-sample until it was
-# declared here (r14 run 4).
+# embed_cluster_kmeans_int (round11_ops) and dedup_semantic read the same
+# quantizer: an undeclared reader's cold re-sample reuses the index
+# whenever an IVF id ran first.
 @appcache.memo(
-    readers=("sim_search_ivf", "sim_search_ivfpq", "embed_cluster_kmeans_int")
+    readers=(
+        "sim_search_ivf", "sim_search_ivfpq", "embed_cluster_kmeans_int",
+        "dedup_semantic",
+    )
 )
 def _ivf_index(spark: SparkSession, sf_dir: str):
     """Cached (per session+sf) IVF build: (persisted assignment, centers).

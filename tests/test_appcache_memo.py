@@ -150,6 +150,20 @@ NOT_DATA = {
 }
 
 
+def test_dedup_semantic_evicts_the_ivf_index():
+    """``dedup_semantic`` reads the IVF quantizer, so its cold re-sample
+    must rebuild it."""
+    from kdcloganalyzer_spark.plans import llm_pipeline
+
+    cache = llm_pipeline._ivf_index.cache
+    cache[("app-1", "sf")] = ("index", "centers")
+    try:
+        assert appcache.evict_for("dedup_semantic")
+        assert ("app-1", "sf") not in cache
+    finally:
+        cache.pop(("app-1", "sf"), None)
+
+
 def test_memos_without_readers_are_pinned():
     from kdcloganalyzer_spark.plans import registry
     from kdcloganalyzer_spark.sources import kdc_pyds, tables  # noqa: F401
