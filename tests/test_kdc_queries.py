@@ -1,9 +1,11 @@
 """KDC Tier-1/2 queries: the README report family's tagged bundle
-(``kdc_queries._report_bundle``), record counts and sinks. Each id's
-oracle SQL is checked by tests/test_queries_oracle.py."""
+(``kdc_queries._report_bundle``), record counts and sinks, and the
+report ids cross-checked against DuckDB SQL twins over the materialized
+kdc_records."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +15,70 @@ from kdcloganalyzer_spark.plans import kdc_queries, registry
 from kdcloganalyzer_spark.plans.kdc_queries import kdc_records
 
 registry.load_all()
+
+# SQL twins over a `recs` view that mirrors kdc_records.
+KDC_ORACLES = {
+    "first_last_auth_per_user": """
+        SELECT client, min(ts) AS first_ts, max(ts) AS last_ts, count(*) AS n
+        FROM recs
+        WHERE valid AND success AND req_type = 'AUTH' AND NOT referral
+        GROUP BY client
+    """,
+    "auth_count_per_user": """
+        SELECT client, count(*) AS n FROM recs
+        WHERE valid AND success AND req_type = 'AUTH' AND NOT referral
+        GROUP BY client
+    """,
+    "tgs_count_per_service": """
+        SELECT service, count(*) AS n FROM recs
+        WHERE valid AND success AND req_type = 'TGS'
+        GROUP BY service
+    """,
+    "first_last_use_per_service": """
+        SELECT service, min(ts) AS first_ts, max(ts) AS last_ts, count(*) AS n
+        FROM recs WHERE valid AND success AND req_type = 'TGS'
+        GROUP BY service
+    """,
+    "classify_error_substring": """
+        SELECT error_class, count(*) AS n FROM recs
+        WHERE error_class IS NOT NULL GROUP BY error_class
+    """,
+    "derive_success": """
+        SELECT req_type, success, count(*) AS n FROM recs
+        GROUP BY req_type, success
+    """,
+    "most_common_errors": """
+        SELECT coalesce(error_class, 'Missing Pre-authentication') AS error_class,
+               count(*) AS n
+        FROM recs WHERE NOT success
+        GROUP BY 1 ORDER BY n DESC, error_class
+    """,
+    "users_few_services": """
+        SELECT client, count(DISTINCT service) AS n_svc FROM recs
+        WHERE valid AND success AND req_type = 'TGS'
+        GROUP BY client HAVING count(DISTINCT service) <= 3
+    """,
+    "counters_observe": """
+        SELECT CASE
+            WHEN NOT valid THEN 'Invalid'
+            WHEN NOT success THEN 'Failed:' ||
+                 coalesce(error_class, 'Missing Pre-authentication')
+            WHEN req_type <> 'AUTH' THEN 'Request Type'
+            WHEN referral THEN 'Referral'
+            ELSE 'Accepted' END AS reason,
+            count(*) AS n
+        FROM recs GROUP BY 1
+    """,
+}
+
+
+@pytest.fixture(scope="module")
+def con(spark, sf_dir):
+    recs_pdf = kdc_records(spark, sf_dir).drop("enctypes").toPandas()
+    c = duckdb.connect()
+    c.register("recs", recs_pdf)
+    return c
+
 
 #: the ids that are filters and projections of the bundle
 BUNDLE_IDS = (
@@ -27,6 +93,15 @@ BUNDLE_IDS = (
 def test_record_count_matches_generated(spark, sf_dir):
     # generator emits exactly one terminated record per logical record
     assert kdc_records(spark, sf_dir).count() == 1000  # sf0.001 → max(200, 1e6*0.001)
+
+
+@pytest.mark.parametrize("qid", sorted(KDC_ORACLES))
+def test_kdc_query_vs_duckdb(qid, spark, sf_dir, con):
+    from tests.oracle_compare import compare
+
+    df = registry.QUERIES[qid](spark, sf_dir)
+    ok, msg = compare(df, con, KDC_ORACLES[qid])
+    assert ok, f"{qid}: {msg}"
 
 
 def test_one_bundle_action_serves_every_report(spark, sf_dir):
